@@ -149,7 +149,13 @@ def candidate_pairs(
         sized = tracker.persist(sized)
     left = sized.select("bucket_key", F.col("url").alias("url_a"))
     right = sized.select("bucket_key", F.col("url").alias("url_b"))
-    pairs = left.join(right, "bucket_key").where(F.col("url_a") < F.col("url_b"))
+    # The merge hint pins the shape above at every size. Unhinted, a
+    # small table broadcasts, and which side AQE builds from depends on
+    # which of the cache's two scan stages it sees finish first: a plan
+    # (and a generated class) that varies from run to run.
+    pairs = left.join(right.hint("merge"), "bucket_key").where(
+        F.col("url_a") < F.col("url_b")
+    )
     if with_counts:
         return pairs.groupBy("url_a", "url_b").agg(
             F.count(F.lit(1)).alias("n_shared")

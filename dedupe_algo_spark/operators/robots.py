@@ -49,6 +49,19 @@ ROBOTS_RULES_SCHEMA = (
 ROBOTS_MAX_BYTES = 500 * 1024
 
 
+def _truncated(raw: bytes) -> bytes:
+    """``raw`` capped at ``ROBOTS_MAX_BYTES``. A line the cap cuts is
+    dropped whole: its head alone (``Allow: /publ`` out of
+    ``Allow: /public/docs``) would be a broader rule the file never
+    had. It is kept only when a line break follows the cut."""
+    if len(raw) <= ROBOTS_MAX_BYTES:
+        return raw
+    head = raw[:ROBOTS_MAX_BYTES]
+    if raw[ROBOTS_MAX_BYTES] not in b"\r\n":
+        head = head[: max(head.rfind(b"\n"), head.rfind(b"\r")) + 1]
+    return head
+
+
 def parse_robots(
     bodies: DataFrame, host_col: str = "host", body_col: str = "body"
 ) -> DataFrame:
@@ -57,14 +70,14 @@ def parse_robots(
     following Allow/Disallow block; rules before any agent line are
     ignored; comments (#) and unknown directives are skipped; empty
     Disallow emits nothing. Bodies beyond ``ROBOTS_MAX_BYTES`` are
-    truncated at the limit (RFC 9309 §2.5)."""
+    truncated at the limit (RFC 9309 §2.5), minus any line it cuts."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for host, body in zip(pdf[host_col], pdf[body_col]):
                 if isinstance(body, (bytes, bytearray)):
-                    body = bytes(body)[:ROBOTS_MAX_BYTES].decode(
+                    body = _truncated(bytes(body)).decode(
                         "utf-8", errors="replace"
                     )
                 elif isinstance(body, str):
@@ -72,7 +85,7 @@ def parse_robots(
                     # inputs truncate at the same byte boundary
                     raw = body.encode("utf-8", errors="replace")
                     if len(raw) > ROBOTS_MAX_BYTES:
-                        body = raw[:ROBOTS_MAX_BYTES].decode(
+                        body = _truncated(raw).decode(
                             "utf-8", errors="replace"
                         )
                 agents: list[str] = []

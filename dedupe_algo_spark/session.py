@@ -20,6 +20,21 @@ from pyspark.sql import SparkSession
 # size is our analog).
 ARROW_MAX_RECORDS = 10_000
 
+# Generated-class cache (``spark.sql.codegen.cache.maxEntries``, Spark
+# default 100). The cache is keyed by generated source and evicts LRU,
+# so a job that cycles through more classes than it holds misses almost
+# every time. ``dedup_pipeline`` generates ~106 classes on the
+# near_dup_heavy benchmark input and ~160 on memo_refresh: at the
+# default every warm job recompiled 53-78 and 122 of them with Janino,
+# and the JIT re-optimized them again (up to 14 s of JIT time per job).
+# 2,000 entries, >10x the larger working set, measured zero new classes
+# per warm job. A static SQL conf: it only takes effect when the
+# session is built. ``useIdInClassName=false`` keeps the codegen stage
+# id out of the class name: AQE numbers stages in the order it plans
+# them, which can differ between runs of one plan, and the id in the
+# name made those identical classes cache misses.
+CODEGEN_CACHE_ENTRIES = 2_000
+
 
 def get_spark(
     app_name: str = "dedupe_algo_spark",
@@ -79,6 +94,8 @@ def get_spark(
         # at cluster scale smaller shuffles are strictly less network.
         .config("spark.io.compression.codec", "zstd")
         .config("spark.io.compression.zstd.level", "1")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

@@ -536,12 +536,17 @@ def read_blobs(spark, path: str) -> DataFrame:
 
 def _local_path(p: str) -> str:
     """Strip the ``file:`` scheme ``binaryFile``/``warc_cdx_index``
-    carry so task-side ``open()`` works on the same identifiers."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
+    carry so task-side ``open()`` works on the same identifiers:
+    ``file:/x``, ``file:///x`` and ``file://localhost/x`` all map to
+    ``/x``. Any other authority names a remote host and raises."""
+    from urllib.parse import urlsplit
+
+    u = urlsplit(p, allow_fragments=False)
+    if u.scheme != "file":
+        return p
+    if u.netloc not in ("", "localhost"):
+        raise ValueError(f"{p!r}: file URI names a remote host {u.netloc!r}")
+    return u.path + (f"?{u.query}" if u.query else "")
 
 
 def _list_segment_files(path: str) -> list[str]:
@@ -587,27 +592,29 @@ def file_member_geometry(
 
         for pdf in batches:
             for p in pdf["warc_file"]:
-                rows = []
-                if _os.path.getsize(p) > 0:
-                    with open(p, "rb") as fh, mmap.mmap(
-                        fh.fileno(), 0, access=mmap.ACCESS_READ
-                    ) as mm:
-                        if mm[:2] != b"\x1f\x8b":
-                            # a plain (uncompressed) .warc has no gzip
-                            # members — the member walk would yield
-                            # nothing and the file's pages would vanish
-                            # silently; the 'warc' (binaryFile) format
-                            # parses such files via its plain-bytes
-                            # passthrough, so point the caller there
-                            raise ValueError(
-                                f"{p}: not gzip — ranged ingest needs "
-                                "member-gzip segments; use "
-                                "input_format='warc' for plain WARCs"
-                            )
-                        rows = [
-                            (p, off, clen)
-                            for off, clen, _ in _iter_members_chunked(mm)
-                        ]
+                if _os.path.getsize(p) == 0:
+                    # a truncated-to-empty download would otherwise
+                    # vanish from the ingest without a trace
+                    raise ValueError(f"{p}: empty segment file (0 bytes)")
+                with open(p, "rb") as fh, mmap.mmap(
+                    fh.fileno(), 0, access=mmap.ACCESS_READ
+                ) as mm:
+                    if mm[:2] != b"\x1f\x8b":
+                        # a plain (uncompressed) .warc has no gzip
+                        # members — the member walk would yield
+                        # nothing and the file's pages would vanish
+                        # silently; the 'warc' (binaryFile) format
+                        # parses such files via its plain-bytes
+                        # passthrough, so point the caller there
+                        raise ValueError(
+                            f"{p}: not gzip — ranged ingest needs "
+                            "member-gzip segments; use "
+                            "input_format='warc' for plain WARCs"
+                        )
+                    rows = [
+                        (p, off, clen)
+                        for off, clen, _ in _iter_members_chunked(mm)
+                    ]
                 yield pd.DataFrame(
                     rows, columns=["warc_file", "offset", "length"]
                 )

@@ -18,7 +18,14 @@ def _audit_dir(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
+    # 6g, not get_spark's 16g default: the suite's heap otherwise grows
+    # to ~14.5 GB mid-run and a 16 GB box kills the JVM
+    s = get_spark(
+        app_name="tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
     s.stop()
 

@@ -75,17 +75,42 @@ def test_checkpoint_resume_equals_cold_run(spark, pages_1k, tmp_path):
     assert cold_pdf.equals(warm_pdf)
     assert "clusters" in run2.resumed and not run2.computed
 
-    # audit rows exist for every computed stage with non-negative counts
+    # one audit flush per computed stage, each matching a direct
+    # per-partition count of the committed output
     audit = run1.audit.read().toPandas()
-    assert set(run1.computed) <= set(audit["stage"])
-    assert (audit["row_count"] >= 0).all()
+    assert set(audit["stage"]) == set(run1.computed)
+    _assert_audit_shape(audit)
+    assert audit.groupby("stage")["committed_at"].nunique().eq(1).all()
+    for name in run1.computed:
+        got = audit[audit["stage"] == name]
+        assert _lineage(got) == _direct_counts(spark.read.parquet(run1._stage_path(name)))
+
+
+def _lineage(rows) -> list[tuple[int, int]]:
+    return sorted(zip(rows["partition_id"], rows["row_count"]))
+
+
+def _direct_counts(df) -> list[tuple[int, int]]:
+    return sorted(
+        (r["pid"], r["count"])
+        for r in df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    )
+
+
+def _assert_audit_shape(audit) -> None:
+    assert audit["run_id"].nunique() == 1
+    assert (audit["row_count"] >= 0).all() and (audit["elapsed_ms"] >= 0).all()
+    assert audit["block_id"].isna().all() and audit["pair_count"].isna().all()
 
 
 def test_default_run_writes_audit_lineage(spark, pages_1k, tmp_path, monkeypatch):
     """north_rule: lineage is NOT opt-in — a plain dedup_pipeline run
     (no checkpoint dir, no explicit hook) must leave per-stage audit
-    rows."""
-    from dedupe_algo_spark.sources.audit import AuditLog
+    rows: one flush (one run_id, one committed_at), each stage's rows
+    equal to a direct spark_partition_id() count of its output, and
+    driver-known stages as one partition_id -1 row."""
+    from dedupe_algo_spark.sources.audit import AuditLog, audit_stage_hook
+    from dedupe_algo_spark.tracking import PersistTracker
 
     audit_dir = str(tmp_path / "audit")
     monkeypatch.setenv("DEDUPE_AUDIT_DIR", audit_dir)
@@ -93,9 +118,50 @@ def test_default_run_writes_audit_lineage(spark, pages_1k, tmp_path, monkeypatch
     res.clusters.count()
     audit = AuditLog(spark, audit_dir).read().toPandas()
     assert {"page_meta", "near_edges", "components"} <= set(audit["stage"])
-    assert (audit["row_count"] >= 0).all()
-    assert audit["run_id"].nunique() == 1
+    _assert_audit_shape(audit)
+    assert audit["committed_at"].nunique() == 1
     res.unpersist()
+
+    # the default hook's rows, checked against each stage's output
+    tracker = PersistTracker()
+    hook = audit_stage_hook(spark, tracker=tracker, audit=AuditLog(spark, str(tmp_path / "a2")))
+    outputs = {}
+
+    def stage(name, fn):
+        outputs[name] = hook(name, fn)
+        return outputs[name]
+
+    stage.flush = hook.flush
+    res = dedup_pipeline(pages_1k, stage=stage)
+    res.clusters.count()
+    audit = hook.audit.read().toPandas()
+    assert set(audit["stage"]) == set(outputs)
+    for name, df in outputs.items():
+        known = getattr(df, "_dedupe_known_rows", None)
+        want = [(-1, known)] if known is not None else _direct_counts(df)
+        assert _lineage(audit[audit["stage"] == name]) == want, name
+    assert getattr(outputs["components"], "_dedupe_known_rows", None) is not None
+    res.unpersist()
+    tracker.release()
+
+
+def test_warm_runs_reuse_generated_code(spark, pages_1k):
+    """Every warm run in a session reuses the classes the earlier runs
+    generated: none of its plans (audit flush included) may inline a
+    per-run value, and the codegen cache must hold the working set."""
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE
+
+    def run() -> None:
+        res = dedup_pipeline(pages_1k)
+        res.clusters.toPandas()
+        res.unpersist()
+
+    run()
+    run()
+    before = compiled().getCount()
+    run()
+    assert compiled().getCount() - before == 0
 
 
 def test_unpersist_releases_all_pipeline_blocks(spark, pages_1k):

@@ -230,6 +230,41 @@ def test_oversized_body_truncates_at_500kib(spark):
     assert not any(p == "/late/" for _, p in rows)
 
 
+def test_truncation_drops_the_line_it_cuts(spark):
+    """An ``Allow:`` line straddling the 500 KiB cut must not survive as
+    its head (``/publ``), which would out-match ``Disallow: /p`` and
+    allow urls the intact file disallows; a line that ends exactly at
+    the cut is kept. Same for str and binary bodies."""
+    from dedupe_algo_spark.operators.robots import ROBOTS_MAX_BYTES
+
+    head = "User-agent: *\nDisallow: /p\n# "
+    cut = "Allow: /publ"
+    pad = "x" * (ROBOTS_MAX_BYTES - len(head) - 1 - len(cut)) + "\n"
+    straddling = head + pad + cut + "ic/docs\n"
+    at_cut = head + pad + cut + "\nDisallow: /late/\n"
+    assert len((head + pad + cut).encode()) == ROBOTS_MAX_BYTES
+    rules = parse_robots(
+        spark.createDataFrame(
+            [("s.io", straddling), ("e.io", at_cut)], "host string, body string"
+        )
+    ).unionByName(
+        parse_robots(
+            spark.createDataFrame(
+                [("b.io", straddling.encode())], "host string, body binary"
+            )
+        )
+    )
+    got = {(r.host, r.directive, r.path) for r in rules.collect()}
+    assert {(h, "disallow", "/p") for h in ("s.io", "b.io", "e.io")} <= got
+    assert ("e.io", "allow", "/publ") in got
+    assert not any(h != "e.io" and d == "allow" for h, d, _ in got)
+    assert not any(p == "/late/" for _, _, p in got)
+    pages = spark.createDataFrame(
+        [("https://s.io/public/x",), ("https://b.io/public/x",)], "url string"
+    )
+    assert not any(r.allowed for r in robots_verdicts(pages, rules).collect())
+
+
 def test_parse_sitemap_urls(spark):
     body = (
         "User-agent: *\nDisallow: /x/\n"

@@ -631,3 +631,30 @@ def test_ranged_ingest_refuses_silent_drops(spark, tmp_path):
     )
     with pytest.raises(Exception, match="not gzip"):
         file_member_geometry(spark, str(d)).collect()
+
+
+def test_ranged_ingest_refuses_empty_segment(spark, tmp_path):
+    """A zero-byte segment (a download truncated to nothing) raises like
+    a non-gzip one instead of vanishing from the geometry."""
+    import pytest
+
+    from dedupe_algo_spark.sources.warc import file_member_geometry
+
+    d = tmp_path / "seg"
+    d.mkdir()
+    (d / "empty.warc.gz").write_bytes(b"")
+    with pytest.raises(Exception, match="empty segment file"):
+        file_member_geometry(spark, str(d)).collect()
+
+
+def test_local_path_file_uri_forms():
+    import pytest
+
+    from dedupe_algo_spark.sources.warc import _local_path
+
+    for p in ("file:/x", "file:///x", "file://localhost/x", "/x"):
+        assert _local_path(p) == "/x", p
+    assert _local_path("file:/d/a b#1.warc.gz") == "/d/a b#1.warc.gz"
+    assert _local_path("rel/x.warc.gz") == "rel/x.warc.gz"
+    with pytest.raises(ValueError, match="remote host"):
+        _local_path("file://otherhost/x")
