@@ -3,34 +3,24 @@
 Per BASELINE.json input_hint: no per-row Python UDFs anywhere — every
 custom function is either a built-in ``pyspark.sql.functions`` expression
 (JVM side, whole-stage-codegen eligible) or an Arrow-batched pandas UDF.
+Each measure has one implementation: a pandas UDF only where no
+built-in expression computes the same value.
 """
 
 from .urls import canonical_url, registered_domain
-from .hashing import sha256_udf, partial_sha256_udf, length_bucket
+from .hashing import length_bucket
 from .simhash import simhash64_udf, simhash_bands
-from .minhash import minhash_udf, minhash_bands, minhash_jaccard_udf
-from .similarity import (
-    pair_jaccard_udf,
-    pair_levenshtein_sim_udf,
-    pair_jaro_winkler_udf,
-    pair_ngram_jaccard_udf,
-    levenshtein_sim_col,
-)
+from .minhash import minhash_udf, minhash_jaccard_udf
+from .similarity import pair_jaro_winkler_udf, levenshtein_sim_col
 
 __all__ = [
     "canonical_url",
     "registered_domain",
-    "sha256_udf",
-    "partial_sha256_udf",
     "length_bucket",
     "simhash64_udf",
     "simhash_bands",
     "minhash_udf",
-    "minhash_bands",
     "minhash_jaccard_udf",
-    "pair_jaccard_udf",
-    "pair_levenshtein_sim_udf",
     "pair_jaro_winkler_udf",
-    "pair_ngram_jaccard_udf",
     "levenshtein_sim_col",
 ]

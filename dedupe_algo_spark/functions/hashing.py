@@ -4,68 +4,37 @@ Reference: BLAKE3 partial hash of first 16KB + last 16KB (scanner.rs:21-48)
 and full streaming BLAKE3 (scanner.rs:50-68), invoked per-row inside rayon
 parallel maps (lib.rs:83-107,130-152).
 
-Ours: SHA-256. The *full* hash is the built-in ``F.sha2`` (JVM-side,
-whole-stage codegen, zero Python) — strictly faster than any UDF. The
-*partial* (head+tail window) hash is also expressible with built-ins via
-``substr``. The pandas-UDF variants exist because BASELINE.json's
-north_star mandates "SHA-256 content hashes computed in pandas UDF
-batches" — both are provided and produce identical digests; the pipeline
-uses the built-in by default and the UDF path is covered by tests.
+Ours: SHA-256, built-in ``F.sha2`` only (JVM-side, whole-stage codegen,
+zero Python). The *partial* (head+tail window) hash is ``sha2`` over a
+``substring`` window, so the window is counted in CHARACTERS, not UTF-8
+bytes: a 20,000-char text of 2-byte characters hashes whole, where a
+byte-windowed hash would cut it. The memo stores these digests, so the
+character window is part of its format.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 PARTIAL_WINDOW = 16 * 1024  # reference: 16KB head (+16KB tail if >32KB)
 
 
 def sha256_col(text: Column) -> Column:
-    """Full content hash, built-in (preferred hot path)."""
+    """Full content hash over the UTF-8 bytes, built-in."""
     return F.sha2(text.cast("binary"), 256)
 
 
 def partial_sha256_col(text: Column) -> Column:
-    """Head+tail windowed hash, built-in. Mirrors scanner.rs:33-45:
-    first 16KB, plus last 16KB when the content exceeds 32KB; empty
-    content → NULL (scanner.rs:30 returns None for empty files)."""
+    """Head+tail windowed hash, built-in. Mirrors scanner.rs:33-45 with
+    characters in place of bytes: the first 16K characters, plus the
+    last 16K when the content exceeds 32K characters; empty content →
+    NULL (scanner.rs:30 returns None for empty files)."""
     n = F.length(text)
     head = F.substring(text, 1, PARTIAL_WINDOW)
     tail = F.substring(text, -PARTIAL_WINDOW, PARTIAL_WINDOW)
     window = F.when(n > 2 * PARTIAL_WINDOW, F.concat(head, tail)).otherwise(text)
     return F.when(n > 0, F.sha2(window.cast("binary"), 256)).otherwise(F.lit(None))
-
-
-@pandas_udf(StringType())
-def sha256_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched SHA-256 (north_star-mandated pandas-UDF variant).
-    Identical digests to ``sha256_col``."""
-    return texts.map(
-        lambda t: hashlib.sha256(t.encode("utf-8")).hexdigest() if t is not None else None
-    )
-
-
-@pandas_udf(StringType())
-def partial_sha256_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched head+tail windowed SHA-256; None for empty text
-    (scanner.rs:30)."""
-
-    def h(t: str | None) -> str | None:
-        if t is None or len(t) == 0:
-            return None
-        b = t.encode("utf-8")
-        if len(b) > 2 * PARTIAL_WINDOW:
-            b = b[:PARTIAL_WINDOW] + b[-PARTIAL_WINDOW:]
-        return hashlib.sha256(b).hexdigest()
-
-    return texts.map(h)
 
 
 def length_bucket(text: Column) -> Column:

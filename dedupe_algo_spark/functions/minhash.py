@@ -3,8 +3,8 @@
 The scale path for near-duplicate candidate generation: shingle → minhash
 → band → bucket-join (per the task spec's dedup requirements and
 BASELINE.json's "MinHash-Jaccard" scoring). Signature math is pure numpy
-(universal hashing ``a*h+b mod 2^64`` over SipHash token/shingle hashes);
-banding is a cheap reduction over the signature matrix.
+(one-permutation hashing over SipHash token/shingle hashes); banding is
+a cheap reduction over the signature matrix.
 """
 
 from __future__ import annotations
@@ -13,11 +13,10 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 NUM_PERM = 128
 LSH_BANDS = 32  # = lsh_plan(128, tau=0.7)["bands"]; see below
-_SEED = 0x5EED_ABCD
 
 
 def lsh_plan(
@@ -70,25 +69,6 @@ def lsh_plan(
     return {**best, "candidates": cands}
 
 
-def _perm_params(num_perm: int = NUM_PERM) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(_SEED)
-    a = rng.integers(1, 1 << 61, size=num_perm, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
-    b = rng.integers(0, 1 << 61, size=num_perm, dtype=np.uint64)
-    return a, b
-
-
-_A, _B = _perm_params()
-
-
-def _shingles(text: str, k: int = 3) -> list[str]:
-    """k-word shingles (k=3); falls back to unigrams for short texts.
-    Duplicates are fine — min over a multiset equals min over its set."""
-    toks = text.split()
-    if len(toks) < k:
-        return toks if toks else [""]
-    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-
-
 # rolling-combine multipliers for 3-token shingle hashes (odd, uint64 wrap)
 _SH_C1 = np.uint64(0x9E3779B97F4A7C15)
 _SH_C2 = np.uint64(0xC2B2AE3D27D4EB4F)
@@ -104,24 +84,15 @@ def _combine3(th: np.ndarray) -> np.ndarray:
 def _shingle_hashes(text: str, k: int = 3) -> np.ndarray:
     """Per-token SipHash (pandas.util.hash_array — deterministic, fixed
     key) rolled into 3-gram shingle hashes. Short texts fall back to
-    unigram token hashes, mirroring ``_shingles``."""
+    unigram token hashes (a single ``""`` token for an empty text).
+    Duplicate shingles are fine — min over a multiset equals min over
+    its set."""
     toks = text.split()
     if len(toks) < k:
         return pd.util.hash_array(
             np.asarray(toks if toks else [""], dtype=object)
         )
     return _combine3(pd.util.hash_array(np.asarray(toks, dtype=object)))
-
-
-def minhash_signature_kperm(text: str | None, k: int = 3) -> np.ndarray | None:
-    """Classic 128-permutation MinHash — the textbook formulation, kept
-    for reference/tests. O(S×128) memory traffic per doc: measured
-    memory-bandwidth-bound at scale (51s for 178k docs on 32 cores)."""
-    if text is None:
-        return None
-    h = _shingle_hashes(text, k)
-    vals = h[:, None] * _A[None, :] + _B[None, :]  # uint64 wraparound == mod 2^64
-    return vals.min(axis=0).astype(np.int64)  # two's-complement view for Spark long
 
 
 _EMPTY = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -234,23 +205,6 @@ def minhash_band_keys_udf(texts: pd.Series) -> pd.Series:
         for row, i in enumerate(live):
             out[i] = keys[row]
     return pd.Series(out, index=texts.index)
-
-
-@pandas_udf(ArrayType(StringType()))
-def minhash_bands(signatures: pd.Series) -> pd.Series:
-    """Band keys ``'m{band}:{hash-of-rows}'`` — one per LSH band. Explode
-    JVM-side to get bucket rows; equal band key ⇒ candidate pair.
-    (Python variant; the pipeline hot path uses ``minhash_bands_col``.)"""
-    rows = NUM_PERM // LSH_BANDS
-
-    def bands(sig: list[int] | None) -> list[str] | None:
-        if sig is None:
-            return None
-        arr = np.asarray(sig, dtype=np.int64).reshape(LSH_BANDS, rows)
-        keys = pd.util.hash_array(arr.view(np.uint64).sum(axis=1) ^ np.arange(LSH_BANDS, dtype=np.uint64))
-        return [f"m{i}:{int(v):x}" for i, v in enumerate(keys)]
-
-    return signatures.map(bands)
 
 
 def minhash_bands_col(sig):

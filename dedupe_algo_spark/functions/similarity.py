@@ -1,9 +1,12 @@
 """Pairwise similarity scoring over candidate-pair DataFrames.
 
-Batched over Arrow (one pandas call per batch of pairs) per BASELINE.json
-north_star: "batched Jaro-Winkler/Levenshtein + MinHash-Jaccard similarity".
-Levenshtein similarity additionally has a pure built-in variant
-(``F.levenshtein`` is JVM-side) — preferred when texts are short or capped.
+One implementation per measure. Levenshtein and character n-gram
+Jaccard are built-in column expressions (JVM-side, whole-stage
+codegen); Jaro-Winkler and Damerau–Levenshtein have no built-in, so
+they are Arrow-batched pandas UDFs (one pandas call per batch of
+pairs). The plain-Python ``_levenshtein``/``_jaro_winkler``/
+``_damerau_levenshtein`` are the driver-side references the tests and
+``tools/jw_parity.py`` compare against.
 """
 
 from __future__ import annotations
@@ -22,99 +25,13 @@ LEV_CAP = 512  # cap quadratic edit-distance work per pair
 def _null_safe(out: np.ndarray, nulls: np.ndarray) -> pd.Series:
     """Pair-scorer return convention: NULL text scores NULL, never NaN —
     Spark orders NaN ABOVE every number, so a NaN score would PASS
-    ``score >= threshold`` while the JVM scorer paths yield NULL and
-    drop the pair; the switchable paths must agree on NULL input.
+    ``score >= threshold`` where the built-in scorers yield NULL and
+    drop the pair; every scorer must drop a pair with NULL text.
     Nullable Float64 keeps the None through Arrow (plain float64 would
     coerce it back to NaN)."""
     s = pd.Series(out, dtype="Float64")
     if nulls.any():
         s[nulls] = pd.NA
-    return s
-
-
-@pandas_udf(DoubleType())
-def pair_jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    """Exact token-set Jaccard per pair (the confirm-stage score for
-    near-dups; cheap because blocking already pruned the pair count).
-
-    Memory-lean formulation — this stage profiled as allocation-bound,
-    not compute-bound (per-pair Python sets ran 4× slower per pair on a
-    fully loaded 32-core box than on 8 busy cores, pinned to the flat
-    memory-bandwidth ceiling): each *distinct* text in the Arrow batch
-    is tokenized once into a sorted unique uint64 hash array (each url
-    recurs in ~degree pairs), and per-pair intersection runs in C via
-    ``np.intersect1d``. 64-bit token hashing changes the score only on
-    a ~2^-64-per-token hash collision."""
-    cache: dict[str, np.ndarray] = {}
-
-    def tok_hashes(s: str) -> np.ndarray:
-        arr = cache.get(s)
-        if arr is None:
-            toks = s.split()
-            arr = (
-                np.unique(pd.util.hash_array(np.asarray(toks, dtype=object)))
-                if toks
-                else np.empty(0, dtype=np.uint64)
-            )
-            cache[s] = arr
-        return arr
-
-    out = np.empty(len(text_a), dtype=np.float64)
-    nulls = np.zeros(len(text_a), dtype=bool)
-    for i, (a, b) in enumerate(zip(text_a.values, text_b.values)):
-        if a is None or b is None:
-            nulls[i] = True
-            out[i] = 0.0
-            continue
-        ha, hb = tok_hashes(a), tok_hashes(b)
-        inter = np.intersect1d(ha, hb, assume_unique=True).size
-        u = ha.size + hb.size - inter
-        out[i] = (inter / u) if u else 1.0
-    return _null_safe(out, nulls)
-
-
-@pandas_udf(DoubleType())
-def pair_containment_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    """Exact token-set containment |A∩B|/min(|A|,|B|) per pair — the
-    doc-in-doc dial (see operators/scoring.token_containment_score for
-    semantics; this is its pandas twin for the non-jvm_tokens path).
-    Same memory-lean distinct-text cache as pair_jaccard_udf."""
-    cache: dict[str, np.ndarray] = {}
-
-    def tok_hashes(s: str) -> np.ndarray:
-        arr = cache.get(s)
-        if arr is None:
-            toks = s.split()
-            arr = (
-                np.unique(pd.util.hash_array(np.asarray(toks, dtype=object)))
-                if toks
-                else np.empty(0, dtype=np.uint64)
-            )
-            cache[s] = arr
-        return arr
-
-    out = np.empty(len(text_a), dtype=np.float64)
-    nulls = np.zeros(len(text_a), dtype=bool)
-    for i, (a, b) in enumerate(zip(text_a.values, text_b.values)):
-        if a is None or b is None:
-            # NULL, not NaN: Spark orders NaN ABOVE every number, so a
-            # NaN score would PASS `score >= threshold` while the
-            # jvm_tokens path yields NULL and drops the pair — the two
-            # switchable paths must agree on NULL text
-            nulls[i] = True
-            out[i] = 0.0
-            continue
-        ha, hb = tok_hashes(a), tok_hashes(b)
-        mn = min(ha.size, hb.size)
-        if mn == 0:
-            # both-empty → 1.0; one-empty → 0.0 (repo degenerate rule,
-            # matching token_containment_score)
-            out[i] = 1.0 if ha.size == hb.size else 0.0
-            continue
-        out[i] = np.intersect1d(ha, hb, assume_unique=True).size / mn
-    # nullable dtype: plain float64 would silently coerce None to NaN
-    s = pd.Series(out, dtype="Float64")
-    s[nulls] = pd.NA
     return s
 
 
@@ -148,23 +65,6 @@ def _levenshtein(a: str, b: str) -> int:
                 cur[j] = cur[j - 1] + 1
         prev = cur
     return int(prev[-1])
-
-
-@pandas_udf(DoubleType())
-def pair_levenshtein_sim_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    """Batched 1 − lev/maxlen on capped prefixes (UDF variant; the
-    built-in ``levenshtein_sim_col`` is preferred in the hot path)."""
-    out = np.empty(len(text_a), dtype=np.float64)
-    nulls = np.zeros(len(text_a), dtype=bool)
-    for i, (a, b) in enumerate(zip(text_a.values, text_b.values)):
-        if a is None or b is None:
-            nulls[i] = True
-            out[i] = 0.0
-            continue
-        a, b = a[:LEV_CAP], b[:LEV_CAP]
-        mx = max(len(a), len(b))
-        out[i] = 1.0 if mx == 0 else 1.0 - _levenshtein(a, b) / mx
-    return _null_safe(out, nulls)
 
 
 def _damerau_levenshtein(a: str, b: str) -> int:
@@ -309,13 +209,11 @@ def ngram_grams_col(t: Column, n: int = 5) -> Column:
 
 
 def ngram_jaccard_col(a: Column, b: Column, n: int = 5) -> Column:
-    """Character n-gram Jaccard — JVM-side twin of
-    ``pair_ngram_jaccard_udf``, including on nulls (either side null →
-    NULL, like the UDF's NaN; without the explicit gate a null side
-    grams to ``[null]``, which scores null-vs-null as 1.0 and
-    null-vs-text as 0.0 — a phantom confirmed-duplicate). Set sizes
-    are integers, so the double division is bit-identical across
-    Spark / Python / DuckDB."""
+    """Character n-gram Jaccard, JVM-side. Either side null → NULL
+    (without the explicit gate a null side grams to ``[null]``, which
+    scores null-vs-null as 1.0 and null-vs-text as 0.0 — a phantom
+    confirmed-duplicate). Set sizes are integers, so the double
+    division is bit-identical across Spark / Python / DuckDB."""
     ga, gb = ngram_grams_col(a, n), ngram_grams_col(b, n)
     inter = F.size(F.array_intersect(ga, gb)).cast("double")
     union = F.size(F.array_union(ga, gb))
@@ -323,27 +221,6 @@ def ngram_jaccard_col(a: Column, b: Column, n: int = 5) -> Column:
         a.isNull() | b.isNull(), F.lit(None).cast("double")
     ).otherwise(
         # union >= 1 for any non-null input (even '' contributes one
-        # gram); the guard mirrors the UDF's u==0 branch for safety
+        # gram); the guard keeps the division safe
         F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
     )
-
-
-@pandas_udf(DoubleType())
-def pair_ngram_jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-    """Character 5-gram Jaccard per pair (dedup family per task spec)."""
-    N = 5
-
-    def grams(s: str) -> set:
-        return {s[i : i + N] for i in range(max(1, len(s) - N + 1))}
-
-    out = np.empty(len(text_a), dtype=np.float64)
-    nulls = np.zeros(len(text_a), dtype=bool)
-    for i, (a, b) in enumerate(zip(text_a.values, text_b.values)):
-        if a is None or b is None:
-            nulls[i] = True
-            out[i] = 0.0
-            continue
-        ga, gb = grams(a), grams(b)
-        u = len(ga | gb)
-        out[i] = (len(ga & gb) / u) if u else 1.0
-    return _null_safe(out, nulls)

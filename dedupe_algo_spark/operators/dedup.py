@@ -28,9 +28,8 @@ The cascade's pruning semantics survive as grouping structure:
   pass — with the bytes in hand, SHA-256 over the full text costs the
   same scan either way.
 
-Hashes are built-in ``sha2`` (JVM, whole-stage codegen) by default; the
-pandas-UDF twins (north_star mandate) are switchable and
-digest-identical.
+Hashes are built-in ``sha2`` (JVM, whole-stage codegen); no Python
+runs on the exact path.
 """
 
 from __future__ import annotations
@@ -38,20 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    normalized_for_dedup,
-    partial_sha256_col,
-    partial_sha256_udf,
-    sha256_col,
-    sha256_udf,
-)
+from ..functions.hashing import normalized_for_dedup, partial_sha256_col, sha256_col
 from ..functions.minhash import minhash_band_keys_udf, minhash_udf
 
 
 def page_meta(
     pages: DataFrame,
     min_len: int = 10,
-    use_pandas_udf: bool = False,
     with_signature: bool = True,
     with_ts: bool = False,
     signature: str = "bands",
@@ -82,13 +74,11 @@ def page_meta(
     )
     if exact_key not in ("raw", "normalized"):
         raise ValueError(f"unknown exact_key {exact_key!r}")
-    partial = partial_sha256_udf(keyed) if use_pandas_udf else partial_sha256_col(keyed)
-    full = sha256_udf(keyed) if use_pandas_udf else sha256_col(keyed)
     cols = [
         F.col("url"),
         F.length(keyed).cast("long").alias("text_len"),
-        partial.alias("partial_hash"),
-        full.alias("content_sha256"),
+        partial_sha256_col(keyed).alias("partial_hash"),
+        sha256_col(keyed).alias("content_sha256"),
     ]
     if with_ts:
         cols.insert(1, F.col("warc_ts"))
@@ -173,7 +163,6 @@ def assign_exact(meta: DataFrame) -> DataFrame:
 def exact_dup_assignments(
     pages: DataFrame,
     min_len: int = 10,
-    use_pandas_udf: bool = False,
     keep_singletons: bool = False,
 ) -> DataFrame:
     """→ (url, text_len, content_sha256, cluster_size, cluster_id).
@@ -181,9 +170,7 @@ def exact_dup_assignments(
     ``cluster_id`` = min(url) within the (text_len, sha256) group —
     deterministic under any row order.
     """
-    meta = page_meta(
-        pages, min_len=min_len, use_pandas_udf=use_pandas_udf, with_signature=False
-    )
+    meta = page_meta(pages, min_len=min_len, with_signature=False)
     out = assign_exact(meta).select(
         "url",
         "text_len",

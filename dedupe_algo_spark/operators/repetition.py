@@ -21,7 +21,7 @@ bit-for-bit in any engine; callers derive the fractions:
   duplicate-n-gram-character-fraction, n=5; overlaps counted, as in
   the paper's published implementation).
 
-Three physical strategies, proven equivalent by test:
+Two physical strategies, proven equivalent by test:
 
 - ``mode="groupby"`` (default, the many-disk cluster path): one
   explode of slim (id, n, gram) triples for n ∈ {2, 5}, one groupBy on
@@ -38,13 +38,6 @@ Three physical strategies, proven equivalent by test:
   plan by far, and the per-doc work is exact-integer identical (the
   tokenizer is Java ``\\s`` replicated as ``re.ASCII``; string
   tie-breaks agree because UTF-8 byte order is code-point order).
-- ``mode="hof"`` — zero shuffle, zero Python: higher-order functions
-  (transform/filter/aggregate over the token array) compute every
-  signal inside whole-stage codegen. Per-doc cost is
-  O(distinct_grams × grams) — the right plan for SHORT documents
-  (comments, titles; interpreted-lambda quadratic cost explodes on
-  500+-token pages: measured minutes/task at the synthetic corpus's
-  p99 of ~2k tokens).
 """
 
 from __future__ import annotations
@@ -115,14 +108,10 @@ def repetition_signals(
     top_bigram_count, dup_5gram_chars) — see module docstring for the
     signal definitions. ``top_bigram`` is NULL (count 0) for docs with
     fewer than two tokens."""
-    if mode == "hof":
-        return _signals_hof(docs, id_col, text_col)
     if mode == "pandas":
         return _signals_pandas(docs, id_col, text_col)
     if mode != "groupby":
-        raise ValueError(
-            f"mode must be 'groupby', 'pandas' or 'hof', got {mode!r}"
-        )
+        raise ValueError(f"mode must be 'groupby' or 'pandas', got {mode!r}")
 
     stats = _doc_stats(docs, id_col, text_col)
     toks = F.col("_toks")
@@ -185,7 +174,7 @@ def _signals_pandas(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Zero-shuffle Arrow-batched variant: per-doc ``Counter`` over the
     gram stream, O(tokens) per document — see the module docstring for
     when this beats the groupby shuffle. Bit-for-bit parity contract
-    with the other modes (pinned by test_repetition_modes_agree):
+    with the groupby mode (pinned by test_repetition_modes_agree):
 
     - tokenizer: Java ``\\s+`` (ASCII class) ⇒ ``re.compile(r"\\s+",
       re.ASCII)`` — both are exactly ``[ \\t\\n\\x0B\\f\\r]``; Spark
@@ -257,58 +246,6 @@ def _signals_pandas(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)
-
-
-def _signals_hof(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Zero-shuffle variant: every signal inside whole-stage codegen."""
-    toks = F.col("_toks")
-
-    def counted(grams):
-        # struct(cnt, gram) per DISTINCT gram; array_max gives the
-        # same (max count, tie → larger gram) contract as the groupby
-        # path's max(struct).
-        return F.transform(
-            F.array_distinct(grams),
-            lambda g: F.struct(
-                F.size(F.filter(grams, lambda x: x == g))
-                .cast("long")
-                .alias("cnt"),
-                g.alias("gram"),
-            ),
-        )
-
-    # gram arrays materialized per row before counted() consumes them
-    # — counted re-reads its input per distinct gram, so an inlined
-    # gram-construction would re-run O(distinct) times per document
-    staged = _with_toks(docs, id_col, text_col).select(
-        id_col,
-        text_col,
-        "_toks",
-        _grams(toks, 2).alias("_g2"),
-        _grams(toks, 5).alias("_g5"),
-    )
-    c2 = counted(F.col("_g2"))
-    c5 = counted(F.col("_g5"))
-    top2 = F.array_max(c2)
-    dup5 = F.aggregate(
-        c5,
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + F.when(
-            s["cnt"] >= 2, s["cnt"] * F.length(s["gram"]).cast("long")
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return staged.select(
-        F.col(id_col),
-        F.length(F.trim(F.col(text_col))).cast("long").alias("n_chars"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        (F.size(toks) - F.size(F.array_distinct(toks)))
-        .cast("long")
-        .alias("n_dup_tokens"),
-        top2["gram"].alias("top_bigram"),
-        F.coalesce(top2["cnt"], F.lit(0)).cast("long").alias("top_bigram_count"),
-        dup5.alias("dup_5gram_chars"),
-    )
 
 
 # Gopher's published drop thresholds (Rae et al. 2021, table A1) for the

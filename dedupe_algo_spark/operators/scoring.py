@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.minhash import minhash_jaccard_udf
-from ..functions.similarity import pair_jaccard_udf
+from ..functions.similarity import (
+    LEV_CAP,
+    levenshtein_sim_col,
+    ngram_jaccard_col,
+    pair_damerau_sim_udf,
+    pair_jaro_winkler_udf,
+)
 
 DEFAULT_THRESHOLD = 0.80
 DEFAULT_ESTIMATE_GATE = 0.55  # pre-filter margin below the confirm threshold
@@ -184,11 +190,30 @@ def estimate_pairs(pairs: DataFrame, sigs: DataFrame, gate: float) -> DataFrame:
     return est.where(F.col("est_score") >= gate)
 
 
+def _prefix(text):
+    return F.substring(text, 1, LEV_CAP)
+
+
+# Pass-3 scorers that score a pair from its two slice values: scorer →
+# (per-url slice projection of the text, score over the pivoted
+# ``_ta``/``_tb`` sides). The corpus scorers ("tfidf",
+# "weighted_jaccard") need corpus-wide statistics and take their own
+# path in ``confirm_pairs``.
+_PAIR_SCORERS = {
+    "jaccard": (token_hash_array, token_jaccard_score),
+    "containment": (token_hash_array, token_containment_score),
+    "levenshtein": (_prefix, levenshtein_sim_col),
+    "ngram_jaccard": (_prefix, ngram_jaccard_col),
+    "jaro_winkler": (_prefix, pair_jaro_winkler_udf),
+    "damerau": (_prefix, pair_damerau_sim_udf),
+}
+_CORPUS_SCORERS = ("tfidf", "weighted_jaccard")
+
+
 def confirm_pairs(
     candidates: DataFrame,
     pages: DataFrame,
     threshold: float,
-    jvm_tokens: bool = True,
     tracker=None,
     scorer: str = "jaccard",
 ) -> DataFrame:
@@ -199,7 +224,9 @@ def confirm_pairs(
     first three): ``"jaccard"`` (default — exact token-set Jaccard, the
     right scorer for whole web pages), ``"jaro_winkler"`` (batched
     pandas UDF on 512-char prefixes), ``"levenshtein"`` (JVM built-in
-    1−dist/max on 512-char prefixes), or ``"ngram_jaccard"`` (JVM
+    1−dist/max on 512-char prefixes), ``"damerau"`` (batched pandas
+    UDF, transposition-aware edit similarity on the same prefixes), or
+    ``"ngram_jaccard"`` (JVM
     character-5-gram set Jaccard on the same prefixes — order-robust
     like token Jaccard but sub-word-granular, the dial for boilerplate
     with small edits). The prefix scorers exist for fielded-record
@@ -207,8 +234,7 @@ def confirm_pairs(
     shape, so text still never shuffles. ``"containment"`` swaps the
     token-set denominator for min(|A|,|B|) — the doc-in-doc dial
     (syndicated article embedded in a longer page scores 1.0 where its
-    Jaccard sinks); identical plan to "jaccard" on both the jvm_tokens
-    and pandas paths. ``"tfidf"`` scores pairs by
+    Jaccard sinks); identical plan to "jaccard". ``"tfidf"`` scores pairs by
     corpus-IDF-weighted cosine (operators/corpus_stats.py) — the dial
     when candidate pages share heavy boilerplate that unweighted token
     Jaccard over-credits; it adds ONE corpus-wide slim aggregate (the
@@ -218,7 +244,7 @@ def confirm_pairs(
     token COUNTS (Σmin/Σmax via the Σmax = |A|+|B|−Σmin identity — one
     inner join on shared token hashes), the dial when repetition-spam
     pages inflate a set-Jaccard score. Text never shuffles on any
-    path.
+    path. An unknown name raises ``ValueError``.
 
     The text column is read from the source exactly ONCE: a semi-join
     against the candidate url set carves out the text slice (≤2×|pairs|
@@ -239,20 +265,29 @@ def confirm_pairs(
     gates a plan-time decision (the broadcast hint) for the very next
     job, so no earlier action exists to ride.
 
-    ``jvm_tokens`` (default): each slice row is tokenized ONCE into a
-    distinct-token array during the carve-out, and the per-pair Jaccard
-    is ``array_intersect``/``size`` — whole-stage codegen, zero Python
-    in the confirm stage. The pandas-UDF path remains switchable; both
-    produce identical scores up to token-hash collisions (each path
-    hashes tokens — 32-bit Murmur3 here, 64-bit ``pd.util.hash_array``
-    there — so agreement is exact except with probability ≈ n²/2³³ per
-    doc, the JVM side's collision rate)
-    on ANY input: the JVM tokenizer is ``TOKEN_SPLIT_RE`` below, whose
-    character class exactly reproduces Python ``str.split()`` (Unicode
-    White_Space via ``(?U)\\s`` plus the U+001C–001F separators Python's
-    ``isspace`` adds) — web text is full of U+00A0/U+2009 etc., so an
-    ASCII-only ``\\s+`` would flip threshold decisions between the two
-    paths and against the MinHash shingler (Python split).
+    The token scorers tokenize each slice row ONCE into a distinct
+    token-hash array during the carve-out (``token_hash_array``), and
+    the per-pair score is ``array_intersect``/``size`` — whole-stage
+    codegen, zero Python in the confirm stage. Token identity is a
+    32-bit Murmur3 hash (``F.hash`` → native INT), not the string: the
+    pair join's array_intersect then compares ints instead of hashing
+    and equality-checking strings per element — the confirm join stage
+    was the largest post-scan CPU item at 4M pages (~560 cpu-s at N).
+    INT (not the earlier xxhash64 LONG) because the token arrays are
+    the biggest post-scan shuffle payload (the slice's join exchange
+    plus both pivoted arrays through the groupBy exchange); hash
+    entropy is incompressible, so 4-byte ids halve those bytes
+    outright. Jaccard over distinct token hashes equals Jaccard over
+    distinct tokens up to 32-bit collisions (P ≈ n²/2³³ per doc ≈ 4e-7
+    at ~60 tokens/page: a collision merges two tokens and shifts one
+    side's set size by 1 — a ≲2% score nudge on a handful of docs per
+    10⁷, immaterial next to the MinHash tiers feeding this stage and
+    far from the τ=0.8 decision boundary). The tokenizer is
+    ``TOKEN_SPLIT_RE``, whose character class exactly reproduces Python
+    ``str.split()`` (Unicode White_Space via ``(?U)\\s`` plus the
+    U+001C–001F separators Python's ``isspace`` adds) — web text is
+    full of U+00A0/U+2009 etc., so an ASCII-only ``\\s+`` would flip
+    threshold decisions against the MinHash shingler (Python split).
 
     ``tracker`` (a :class:`~dedupe_algo_spark.tracking.PersistTracker`)
     registers the persisted pair list for release once the caller has
@@ -268,102 +303,36 @@ def confirm_pairs(
     the pair out per version as the old double join did; pre-dedup
     un-deduped input before direct calls.
     """
+    if scorer not in _PAIR_SCORERS and scorer not in _CORPUS_SCORERS:
+        raise ValueError(f"unknown scorer {scorer!r}")
     _persist = tracker.persist if tracker is not None else (lambda df: df.persist())
     cand = _persist(candidates.select("url_a", "url_b"))
     n_pairs = cand.count()
-    urls = (
-        cand.select(F.col("url_a").alias("url"))
-        .union(cand.select(F.col("url_b").alias("url")))
-        .distinct()
-    )
-    if 2 * n_pairs <= BROADCAST_URL_LIMIT:
-        urls = F.broadcast(urls)
-    sliced = pages.join(urls, "url", "left_semi")
-    if scorer in ("tfidf", "weighted_jaccard"):
-        from .corpus_stats import tfidf_cosine_pairs, weighted_jaccard_pairs
+    if scorer == "tfidf":
+        from .corpus_stats import tfidf_cosine_pairs
 
-        if scorer == "tfidf":
-            scored = tfidf_cosine_pairs(
-                pages, cand, id_col="url", id_a="url_a", id_b="url_b"
-            ).withColumnRenamed("cosine", "score")
-        else:
-            scored = weighted_jaccard_pairs(
-                pages, cand, id_col="url", id_a="url_a", id_b="url_b"
-            ).withColumnRenamed("wjaccard", "score")
-    elif scorer not in ("jaccard", "containment"):
-        from ..functions.similarity import (
-            LEV_CAP,
-            levenshtein_sim_col,
-            ngram_jaccard_col,
-            pair_damerau_sim_udf,
-            pair_jaro_winkler_udf,
-        )
+        scored = tfidf_cosine_pairs(
+            pages, cand, id_col="url", id_a="url_a", id_b="url_b"
+        ).withColumnRenamed("cosine", "score")
+    elif scorer == "weighted_jaccard":
+        from .corpus_stats import weighted_jaccard_pairs
 
-        slice_ = sliced.select(
-            "url", F.substring("text", 1, LEV_CAP).alias("_t")
-        )
-        if scorer == "jaro_winkler":
-            score = pair_jaro_winkler_udf(F.col("_ta"), F.col("_tb"))
-        elif scorer == "levenshtein":
-            score = levenshtein_sim_col(F.col("_ta"), F.col("_tb"))
-        elif scorer == "damerau":
-            score = pair_damerau_sim_udf(F.col("_ta"), F.col("_tb"))
-        elif scorer == "ngram_jaccard":
-            score = ngram_jaccard_col(F.col("_ta"), F.col("_tb"))
-        else:
-            raise ValueError(f"unknown scorer {scorer!r}")
-        scored = pair_value_join(cand, slice_, "_t").withColumn("score", score)
-    elif jvm_tokens:
-        # Token identity is a 32-bit Murmur3 hash (F.hash → native INT),
-        # not the string: the pair join's array_intersect then compares
-        # ints instead of hashing and equality-checking strings per
-        # element — the confirm join stage was the largest post-scan
-        # CPU item at 4M pages (~560 cpu-s at N). INT (not the earlier
-        # xxhash64 LONG) because the token arrays are the biggest
-        # post-scan shuffle payload (the slice's join exchange plus
-        # both pivoted arrays through the groupBy exchange); hash
-        # entropy is incompressible, so 4-byte ids halve those bytes
-        # outright. Jaccard over distinct token hashes equals Jaccard
-        # over distinct tokens up to 32-bit collisions (P ≈ n²/2³³ per
-        # doc ≈ 4e-7 at ~60 tokens/page: a collision merges two tokens
-        # and shifts one side's set size by 1 — a ≲2% score nudge on a
-        # handful of docs per 10⁷, immaterial next to the MinHash tiers
-        # feeding this stage and far from the τ=0.8 decision boundary).
-        # The slice is referenced ONCE (pair_value_join), so it needs
-        # no persist and no barrier count — the round-4 slice_.count()
-        # existed only to serialize the double join's racing exchange
-        # children, a shape this path no longer has.
-        slice_ = sliced.select(
-            "url", token_hash_array(F.col("text")).alias("_toks")
-        )
-        score = (
-            token_containment_score(F.col("_ta"), F.col("_tb"))
-            if scorer == "containment"
-            else token_jaccard_score(F.col("_ta"), F.col("_tb"))
-        )
-        scored = pair_value_join(cand, slice_, "_toks").withColumn(
-            "score", score
-        )
+        scored = weighted_jaccard_pairs(
+            pages, cand, id_col="url", id_a="url_a", id_b="url_b"
+        ).withColumnRenamed("wjaccard", "score")
     else:
-        from ..functions.similarity import pair_containment_udf
-
-        slice_ = sliced.select("url", F.col("text").alias("_t"))
-        pair_udf = (
-            pair_containment_udf if scorer == "containment" else pair_jaccard_udf
+        urls = (
+            cand.select(F.col("url_a").alias("url"))
+            .union(cand.select(F.col("url_b").alias("url")))
+            .distinct()
         )
-        scored = pair_value_join(cand, slice_, "_t").withColumn(
-            "score", pair_udf(F.col("_ta"), F.col("_tb"))
+        if 2 * n_pairs <= BROADCAST_URL_LIMIT:
+            urls = F.broadcast(urls)
+        project, score = _PAIR_SCORERS[scorer]
+        slice_ = pages.join(urls, "url", "left_semi").select(
+            "url", project(F.col("text")).alias("_v")
+        )
+        scored = pair_value_join(cand, slice_, "_v").withColumn(
+            "score", score(F.col("_ta"), F.col("_tb"))
         )
     return scored.where(F.col("score") >= threshold).select("url_a", "url_b", "score")
-
-
-def score_pairs(
-    pairs: DataFrame,
-    texts: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    tracker=None,
-) -> DataFrame:
-    """Single-tier exact scoring (kept for direct use/tests):
-    → (url_a, url_b, score) with token-Jaccard ≥ threshold. Pass a
-    ``PersistTracker`` to own the intermediates' cache lifetime."""
-    return confirm_pairs(pairs, texts, threshold, tracker=tracker)

@@ -91,7 +91,6 @@ def dedup_pipeline(
     estimate_gate: float = DEFAULT_ESTIMATE_GATE,
     min_band_matches: int = DEFAULT_MIN_BAND_MATCHES,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    use_pandas_udf_hash: bool = False,
     include_near: bool = True,
     exact_confirm: bool = True,
     scorer: str = "jaccard",
@@ -162,7 +161,6 @@ def dedup_pipeline(
                 lambda: page_meta(
                     pages,
                     min_len=min_len,
-                    use_pandas_udf=use_pandas_udf_hash,
                     with_signature=include_near,
                     signature=sig_mode,
                     exact_key=exact_key,

@@ -1547,7 +1547,7 @@ def q_minhash_pair_stats(spark, sf_dir):
     dups + ≤1-edit nears) and 12 in the 0.9 bin; the full pair list is
     the rows-only query, this rollup is its precomputed-truth twin."""
     from .operators.candidates import bucket_table, candidate_pairs
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_pages
 
     from .tracking import PersistTracker
@@ -1556,7 +1556,7 @@ def q_minhash_pair_stats(spark, sf_dir):
     pages = synth_pages(spark, 2_000).select("url", "text")
     pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
     stats = (
-        score_pairs(pairs, pages, tracker=tracker)
+        confirm_pairs(pairs, pages, DEFAULT_THRESHOLD, tracker=tracker)
         .groupBy(F.round("score", 1).alias("score_bin"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -1583,7 +1583,7 @@ def q_minhash_dup_pairs(spark, sf_dir):
     recall+precision+score gate on banding, the hot-bucket path, and
     the confirm tier at once."""
     from .operators.candidates import bucket_table, candidate_pairs
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_pages
 
     from .tracking import PersistTracker
@@ -1591,7 +1591,7 @@ def q_minhash_dup_pairs(spark, sf_dir):
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
     pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
-    out = score_pairs(pairs, pages, tracker=tracker).select(
+    out = confirm_pairs(pairs, pages, DEFAULT_THRESHOLD, tracker=tracker).select(
         "url_a", "url_b", F.round("score", 4).alias("score")
     )
     return _eager(out, tracker.release)
@@ -1991,11 +1991,11 @@ FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 
 def q_levenshtein_sim(spark, sf_dir):
     """Levenshtein similarity (1 − dist/maxlen on 80-char prefixes) over
-    the same consecutive-doc pairs, computed TWICE — the JVM built-in
-    (``levenshtein_sim_col``, the hot-path form) and the batched pandas
-    UDF — so one oracle row pins builtin == UDF == DuckDB. Distances are
-    integers, so the double division is bit-identical across engines."""
-    from .functions.similarity import levenshtein_sim_col, pair_levenshtein_sim_udf
+    the same consecutive-doc pairs, computed by the JVM built-in
+    (``levenshtein_sim_col``, the form ``confirm_pairs`` scores with),
+    so each oracle row pins builtin == DuckDB. Distances are integers,
+    so the double division is bit-identical across engines."""
+    from .functions.similarity import levenshtein_sim_col
 
     t = _docs(spark, sf_dir).select(
         "doc_id", F.substring("text", 1, 80).alias("t")
@@ -2010,7 +2010,6 @@ def q_levenshtein_sim(spark, sf_dir):
         "doc_a",
         "doc_b",
         levenshtein_sim_col(F.col("ta"), F.col("tb"), cap=80).alias("lev_sim"),
-        pair_levenshtein_sim_udf(F.col("ta"), F.col("tb")).alias("lev_sim_udf"),
     )
 
 
@@ -2018,9 +2017,7 @@ SQL_LEVENSHTEIN_SIM = """
 WITH t AS (SELECT doc_id, substr(text, 1, 80) AS t FROM documents)
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        1.0 - levenshtein(a.t, b.t)
-             / CAST(greatest(length(a.t), length(b.t)) AS DOUBLE) AS lev_sim,
-       1.0 - levenshtein(a.t, b.t)
-             / CAST(greatest(length(a.t), length(b.t)) AS DOUBLE) AS lev_sim_udf
+             / CAST(greatest(length(a.t), length(b.t)) AS DOUBLE) AS lev_sim
 FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 """
 
@@ -2065,12 +2062,12 @@ FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 
 def q_ngram_jaccard(spark, sf_dir):
     """Character 5-gram Jaccard over consecutive-doc pairs (the task
-    brief's n-gram-Jaccard dedup family), computed TWICE — the pure
+    brief's n-gram-Jaccard dedup family), computed by the pure
     JVM-codegen column form (``ngram_jaccard_col``: transform/sequence/
-    substring + array_intersect, the hot-path shape) and the batched
-    pandas UDF — so one oracle row pins builtin == UDF == DuckDB.
-    Set sizes are integers; the double division is bit-identical."""
-    from .functions.similarity import ngram_jaccard_col, pair_ngram_jaccard_udf
+    substring + array_intersect, the hot-path shape), so each oracle
+    row pins builtin == DuckDB. Set sizes are integers; the double
+    division is bit-identical."""
+    from .functions.similarity import ngram_jaccard_col
 
     t = _docs(spark, sf_dir).select(
         "doc_id", F.substring("text", 1, 80).alias("t")
@@ -2085,7 +2082,6 @@ def q_ngram_jaccard(spark, sf_dir):
         "doc_a",
         "doc_b",
         ngram_jaccard_col(F.col("ta"), F.col("tb")).alias("ngram_jac"),
-        pair_ngram_jaccard_udf(F.col("ta"), F.col("tb")).alias("ngram_jac_udf"),
     )
 
 
@@ -2099,9 +2095,7 @@ WITH t AS (
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-         / len(list_distinct(list_concat(a.g, b.g))) AS ngram_jac,
-       CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-         / len(list_distinct(list_concat(a.g, b.g))) AS ngram_jac_udf
+         / len(list_distinct(list_concat(a.g, b.g))) AS ngram_jac
 FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 """
 
@@ -4487,15 +4481,16 @@ def q_pr_curve(spark, sf_dir):
     each metric one IEEE division — hash-exact."""
     from .operators.candidates import bucket_table, candidate_pairs
     from .operators.linkage import pr_curve
-    from .operators.scoring import score_pairs
+    from .operators.scoring import DEFAULT_THRESHOLD, confirm_pairs
     from .synth import synth_labels, synth_pages
     from .tracking import PersistTracker
 
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
-    scored = score_pairs(
+    scored = confirm_pairs(
         candidate_pairs(bucket_table(pages, use_cheap_key=False)),
         pages,
+        DEFAULT_THRESHOLD,
         tracker=tracker,
     ).select("url_a", "url_b", F.round("score", 4).alias("score"))
     pg = pages.selectExpr("url", f"{_SPARK_PLANTED_I} AS i")
@@ -4608,31 +4603,23 @@ def q_containment_pairs(spark, sf_dir):
     """Token-set containment |A∩B|/min(|A|,|B|) — the doc-in-doc dial
     (confirm_pairs scorer="containment") — on planted embedded pairs:
     each doc vs its own first-40-token slice (containment exactly 1.0)
-    and vs its successor doc (containment vs jaccard contrast). Scored
-    TWICE — the JVM column form over string token arrays and the
-    batched pandas UDF — so one row pins builtin == UDF == DuckDB."""
-    from .functions.similarity import pair_containment_udf
+    and vs its successor doc. Every row also carries the token-set
+    Jaccard of the same pair (jaccard ≤ containment: the embedded
+    slice's Jaccard sinks to |slice|/|doc|), both scored by the JVM
+    column forms ``confirm_pairs`` uses, over string token arrays."""
     from .operators.scoring import token_containment_score, token_jaccard_score
 
     toks = F.array_distinct(
         F.array_remove(F.split(F.trim(F.col("text")), r"\s+"), "")
     )
     t = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.col("text"),
-        toks.alias("toks"),
-        F.concat_ws(" ", F.slice(toks, 1, 40)).alias("head40"),
+        "doc_id", toks.alias("toks"), F.slice(toks, 1, 40).alias("head")
     )
     embedded = t.select(
         "doc_id",
         F.lit("embedded").alias("kind"),
-        token_containment_score(
-            F.array_distinct(F.array_remove(F.split("head40", r"\s+"), "")),
-            F.col("toks"),
-        ).alias("containment"),
-        pair_containment_udf(F.col("head40"), F.col("text")).alias(
-            "containment_udf"
-        ),
+        token_containment_score(F.col("head"), F.col("toks")).alias("containment"),
+        token_jaccard_score(F.col("head"), F.col("toks")).alias("jaccard"),
     )
     b = t.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.col("toks").alias("toks_b")
@@ -4643,9 +4630,7 @@ def q_containment_pairs(spark, sf_dir):
         token_containment_score(F.col("toks"), F.col("toks_b")).alias(
             "containment"
         ),
-        token_jaccard_score(F.col("toks"), F.col("toks_b")).alias(
-            "containment_udf"
-        ),  # jaccard ≤ containment; twin column reused for the contrast
+        token_jaccard_score(F.col("toks"), F.col("toks_b")).alias("jaccard"),
     )
     return embedded.unionByName(succ)
 
@@ -4664,10 +4649,11 @@ SELECT doc_id, 'embedded' AS kind,
        WHEN least(len(head), len(toks)) = 0 THEN 0.0
        ELSE CAST(len(list_intersect(head, toks)) AS DOUBLE)
             / least(len(head), len(toks)) END AS containment,
-  CASE WHEN len(head) = 0 AND len(toks) = 0 THEN 1.0
-       WHEN least(len(head), len(toks)) = 0 THEN 0.0
+  CASE WHEN len(head) + len(toks) - len(list_intersect(head, toks)) = 0
+       THEN 1.0
        ELSE CAST(len(list_intersect(head, toks)) AS DOUBLE)
-            / least(len(head), len(toks)) END AS containment_udf
+            / (len(head) + len(toks) - len(list_intersect(head, toks)))
+  END AS jaccard
 FROM h
 UNION ALL
 SELECT a.doc_id, 'successor' AS kind,
@@ -4679,7 +4665,7 @@ SELECT a.doc_id, 'successor' AS kind,
        THEN 1.0
        ELSE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
             / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
-  END AS containment_udf
+  END AS jaccard
 FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 """
 

@@ -200,7 +200,7 @@ def prepare(
     # the right plan when shuffle spreads across a cluster's disks;
     # "pandas" computes the same signals in zero-shuffle Arrow batches
     # — the plan for spill-constrained boxes (the gram shuffle exceeds
-    # one local disk at 4M pages); "hof" is codegen-only for SHORT docs.
+    # one local disk at 4M pages).
     keep = repetition_filter(
         repetition_signals(
             pages, id_col="url", text_col="text", mode=rep_mode
@@ -455,11 +455,11 @@ def main() -> None:
     )
     p.add_argument(
         "--rep-mode",
-        choices=("groupby", "pandas", "hof"),
+        choices=("groupby", "pandas"),
         default="groupby",
         help="repetition-signal strategy: groupby (gram shuffle — the "
         "many-disk cluster plan), pandas (zero-shuffle Arrow batches — "
-        "the spill-constrained plan), hof (codegen — short docs only)",
+        "the spill-constrained plan)",
     )
     p.add_argument(
         "--link-rank",

@@ -16,6 +16,27 @@ def _buckets(spark, rows):
     return spark.createDataFrame(rows, "bucket_key long, url string")
 
 
+def _py_jaccard(a, b):
+    """Driver-side reference: token-set Jaccard over Python str.split()."""
+    sa, sb = set(a.split()), set(b.split())
+    u = len(sa | sb)
+    return len(sa & sb) / u if u else 1.0
+
+
+def _py_containment(a, b):
+    """Driver-side reference: |A∩B|/min(|A|,|B|); both empty → 1.0, one
+    empty → 0.0."""
+    sa, sb = set(a.split()), set(b.split())
+    if not sa and not sb:
+        return 1.0
+    mn = min(len(sa), len(sb))
+    return len(sa & sb) / mn if mn else 0.0
+
+
+def _scores(df):
+    return {(r["url_a"], r["url_b"]): r["score"] for r in df.collect()}
+
+
 def test_candidate_pairs_with_counts_and_caps(spark):
     rows = (
         [(1, u) for u in ("a", "b", "c")]  # bucket 1: 3 members
@@ -48,10 +69,10 @@ def test_distinct_mode_unchanged(spark):
     assert [(r["url_a"], r["url_b"]) for r in out] == [("a", "b")]
 
 
-def test_confirm_jvm_and_pandas_paths_identical(spark, pages_1k):
-    """The codegen confirm (array_intersect over pre-tokenized slices)
-    and the pandas-UDF confirm must produce the same pairs with the
-    same exact scores."""
+def test_confirm_matches_driver_jaccard(spark, pages_1k):
+    """The codegen confirm (array_intersect over 32-bit token-hash
+    arrays) keeps exactly the pairs whose driver-side str.split()
+    Jaccard clears the threshold, with the same scores."""
     from dedupe_algo_spark.operators.candidates import (
         bucket_table_from_bands,
         candidate_pairs,
@@ -63,23 +84,25 @@ def test_confirm_jvm_and_pandas_paths_identical(spark, pages_1k):
     cands = band_gate(
         candidate_pairs(bucket_table_from_bands(rep), with_counts=True)
     ).select("url_a", "url_b")
-    jvm = {
-        (r["url_a"], r["url_b"]): round(r["score"], 9)
-        for r in confirm_pairs(cands, pages_1k, 0.5, jvm_tokens=True).collect()
+    text = {r["url"]: r["text"] for r in pages_1k.select("url", "text").collect()}
+    want = {}
+    for r in cands.collect():
+        j = _py_jaccard(text[r["url_a"]], text[r["url_b"]])
+        if j >= 0.5:
+            want[(r["url_a"], r["url_b"])] = round(j, 9)
+    got = {
+        k: round(v, 9) for k, v in _scores(confirm_pairs(cands, pages_1k, 0.5)).items()
     }
-    pd_ = {
-        (r["url_a"], r["url_b"]): round(r["score"], 9)
-        for r in confirm_pairs(cands, pages_1k, 0.5, jvm_tokens=False).collect()
-    }
-    assert jvm and jvm == pd_
+    assert want and got == want
 
 
 def test_confirm_tokenizer_unicode_parity(spark):
-    """JVM and pandas confirm paths must agree on non-ASCII whitespace:
-    Java's bare \\s+ is ASCII-only while Python str.split() is Unicode,
+    """The confirm tokenizer must split exactly where Python str.split()
+    does: Java's bare \\s+ is ASCII-only while str.split() is Unicode,
     so HTML-derived text (U+00A0 nbsp, U+2009 thin space, U+3000
     ideographic space, U+0085 NEL, U+001C file separator) would flip
-    threshold decisions between the switchable paths."""
+    threshold decisions against the MinHash shingler, which splits in
+    Python."""
     texts = [
         ("u1", "foo bar baz"),
         ("u2", "foo bar baz"),
@@ -88,21 +111,16 @@ def test_confirm_tokenizer_unicode_parity(spark):
         ("u5", " foo bar baz  "),
     ]
     pages = spark.createDataFrame(texts, "url string, text string")
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3"), ("u2", "u5"), ("u3", "u4"), ("u1", "u5")],
-        "url_a string, url_b string",
+    pairs = [("u1", "u2"), ("u1", "u3"), ("u2", "u5"), ("u3", "u4"), ("u1", "u5")]
+    got = _scores(
+        confirm_pairs(
+            spark.createDataFrame(pairs, "url_a string, url_b string"), pages, 0.0
+        )
     )
-    jvm = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, jvm_tokens=True).collect()
-    }
-    pd_ = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, jvm_tokens=False).collect()
-    }
-    assert jvm == pd_
+    text = dict(texts)
+    assert got == {(a, b): _py_jaccard(text[a], text[b]) for a, b in pairs}
     # ground truth: u1/u2/u5 all tokenize to {foo, bar, baz}
-    assert jvm[("u1", "u2")] == 1.0 and jvm[("u2", "u5")] == 1.0
+    assert got[("u1", "u2")] == 1.0 and got[("u2", "u5")] == 1.0
 
 
 def test_confirm_pairs_scorer_options(spark):
@@ -256,9 +274,7 @@ def test_confirm_pairs_weighted_jaccard_scorer(spark):
 def test_confirm_pairs_containment_scorer(spark):
     """scorer='containment': |A∩B|/min(|A|,|B|) — a page embedded
     verbatim in a longer page scores 1.0 while its Jaccard sinks;
-    jvm_tokens and pandas paths agree exactly."""
-    from dedupe_algo_spark.operators.scoring import confirm_pairs
-
+    scores equal the driver-side reference exactly."""
     inner = "alpha beta gamma delta epsilon"
     texts = {
         "u1": inner,
@@ -266,22 +282,12 @@ def test_confirm_pairs_containment_scorer(spark):
         "u3": "totally different page about other things entirely",
     }
     pages = spark.createDataFrame(list(texts.items()), "url string, text string")
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3")], "url_a string, url_b string"
-    )
-    jvm = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="containment").collect()
-    }
-    pd_ = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(
-            pairs, pages, 0.0, jvm_tokens=False, scorer="containment"
-        ).collect()
-    }
-    assert jvm == pd_
-    assert jvm[("u1", "u2")] == 1.0  # doc-in-doc
-    assert jvm[("u1", "u3")] == 0.0
+    pair_list = [("u1", "u2"), ("u1", "u3")]
+    pairs = spark.createDataFrame(pair_list, "url_a string, url_b string")
+    got = _scores(confirm_pairs(pairs, pages, 0.0, scorer="containment"))
+    assert got == {(a, b): _py_containment(texts[a], texts[b]) for a, b in pair_list}
+    assert got[("u1", "u2")] == 1.0  # doc-in-doc
+    assert got[("u1", "u3")] == 0.0
     # contrast: plain jaccard punishes the embedded pair
     jac = {
         (r["url_a"], r["url_b"]): r["score"]
@@ -292,20 +298,24 @@ def test_confirm_pairs_containment_scorer(spark):
 
 def test_null_text_drops_pair_on_both_paths(spark):
     """NULL text must yield a NULL score (dropped by >= threshold) on
-    the pandas path exactly like the JVM path — NaN would instead PASS
-    any threshold under Spark's NaN ordering."""
+    both scorer paths: the built-in expressions (jaccard, containment,
+    levenshtein, ngram_jaccard) and the pandas UDFs (jaro_winkler,
+    damerau) — NaN would instead PASS any threshold under Spark's NaN
+    ordering."""
     pages = spark.createDataFrame(
         [("u1", "real words here"), ("u2", None)], "url string, text string"
     )
     pairs = spark.createDataFrame([("u1", "u2")], "url_a string, url_b string")
-    for kw in (
-        {"jvm_tokens": False},  # pandas jaccard
-        {"scorer": "jaro_winkler"},
-        {"scorer": "damerau"},
-        {"scorer": "containment", "jvm_tokens": False},
+    for scorer in (
+        "jaccard",
+        "containment",
+        "levenshtein",
+        "ngram_jaccard",
+        "jaro_winkler",
+        "damerau",
     ):
-        got = confirm_pairs(pairs, pages, 0.0, **kw).collect()
-        assert got == [], kw
+        got = confirm_pairs(pairs, pages, 0.0, scorer=scorer).collect()
+        assert got == [], scorer
 
 
 def test_simhash_blocking_recall_on_synth_corpus(spark, pages_1k, labels_1k):

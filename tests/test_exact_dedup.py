@@ -84,18 +84,49 @@ def test_grouped_view_shape(spark, pages_1k):
     assert list(pdf.iloc[0]["urls"]) == sorted(pdf.iloc[0]["urls"])
 
 
-def test_udf_and_builtin_hash_agree(spark, pages_1k):
-    a = (
-        exact_dup_assignments(pages_1k, use_pandas_udf=False)
-        .orderBy("url")
-        .toPandas()
-    )
-    b = (
-        exact_dup_assignments(pages_1k, use_pandas_udf=True)
-        .orderBy("url")
-        .toPandas()
-    )
-    assert a.equals(b)
+def test_page_meta_hashes_match_hashlib(spark):
+    """content_sha256 is SHA-256 of the UTF-8 text; partial_hash is
+    SHA-256 of the first + last 16K CHARACTERS once the text exceeds
+    32K characters, NULL for empty text. The window counts characters,
+    not bytes: 20,000 two-byte characters (40,000 bytes) hash whole.
+    The memo stores these digests, so this pins its format."""
+    import hashlib
+
+    from dedupe_algo_spark.functions.hashing import PARTIAL_WINDOW
+    from dedupe_algo_spark.operators.dedup import page_meta
+
+    def sha(t):
+        return hashlib.sha256(t.encode("utf-8")).hexdigest()
+
+    def partial(t):
+        if not t:
+            return None
+        if len(t) > 2 * PARTIAL_WINDOW:
+            t = t[:PARTIAL_WINDOW] + t[-PARTIAL_WINDOW:]
+        return sha(t)
+
+    texts = [
+        "",
+        "short text",
+        "".join(f"{i:06d} " for i in range(6_000)),  # 42,000 ASCII chars
+        "é" * 20_000,
+        "é" * 40_000,
+        "a" + "é" * 16_383 + "中" * 20_000 + "z" * 16_384,
+    ]
+    df = _mk(spark, texts)
+    got = {
+        r["url"]: r
+        for r in page_meta(df, min_len=0, with_signature=False).collect()
+    }
+    assert len(got) == len(texts)
+    for i, t in enumerate(texts):
+        r = got[f"https://x.com/{i}"]
+        assert r["text_len"] == len(t), i
+        assert r["content_sha256"] == sha(t), i
+        assert r["partial_hash"] == partial(t), i
+    assert got["https://x.com/0"]["partial_hash"] is None
+    # whole text, where a 16KiB byte window would have cut it
+    assert got["https://x.com/3"]["partial_hash"] == sha("é" * 20_000)
 
 
 def test_normalized_key_collapses_cheap_mutations(spark):

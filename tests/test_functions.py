@@ -87,10 +87,8 @@ def test_minhash_band_keys_fold():
 def test_pair_udfs_on_dataframe(spark):
     from dedupe_algo_spark.functions.similarity import (
         levenshtein_sim_col,
-        pair_jaccard_udf,
+        ngram_jaccard_col,
         pair_jaro_winkler_udf,
-        pair_levenshtein_sim_udf,
-        pair_ngram_jaccard_udf,
     )
 
     df = spark.createDataFrame(
@@ -102,29 +100,30 @@ def test_pair_udfs_on_dataframe(spark):
         "a string, b string",
     )
     out = df.select(
-        pair_jaccard_udf("a", "b").alias("jac"),
-        pair_levenshtein_sim_udf("a", "b").alias("lev"),
-        levenshtein_sim_col(F.col("a"), F.col("b")).alias("lev_builtin"),
+        levenshtein_sim_col(F.col("a"), F.col("b")).alias("lev"),
         pair_jaro_winkler_udf("a", "b").alias("jw"),
-        pair_ngram_jaccard_udf("a", "b").alias("ng"),
+        ngram_jaccard_col(F.col("a"), F.col("b")).alias("ng"),
     ).toPandas()
-    assert out.iloc[0].tolist() == [1.0, 1.0, 1.0, 1.0, 1.0]
+    assert out.iloc[0].tolist() == [1.0, 1.0, 1.0]
     # identical > one-token-off > disjoint, for every measure
     for c in out.columns:
         assert out[c].iloc[0] > out[c].iloc[1] > out[c].iloc[2], c
-    # UDF levenshtein agrees with the built-in
-    assert np.allclose(out["lev"], out["lev_builtin"])
 
 
-def test_ngram_jaccard_col_matches_udf(spark):
+def _pyjac(a, b, n=5):
+    """Driver-side reference: character n-gram set Jaccard."""
+    ga = {a[i : i + n] for i in range(max(1, len(a) - n + 1))}
+    gb = {b[i : i + n] for i in range(max(1, len(b) - n + 1))}
+    u = len(ga | gb)
+    return (len(ga & gb) / u) if u else 1.0
+
+
+def test_ngram_jaccard_col_matches_python(spark):
     """The JVM-codegen n-gram Jaccard (transform/sequence/substring +
-    array set ops) must equal the pandas UDF bit-for-bit — including
-    short strings (len<5 → whole string as the single gram), empties,
-    and non-ASCII (both sides count characters, not bytes)."""
-    from dedupe_algo_spark.functions.similarity import (
-        ngram_jaccard_col,
-        pair_ngram_jaccard_udf,
-    )
+    array set ops) must equal the Python reference bit-for-bit —
+    including short strings (len<5 → whole string as the single gram),
+    empties, and non-ASCII (both sides count characters, not bytes)."""
+    from dedupe_algo_spark.functions.similarity import ngram_jaccard_col
 
     df = spark.createDataFrame(
         [
@@ -145,31 +144,27 @@ def test_ngram_jaccard_col_matches_udf(spark):
         "a",
         "b",
         ngram_jaccard_col(F.col("a"), F.col("b")).alias("col"),
-        pair_ngram_jaccard_udf("a", "b").alias("udf"),
     ).toPandas()
     nulls = out["a"].isna() | out["b"].isna()
-    # null on either side → null/NaN on BOTH paths (without the explicit
-    # gate the column form scored null-vs-null 1.0: a phantom duplicate)
+    # null on either side → null (without the explicit gate the column
+    # form scored null-vs-null 1.0: a phantom duplicate)
     assert out.loc[nulls, "col"].isna().all()
-    assert out.loc[nulls, "udf"].isna().all()
     ok = out[~nulls]
-    assert (ok["col"] == ok["udf"]).all(), ok
+    for _, r in ok.iterrows():
+        assert r["col"] == _pyjac(r["a"], r["b"]), (r["a"], r["b"], r["col"])
     # spot-check one exact value (11-char vs 12-char: 7 shared of 8 grams)
     assert ok["col"].iloc[0] == 0.875
 
 
-def test_ngram_jaccard_fuzz_three_way_parity(spark):
+def test_ngram_jaccard_fuzz_matches_python(spark):
     """400 seeded random pairs over an adversarial alphabet (ASCII,
     combining accents, NBSP/thin-space whitespace, CJK, and ASTRAL-plane
     emoji/math — Java's UTF-16 vs Python's codepoints is exactly where
-    substring semantics could diverge): the JVM column form, the pandas
-    UDF, and a driver-side Python reference must agree bit-for-bit."""
+    substring semantics could diverge): the JVM column form and a
+    driver-side Python reference must agree bit-for-bit."""
     import random
 
-    from dedupe_algo_spark.functions.similarity import (
-        ngram_jaccard_col,
-        pair_ngram_jaccard_udf,
-    )
+    from dedupe_algo_spark.functions.similarity import ngram_jaccard_col
 
     alphabet = "ab é́  漢字\U0001f680\U0001d54a"
     rng = random.Random(0xA5EED)
@@ -179,12 +174,6 @@ def test_ngram_jaccard_fuzz_three_way_parity(spark):
             rng.choice(alphabet) for _ in range(rng.randrange(0, 24))
         )
 
-    def pyjac(a, b, n=5):
-        ga = {a[i : i + n] for i in range(max(1, len(a) - n + 1))}
-        gb = {b[i : i + n] for i in range(max(1, len(b) - n + 1))}
-        u = len(ga | gb)
-        return (len(ga & gb) / u) if u else 1.0
-
     pairs = [(rand_s(), rand_s()) for _ in range(380)]
     # near-identical pairs too (high-similarity region)
     pairs += [(s, s + rng.choice(alphabet)) for s, _ in pairs[:20]]
@@ -193,11 +182,10 @@ def test_ngram_jaccard_fuzz_three_way_parity(spark):
         "a",
         "b",
         ngram_jaccard_col(F.col("a"), F.col("b")).alias("col"),
-        pair_ngram_jaccard_udf("a", "b").alias("udf"),
     ).toPandas()
     for _, r in out.iterrows():
-        want = pyjac(r["a"], r["b"])
-        assert r["col"] == want == r["udf"], (r["a"], r["b"], want, r["col"], r["udf"])
+        want = _pyjac(r["a"], r["b"])
+        assert r["col"] == want, (r["a"], r["b"], want, r["col"])
 
 
 def test_jaro_winkler_levenshtein_duckdb_bitwise_parity():

@@ -226,21 +226,6 @@ def test_normalized_exact_key_merges_cheap_mutations(spark, pages_1k):
     assert a[["url", "cluster_id"]].equals(b[["url", "cluster_id"]])
 
 
-def test_pandas_hash_path_identical_clusters(spark, pages_1k):
-    """use_pandas_udf_hash=True swaps the JVM sha2() meta scan for the
-    Arrow-batched pandas hash UDF (the north_star's "SHA-256 content
-    hashes computed in pandas UDF batches"); published hash values are
-    identical either way, so the full near-dup pipeline must emit
-    byte-identical clusters."""
-    base = dedup_pipeline(pages_1k).clusters.orderBy("url").toPandas()
-    pdh = (
-        dedup_pipeline(pages_1k, use_pandas_udf_hash=True)
-        .clusters.orderBy("url")
-        .toPandas()
-    )
-    assert base.equals(pdh)
-
-
 def test_estimate_only_tier2_matches_confirmed_on_synth(spark, pages_1k):
     """exact_confirm=False gates tier 2 on the 128-perm MinHash-Jaccard
     estimate instead of the exact token-set confirm. The synth corpus

@@ -162,3 +162,23 @@ def test_estimate_pairs_single_signature_exchange(spark):
     per_exchange = exchange_column_sets(estimate_pairs(pairs, sigs, 0.0))
     sig_exchanges = sum(1 for cols in per_exchange if {"_v", "sig"} & cols)
     assert sig_exchanges == 1, per_exchange
+
+
+def test_default_confirm_and_meta_scan_run_no_python(spark):
+    # The default confirm scorers (jaccard, containment) and the exact
+    # tier's hash projection are built-in expressions end to end: no
+    # Arrow/Batch EvalPython node may appear in their plans.
+    from dedupe_algo_spark.operators.dedup import page_meta
+    from dedupe_algo_spark.operators.scoring import confirm_pairs
+    from dedupe_algo_spark.plans import formatted_plan
+
+    pages = spark.createDataFrame(
+        [("u1", "alpha beta gamma delta"), ("u2", "alpha beta gamma omega")],
+        "url string, text string",
+    )
+    pairs = spark.createDataFrame([("u1", "u2")], "url_a string, url_b string")
+    for scorer in ("jaccard", "containment"):
+        plan = formatted_plan(confirm_pairs(pairs, pages, 0.8, scorer=scorer))
+        assert "EvalPython" not in plan, (scorer, plan)
+    plan = formatted_plan(page_meta(pages, with_signature=False))
+    assert "EvalPython" not in plan, plan

@@ -34,6 +34,8 @@ SAMPLE = [
     "semantic_dedup",
     "minhash_pair_stats",
     "ngram_jaccard",
+    "levenshtein_sim",
+    "containment_pairs",
     "minhash_dup_pairs",
     "pages_dedup_clusters_2k",
     "simhash_hamming",

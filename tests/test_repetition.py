@@ -1,6 +1,6 @@
 """Gopher repetition signals, substring-span removal, URL canonicalization.
 
-Hand-computed truths plus the groupby/hof physical-plan parity pin
+Hand-computed truths plus the groupby/pandas physical-plan parity pin
 (the two strategies must agree on ANY input, including unicode and
 degenerate docs — the CORRECTNESS oracle only exercises one of them).
 """
@@ -72,7 +72,7 @@ def test_repetition_modes_agree(spark):
             (10, "\ta b\x0bc\rd e f g h a b\n"),
             (11, None),
             # tie-break between multibyte grams: UTF-8 byte order ==
-            # code-point order, all three engines must pick the same
+            # code-point order, both modes must pick the same
             (12, "é a é a ü b ü b"),
         ],
     )
@@ -80,21 +80,17 @@ def test_repetition_modes_agree(spark):
         repetition_signals(docs, mode="groupby").collect(),
         key=lambda r: r.doc_id,
     )
-    b = sorted(
-        repetition_signals(docs, mode="hof").collect(),
-        key=lambda r: r.doc_id,
-    )
     c = sorted(
         repetition_signals(docs, mode="pandas").collect(),
         key=lambda r: r.doc_id,
     )
-    assert a == b == c
+    assert a == c
 
 
 def test_repetition_pandas_mode_at_synth_lengths(spark):
     # the synthetic corpus's real length profile (~530-token mean) —
-    # the regime where hof is quadratic-pathological and groupby's
-    # gram shuffle is the cost: pandas must match groupby exactly
+    # the regime where groupby's gram shuffle is the cost: pandas
+    # must match groupby exactly
     from dedupe_algo_spark.synth import synth_pages
 
     docs = synth_pages(spark, 300).select(
