@@ -10,7 +10,6 @@ built-in expression computes the same value.
 from .urls import canonical_url, registered_domain
 from .hashing import length_bucket
 from .simhash import simhash64_udf, simhash_bands
-from .minhash import minhash_udf, minhash_jaccard_udf
 from .similarity import pair_jaro_winkler_udf, levenshtein_sim_col
 
 __all__ = [
@@ -19,8 +18,6 @@ __all__ = [
     "length_bucket",
     "simhash64_udf",
     "simhash_bands",
-    "minhash_udf",
-    "minhash_jaccard_udf",
     "pair_jaro_winkler_udf",
     "levenshtein_sim_col",
 ]

@@ -13,7 +13,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 NUM_PERM = 128
 LSH_BANDS = 32  # = lsh_plan(128, tau=0.7)["bands"]; see below
@@ -152,11 +152,6 @@ def _batch_signatures(texts, k: int = 3) -> list:
     return [minhash_signature(t, k) for t in texts]
 
 
-@pandas_udf(ArrayType(LongType()))
-def minhash_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series(_batch_signatures(texts.values), index=texts.index)
-
-
 _BAND_FOLD = np.uint64(0x9E3779B97F4A7C15)  # odd multiplier, uint64 wrap
 
 
@@ -207,46 +202,5 @@ def minhash_band_keys_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out, index=texts.index)
 
 
-def minhash_bands_col(sig):
-    """JVM-side band keys: ``xxhash64(band_index, sig[4b..4b+3])`` per
-    band → ``array<long>``. Stays in whole-stage codegen, no Python, no
-    strings — band longs shuffle ~3× smaller than formatted keys."""
-    from pyspark.sql import functions as F
-
-    rows = NUM_PERM // LSH_BANDS
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), *[F.element_at(sig, b * rows + r + 1) for r in range(rows)]
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
-
-
 def estimate_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(np.asarray(sig_a) == np.asarray(sig_b)))
-
-
-@pandas_udf(DoubleType())
-def minhash_jaccard_udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-    """Estimated Jaccard from two signature columns on a candidate-pair
-    DataFrame. Whole-batch vectorized: the Arrow batch's signatures are
-    stacked into two (n, NUM_PERM) matrices and compared in one numpy
-    expression — measured ~20x over the per-row loop on the estimate
-    stage (which sits on the critical path between candidate generation
-    and confirm)."""
-    n = len(sig_a)
-    out = np.full(n, np.nan, dtype=np.float64)
-    if n:
-        valid = (sig_a.notna() & sig_b.notna()).values
-        if valid.any():
-            a = np.stack(sig_a.values[valid])
-            b = np.stack(sig_b.values[valid])
-            out[valid] = (a == b).mean(axis=1)
-    # NULL signatures → NULL estimate, never NaN (Spark orders NaN above
-    # every number, so NaN would pass an `est_score >= gate` filter)
-    s = pd.Series(out, dtype="Float64")
-    if n:
-        s[~(sig_a.notna() & sig_b.notna()).values] = pd.NA
-    return s

@@ -37,21 +37,13 @@ def _token_hash64(tok: str) -> int:
     return (h1 << 32) | h2
 
 
-def _token_hashes(text: str) -> np.ndarray:
-    toks = text.split()
-    if not toks:
-        return np.zeros(0, dtype=np.uint64)
-    return np.fromiter(
-        (_token_hash64(t) for t in toks), dtype=np.uint64, count=len(toks)
-    )
-
-
 def simhash64(text: str | None) -> int | None:
     if text is None:
         return None
-    h = _token_hashes(text)
-    if len(h) == 0:
+    toks = text.split()
+    if not toks:
         return 0
+    h = np.fromiter((_token_hash64(t) for t in toks), dtype=np.uint64, count=len(toks))
     bits = np.unpackbits(h.view(np.uint8).reshape(len(h), 8), axis=1, bitorder="little")
     maj = (bits.sum(axis=0) * 2 >= len(h)).astype(np.uint8)
     val = int(np.packbits(maj, bitorder="little").view(np.uint64)[0])

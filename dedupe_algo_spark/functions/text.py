@@ -40,10 +40,6 @@ def word_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0)
 
 
-def char_len(text: Column) -> Column:
-    return F.length(text).cast("long")
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of non-alphanumeric, non-space characters."""
     n = F.length(text)

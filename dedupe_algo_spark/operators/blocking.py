@@ -29,16 +29,6 @@ def block_key(text: Column, url: Column) -> Column:
     )
 
 
-def with_block_key(pages: DataFrame, min_len: int = 10) -> DataFrame:
-    """Project pages to dedup working set: min-length filter (reference
-    F5, scanner.rs:186-189; default slider 50KB → ours a character floor)
-    + block key column. Filters are plain predicates → pushed to scan."""
-    return (
-        pages.where(F.length("text") >= min_len)
-        .withColumn("block_key", block_key(F.col("text"), F.col("url")))
-    )
-
-
 def prune_singleton_blocks(df: DataFrame, key: str | list[str] = "block_key") -> DataFrame:
     """Reference F7 (lib.rs:61-64,118-121,177-181): a block with one
     member can contain no duplicate pair. Window count over the block

@@ -27,21 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.minhash import minhash_band_keys_udf, minhash_bands_col
+from ..functions.minhash import minhash_band_keys_udf
 from ..functions.simhash import simhash64_udf, simhash_bands
 from .blocking import block_key
 
 DEFAULT_MAX_BUCKET = 2_000
-
-
-def bucket_table_from_sigs(sigs: DataFrame) -> DataFrame:
-    """→ (bucket_key:long, url) from a precomputed (url, sig) table.
-    Band keys are JVM-side xxhash64 over signature slices — the whole
-    bucketing is codegen, no Python, and the exploded rows carry only
-    (long, url): the narrowest possible self-join input."""
-    return sigs.select(
-        F.explode(minhash_bands_col(F.col("sig"))).alias("bucket_key"), "url"
-    )
 
 
 def bucket_table_from_bands(bands: DataFrame) -> DataFrame:
@@ -60,12 +50,13 @@ def bucket_table(
     """→ (bucket_key, url). ``working`` needs (url, text) columns.
 
     Every path projects its (bucket_key, url) rows map-side directly on
-    the scan partitions — signature UDFs first, banding JVM-side via
-    ``bucket_table_from_sigs`` — so no Exchange below the self-join ever
-    carries the text column (the text-never-shuffles invariant, asserted
-    by test_plans via plans.exchange_columns). A single-path call keeps
-    its native key type (minhash band keys stay slim longs); multi-path
-    calls cast to string for the union.
+    the scan partitions — the band-key UDF folds the signature into
+    band keys, ``bucket_table_from_bands`` explodes them — so no
+    Exchange below the self-join ever carries the text column (the
+    text-never-shuffles invariant, asserted by test_plans via
+    plans.exchange_columns). A single-path call keeps its native key
+    type (minhash band keys stay slim longs); multi-path calls cast to
+    string for the union.
     """
     paths = []
     if use_minhash:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import normalized_for_dedup, partial_sha256_col, sha256_col
-from ..functions.minhash import minhash_band_keys_udf, minhash_udf
+from ..functions.minhash import minhash_band_keys_udf
 
 
 def page_meta(
@@ -46,17 +46,14 @@ def page_meta(
     min_len: int = 10,
     with_signature: bool = True,
     with_ts: bool = False,
-    signature: str = "bands",
     exact_key: str = "raw",
 ) -> DataFrame:
     """One-pass map-side projection of everything dedup needs, with the
     text column dropped at the end of the pass. Zero shuffles.
 
-    ``signature="bands"`` (default) carries only the 32 LSH band keys
-    (~256B/row) — all the near-dup path needs when gating on band
-    collisions — so every shuffle downstream of the scan moves 4× fewer
-    signature bytes than the full 128-perm ``signature="sig"`` form
-    (which remains for callers that score MinHash-Jaccard estimates).
+    ``with_signature`` adds the 32 LSH band keys (``bands``, ~256B/row),
+    all the near-dup path needs to gate on band collisions; ``with_ts``
+    carries ``warc_ts`` (the streaming ingest's projection).
 
     ``exact_key="normalized"`` keys the whole exact cascade (size
     bucket, partial hash, full hash) on the CCNet-style normalized view
@@ -83,10 +80,7 @@ def page_meta(
     if with_ts:
         cols.insert(1, F.col("warc_ts"))
     if with_signature:
-        if signature == "sig":
-            cols.append(minhash_udf(F.col("text")).alias("sig"))
-        else:
-            cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
+        cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
     return pages.where(F.length("text") >= min_len).select(*cols)
 
 
@@ -95,7 +89,6 @@ def page_meta_incremental(
     memo: DataFrame,
     min_len: int = 10,
     with_signature: bool = True,
-    signature: str = "bands",
     exact_key: str = "raw",
 ) -> DataFrame:
     """Incremental variant of ``page_meta`` — the reference's cache fast
@@ -105,15 +98,16 @@ def page_meta_incremental(
     be written and read under the SAME mode (the published text_len and
     hashes — the memo's validity key and payload — are both functions
     of the chosen key view, so mixing modes would reuse raw hashes in a
-    normalized run or vice versa). Shape: hashes are computed unconditionally map-side
-    (they're one codegen pass) but the *published* value prefers the
-    memoized one, so downstream grouping keys are stable across runs
-    even if the hash function version changes; signatures are computed
-    only where needed.
+    normalized run or vice versa). Shape: each hash is
+    ``coalesce(reused, computed)``, so the *published* value prefers the
+    memoized one and downstream grouping keys are stable across runs
+    even if the hash function version changes. The generated code
+    evaluates ``coalesce`` lazily: on a memo hit it skips the SHA-256
+    digests of that row, so only stale or unseen rows pay for hashing.
+    Band keys (``with_signature``) are computed for every row.
 
     Returns the same schema as ``page_meta`` (+ warc_ts) plus a
-    ``cache_hit`` flag for audit. ``signature`` mirrors ``page_meta``:
-    "bands" (default, the slim flagship form) or "sig" (full 128-perm).
+    ``cache_hit`` flag for audit.
     """
     from ..sources.memo import validity_join
 
@@ -144,10 +138,7 @@ def page_meta_incremental(
         F.col("reused_sha256").isNotNull().alias("cache_hit"),
     ]
     if with_signature:
-        if signature == "sig":
-            cols.append(minhash_udf(F.col("text")).alias("sig"))
-        else:
-            cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
+        cols.append(minhash_band_keys_udf(F.col("text")).alias("bands"))
     return joined.select(*cols)
 
 

@@ -1,21 +1,22 @@
-"""Pair scoring — confirm stage for near-duplicate candidates.
+"""Pair scoring — gate and confirm for near-duplicate candidates.
 
-Two-tier design (north_star: "batched Jaro-Winkler/Levenshtein +
+Two steps (north_star: "batched Jaro-Winkler/Levenshtein +
 MinHash-Jaccard"):
 
-1. **Estimate** — MinHash-Jaccard from the signatures already carried by
-   the bucket rows. Signature joins are pair-side-small (AQE broadcasts
-   the pair list), so the 1KB sigs stream map-side and nothing wide
-   shuffles. Pairs far below threshold (the vast majority) die here.
+1. **Band gate** — the number of LSH bands a pair collided in
+   (``candidate_pairs(..., with_counts=True)``) is Binomial(b, J^r) in
+   the pair's Jaccard J. ``band_gate`` thresholds it; the count rides
+   the bucket self-join's own exchange, so the gate joins no signatures
+   and runs no Python. Pairs far below threshold die here.
 2. **Confirm** — exact token-set Jaccard over the texts, but only for
-   estimate-survivors: the text column is re-read from the source and
-   joined against the (tiny) survivor list — again pair-side-small, so
-   text never shuffles. Jaro-Winkler / Levenshtein scorers are available
-   for fielded-record linkage via the same join shape.
+   gate survivors: the text column is re-read from the source and
+   joined against the (tiny) survivor list — pair-side-small, so text
+   never shuffles. Jaro-Winkler / Levenshtein scorers are available for
+   fielded-record linkage via the same join shape.
 
 The reference analog is pass 3's full-hash byte-confirm after the cheap
 partial-hash gate (lib.rs:130-160) — same cheap-gate-then-confirm shape,
-generalized to similarity.
+generalized to similarity. Every reported pair is confirmed.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.minhash import minhash_jaccard_udf
 from ..functions.similarity import (
     LEV_CAP,
     levenshtein_sim_col,
@@ -33,12 +33,11 @@ from ..functions.similarity import (
 )
 
 DEFAULT_THRESHOLD = 0.80
-DEFAULT_ESTIMATE_GATE = 0.55  # pre-filter margin below the confirm threshold
 
 # ≥2 band collisions out of 32 bands × 4 rows: P(pass | J=0.7) ≈ 0.998,
-# P(pass | J=0.3) ≈ 0.03 — same recall as the signature-join estimate at
-# the 0.55 gate, zero additional shuffle (the count rides the bucket
-# self-join's own exchange).
+# P(pass | J=0.3) ≈ 0.03 — the gate sheds pairs far below the confirm
+# threshold and keeps those near it for ``confirm_pairs``, at zero
+# additional shuffle (the count rides the bucket self-join's exchange).
 DEFAULT_MIN_BAND_MATCHES = 2
 
 # Broadcasting the candidate url set (≈60B/url) stays executor-safe well
@@ -147,47 +146,11 @@ def pair_value_join(cand: DataFrame, slice_: DataFrame, val: str) -> DataFrame:
 def band_gate(
     pairs_with_counts: DataFrame, min_matches: int = DEFAULT_MIN_BAND_MATCHES
 ) -> DataFrame:
-    """Estimate tier via LSH band-collision counts: keep pairs that
+    """Gate via LSH band-collision counts: keep pairs that
     collided in ≥ ``min_matches`` bands (``candidate_pairs(...,
     with_counts=True)`` output). The binomial collision count IS the
     Jaccard estimate — no signature join, no Python, no extra shuffle."""
     return pairs_with_counts.where(F.col("n_shared") >= min_matches)
-
-
-def estimate_pairs(pairs: DataFrame, sigs: DataFrame, gate: float) -> DataFrame:
-    """→ pairs with ``est_score`` ≥ gate. ``sigs`` is (url, sig).
-
-    Signature-join estimate (exact MinHash-Jaccard over the full
-    signatures). The flagship pipeline gates on band-collision counts
-    instead (``band_gate``); this path remains for direct use where the
-    caller wants the numeric estimate. It rides the same one-pass
-    melt/pivot join as the confirm tier (``pair_value_join``) — the
-    classic double sig join shuffled the |reps|×1KB signature table
-    TWICE (the job's second-largest exchange at 10^12 rows) and raced
-    two AQE query stages to fill a cold cache; here the signatures
-    cross one join exchange and the pivot carries each pair's two
-    sigs once.
-
-    Contract (sharpened vs the old double join): ``pairs`` is projected
-    to bare ``(url_a, url_b)`` — pass-through columns are NOT preserved
-    (join the result back on the pair key if you need them), and
-    ``sigs`` must carry ONE row per url (true of every signature table
-    this engine builds; a duplicate url would collapse to an arbitrary
-    ``first`` in the pivot rather than fan out per combination). The
-    explicit not-null filter keeps the inner-join drop semantics — a
-    pair with a side absent from ``sigs`` is dropped, not scored — as
-    structural defense-in-depth: it does not depend on the estimate
-    UDF's own guarantee of returning NULL (never NaN, which Spark
-    orders above every number) on a null side, minhash.py:293-297."""
-    joined = pair_value_join(
-        pairs.select("url_a", "url_b"),
-        sigs.select("url", F.col("sig").alias("_v")),
-        "_v",
-    ).where(F.col("_ta").isNotNull() & F.col("_tb").isNotNull())
-    est = joined.withColumn(
-        "est_score", minhash_jaccard_udf(F.col("_ta"), F.col("_tb"))
-    ).drop("_ta", "_tb")
-    return est.where(F.col("est_score") >= gate)
 
 
 def _prefix(text):
@@ -217,7 +180,7 @@ def confirm_pairs(
     tracker=None,
     scorer: str = "jaccard",
 ) -> DataFrame:
-    """Exact token-Jaccard confirm on estimate survivors.
+    """Exact token-Jaccard confirm on band-gate survivors.
     → (url_a, url_b, score).
 
     ``scorer`` selects the pass-3 similarity (north_star names the

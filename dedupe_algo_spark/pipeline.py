@@ -8,18 +8,21 @@ Spark:
         text dropped before any shuffle               (passes 1-3 compute)
       → exact grouping on (len, sha256)               (1 slim shuffle)
       → collapse to one representative per text       (scale lever)
-      → JVM xxhash64 LSH bands → (long,url) self-join (pass-1 generalized)
-      → tier-1 gate = band-collision count (binomial in Jaccard; rides
+      → 32 OPH band keys → (long,url) self-join       (pass-1 generalized)
+      → band gate = band-collision count (binomial in Jaccard; rides
         the self-join's shuffle, no signature joins)
-      → tier-2 exact token-Jaccard confirm (text re-read, candidate urls
-        broadcast — text STILL never shuffles)
-      → exact star-edges ∪ near match-edges
-      → large-star/small-star connected components
+      → exact token-Jaccard confirm (text re-read, candidate urls
+        broadcast — text STILL never shuffles)       (pass-3 analog)
+      → large-star/small-star connected components over the rep graph
       → flat (url, cluster_id, match_kind)
+
+Every near cluster is confirmed on the full text, as the reference
+confirms every group with a full hash (lib.rs:130-181); there is no
+estimate-only output. ``include_near=False`` ends after exact grouping.
 
 Shuffle census to defend at 100 TB: one shuffle of ~100B meta rows for
 exact grouping, one shuffle of (long,url) bucket rows for the candidate
-self-join (AQE-skew-handled, hot buckets capped + audited), O(log n) CC
+self-join (AQE-skew-handled, hot buckets capped), O(log n) CC
 supersteps over match edges. The text column is scanned twice (meta,
 confirm) and shuffled zero times.
 """
@@ -37,14 +40,13 @@ from .operators.candidates import (
     candidate_pairs,
 )
 from .operators.cluster import connected_components
-from .operators.dedup import assign_exact, page_meta
+from .operators.dedup import assign_exact, page_meta, page_meta_incremental
 from .operators.scoring import (
-    DEFAULT_ESTIMATE_GATE,
+    BROADCAST_URL_LIMIT,
     DEFAULT_MIN_BAND_MATCHES,
     DEFAULT_THRESHOLD,
     band_gate,
     confirm_pairs,
-    estimate_pairs,
 )
 
 
@@ -84,15 +86,46 @@ class DedupResult:
         self.memo.upsert(self.meta.select(*MEMO_SCHEMA.fieldNames()))
 
 
+def _cluster_join(assigned: DataFrame, rep_comp: DataFrame) -> DataFrame:
+    """Extend the rep-graph component labels through the exact mapping
+    → (url, cluster_id, match_kind)."""
+    comp = rep_comp.select(
+        F.col("url").alias("rep_url"), F.col("component")
+    )
+    # The component map is RDD-backed (driver union-find) or a small
+    # checkpointed aggregate — either way Catalyst has no size stats and
+    # plants a sort-merge join that shuffles the whole assigned table
+    # (measured 3.6GB at 4M pages) against a ~MB map. The union-find
+    # fast path counted its rows while building them and carries the
+    # count on the DataFrame, so the broadcast decision costs zero extra
+    # jobs on that common path; a distributed-CC or checkpointed-runner
+    # run (whose stage hook re-reads parquet, dropping the attribute)
+    # pays one count. At 10^12 rows a billion-row component map
+    # correctly falls back to the shuffle join.
+    n_comp = getattr(rep_comp, "_dedupe_known_rows", None)
+    if n_comp is None:
+        n_comp = comp.count()
+    if n_comp <= BROADCAST_URL_LIMIT:
+        comp = F.broadcast(comp)
+    return (
+        assigned.select("url", "rep_url", "cluster_size")
+        .join(comp, "rep_url", "left")
+        .where((F.col("cluster_size") >= 2) | F.col("component").isNotNull())
+        .select(
+            "url",
+            F.coalesce(F.col("component"), F.col("rep_url")).alias("cluster_id"),
+            F.when(F.col("cluster_size") >= 2, F.lit("exact"))
+            .otherwise(F.lit("near"))
+            .alias("match_kind"),
+        )
+    )
+
+
 def dedup_pipeline(
     pages: DataFrame,
     min_len: int = 10,
     threshold: float = DEFAULT_THRESHOLD,
-    estimate_gate: float = DEFAULT_ESTIMATE_GATE,
-    min_band_matches: int = DEFAULT_MIN_BAND_MATCHES,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
     include_near: bool = True,
-    exact_confirm: bool = True,
     scorer: str = "jaccard",
     exact_key: str = "raw",
     memo=None,
@@ -106,9 +139,9 @@ def dedup_pipeline(
     to the audit table even in a plain un-checkpointed run; pass
     ``runner.CheckpointedRun.stage`` for resumable stage commits on top,
     or ``lambda name, fn: fn()`` to opt out entirely.
-    ``exact_confirm=False`` skips tier-2 (signature estimate only —
-    cheaper, slightly softer precision near the threshold).
-    ``scorer`` selects the tier-2 similarity ("jaccard" | "jaro_winkler"
+    ``include_near=False`` stops after the exact tier: no band keys, no
+    candidates, no connected components.
+    ``scorer`` selects the confirm similarity ("jaccard" | "jaro_winkler"
     | "levenshtein" | "ngram_jaccard" — see
     :func:`~.operators.scoring.confirm_pairs`).
     ``exact_key="normalized"`` keys the exact tier on the CCNet-style
@@ -133,43 +166,15 @@ def dedup_pipeline(
 
         stage = audit_stage_hook(pages.sparkSession, tracker=tracker)
 
-    # Bands-only signatures unless the no-confirm path needs the full
-    # 128-perm sig for its numeric MinHash-Jaccard estimate: band keys
-    # are 32 longs/row vs 128, so the exact-grouping shuffle and the
-    # rep-signature slice move 4× fewer signature bytes.
-    sig_mode = "sig" if (include_near and not exact_confirm) else "bands"
-    if memo is not None:
-        from .operators.dedup import page_meta_incremental
-
-        meta = tracker.persist(
-            stage(
-                "page_meta",
-                lambda: page_meta_incremental(
-                    pages,
-                    memo.read(),
-                    min_len=min_len,
-                    with_signature=include_near,
-                    signature=sig_mode,
-                    exact_key=exact_key,
-                ),
-            )
-        )
+    opts = dict(min_len=min_len, with_signature=include_near, exact_key=exact_key)
+    if memo is None:
+        meta_fn = lambda: page_meta(pages, **opts)  # noqa: E731
     else:
-        meta = tracker.persist(
-            stage(
-                "page_meta",
-                lambda: page_meta(
-                    pages,
-                    min_len=min_len,
-                    with_signature=include_near,
-                    signature=sig_mode,
-                    exact_key=exact_key,
-                ),
-            )
-        )
+        meta_fn = lambda: page_meta_incremental(pages, memo.read(), **opts)  # noqa: E731
+    meta = tracker.persist(stage("page_meta", meta_fn))
 
     # persisted: the exact-grouping window feeds four consumers (dup
-    # view, star edges, rep signatures, final cluster join) — without
+    # view, star edges, rep band keys, final cluster join) — without
     # this the 200MB window shuffle re-runs per consumer
     assigned = tracker.persist(assign_exact(meta))
     exact_dups = assigned.where(F.col("cluster_size") >= 2).select(
@@ -192,37 +197,28 @@ def dedup_pipeline(
         )
     )
 
+    all_edges = exact_edges
     if include_near:
         rep_keys = assigned.where(F.col("url") == F.col("rep_url")).select(
-            "url", sig_mode if sig_mode == "sig" else "bands"
+            "url", "bands"
         )
 
         def near():
-            # Estimate tier = LSH band-collision count: the binomial
-            # collision count over the self-join's own shuffle replaces
-            # the two full-signature joins (each shuffles |reps|×1KB of
-            # sigs — the job's second-largest exchange at 4M pages).
-            if sig_mode == "sig":
-                from .operators.candidates import bucket_table_from_sigs
-
-                buckets = bucket_table_from_sigs(rep_keys)
-            else:
-                buckets = bucket_table_from_bands(rep_keys)
+            # Gate = LSH band-collision count: the binomial collision
+            # count rides the self-join's own shuffle, so no signature
+            # join runs before the exact confirm.
             pairs = candidate_pairs(
-                buckets, max_bucket=max_bucket, with_counts=True, tracker=tracker
+                bucket_table_from_bands(rep_keys),
+                max_bucket=DEFAULT_MAX_BUCKET,
+                with_counts=True,
+                tracker=tracker,
             )
-            cands = band_gate(pairs, min_matches=min_band_matches).select(
+            cands = band_gate(pairs, min_matches=DEFAULT_MIN_BAND_MATCHES).select(
                 "url_a", "url_b"
             )
-            if exact_confirm:
-                return confirm_pairs(
-                    cands, pages, threshold=threshold, tracker=tracker,
-                    scorer=scorer,
-                )
-            est = estimate_pairs(cands, rep_keys, gate=estimate_gate)
-            return est.select(
-                "url_a", "url_b", F.col("est_score").alias("score")
-            ).where(F.col("score") >= threshold)
+            return confirm_pairs(
+                cands, pages, threshold=threshold, tracker=tracker, scorer=scorer
+            )
 
         near_edges = stage("near_edges", near)
         all_edges = exact_edges.unionByName(near_edges)
@@ -241,47 +237,11 @@ def dedup_pipeline(
                 tracker=tracker,
             ),
         )
+        clusters = _cluster_join(assigned, rep_comp)
     else:
-        all_edges = exact_edges
-        rep_comp = connected_components(
-            exact_edges.limit(0).select(
-                F.col("url_a").alias("src"), F.col("url_b").alias("dst")
-            ),
-            tracker=tracker,
+        clusters = exact_dups.select(
+            "url", "cluster_id", F.lit("exact").alias("match_kind")
         )
-
-    comp = rep_comp.select(
-        F.col("url").alias("rep_url"), F.col("component")
-    )
-    # The component map is RDD-backed (driver union-find) or a small
-    # checkpointed aggregate — either way Catalyst has no size stats and
-    # plants a sort-merge join that shuffles the whole assigned table
-    # (measured 3.6GB at 4M pages) against a ~MB map. The union-find
-    # fast path counted its rows while building them and carries the
-    # count on the DataFrame, so the broadcast decision costs zero extra
-    # jobs on that common path; a distributed-CC or checkpointed-runner
-    # run (whose stage hook re-reads parquet, dropping the attribute)
-    # pays one count. At 10^12 rows a billion-row component map
-    # correctly falls back to the shuffle join.
-    from .operators.scoring import BROADCAST_URL_LIMIT
-
-    n_comp = getattr(rep_comp, "_dedupe_known_rows", None)
-    if n_comp is None:
-        n_comp = comp.count()
-    if n_comp <= BROADCAST_URL_LIMIT:
-        comp = F.broadcast(comp)
-    clusters = (
-        assigned.select("url", "rep_url", "cluster_size")
-        .join(comp, "rep_url", "left")
-        .where((F.col("cluster_size") >= 2) | F.col("component").isNotNull())
-        .select(
-            "url",
-            F.coalesce(F.col("component"), F.col("rep_url")).alias("cluster_id"),
-            F.when(F.col("cluster_size") >= 2, F.lit("exact"))
-            .otherwise(F.lit("near"))
-            .alias("match_kind"),
-        )
-    )
     # deferred lineage: one batched count-and-append over the (already
     # materialized) stage caches — see audit_stage_hook
     flush = getattr(stage, "flush", None)

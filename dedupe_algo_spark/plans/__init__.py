@@ -28,14 +28,6 @@ def pushed_filters(df: DataFrame) -> str:
     )
 
 
-def read_schema(df: DataFrame) -> str:
-    return "\n".join(
-        line.strip()
-        for line in formatted_plan(df).splitlines()
-        if "ReadSchema" in line
-    )
-
-
 def has_whole_stage_codegen(df: DataFrame) -> bool:
     # formatted explain marks codegen stages as "[codegen id : N]"
     return "codegen id" in formatted_plan(df)

@@ -25,7 +25,7 @@ requires a rewrite, as with any bucketed store).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -246,15 +246,6 @@ def incremental_near_candidates(
     )
 
 
-def _token_hashes(text: Column) -> Column:
-    """The pipeline's tier-2 token identity, imported (not copied) from
-    the confirm tier so cross-table and in-pipeline verdicts can never
-    desynchronize."""
-    from ..operators.scoring import token_hash_array
-
-    return token_hash_array(text)
-
-
 def incremental_near_dupes(
     batch: DataFrame,
     corpus_bands: DataFrame,
@@ -272,19 +263,21 @@ def incremental_near_dupes(
     batch's token arrays move once, keyed by batch_url — the day's
     batch is the only payload in motion.
     """
-    from ..operators.scoring import DEFAULT_THRESHOLD
+    from ..operators.scoring import (
+        DEFAULT_THRESHOLD,
+        token_hash_array,
+        token_jaccard_score,
+    )
 
     if threshold is None:
         threshold = DEFAULT_THRESHOLD
     cands = incremental_near_candidates(batch, corpus_bands, min_matches)
     bt = batch.select(
-        F.col("url").alias("batch_url"), _token_hashes(F.col("text")).alias("_ta")
+        F.col("url").alias("batch_url"), token_hash_array(F.col("text")).alias("_ta")
     )
     ct = corpus_text.select(
-        F.col("url").alias("corpus_url"), _token_hashes(F.col("text")).alias("_tb")
+        F.col("url").alias("corpus_url"), token_hash_array(F.col("text")).alias("_tb")
     )
-    from ..operators.scoring import token_jaccard_score
-
     score = token_jaccard_score(F.col("_ta"), F.col("_tb"))
     return (
         cands.join(bt, "batch_url")

@@ -43,6 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return spark.table(f"{ns}.{name}")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}

@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import partial_sha256_col, sha256_col
+from ..functions.hashing import sha256_col
+from ..operators.dedup import page_meta
 from ..schemas import PAGES_SCHEMA
 
 PROGRESS_EVENT_SCHEMA = "ts timestamp, run_id string, stage string, n long"
@@ -66,24 +67,16 @@ def ingest_pages_stream(
     min_len: int = 10,
     options: dict | None = None,
 ) -> DataFrame:
-    """Streaming page ingestion with the batch pipeline's projection:
-    filter + map-side partial/full hash (F5 + C1/C2 as a stream).
+    """Streaming page ingestion with the batch pipeline's projection
+    (``page_meta``): filter + map-side partial/full hash (F5 + C1/C2 as
+    a stream) → (url, warc_ts, text_len, partial_hash, content_sha256).
     ``options`` are file-source options (e.g. ``maxFilesPerTrigger`` to
     bound micro-batch size on a backlogged directory)."""
     reader = spark.readStream.schema(PAGES_SCHEMA)
     if options:
         reader = reader.options(**options)
     raw = reader.parquet(source_dir)
-    return (
-        raw.where(F.length("text") >= min_len)
-        .select(
-            "url",
-            "warc_ts",
-            F.length("text").cast("long").alias("text_len"),
-            partial_sha256_col(F.col("text")).alias("partial_hash"),
-            sha256_col(F.col("text")).alias("content_sha256"),
-        )
-    )
+    return page_meta(raw, min_len=min_len, with_signature=False, with_ts=True)
 
 
 STREAM_DEDUP_OUT = (

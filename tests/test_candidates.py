@@ -298,14 +298,19 @@ def test_confirm_pairs_containment_scorer(spark):
 
 def test_null_text_drops_pair_on_both_paths(spark):
     """NULL text must yield a NULL score (dropped by >= threshold) on
-    both scorer paths: the built-in expressions (jaccard, containment,
-    levenshtein, ngram_jaccard) and the pandas UDFs (jaro_winkler,
-    damerau) — NaN would instead PASS any threshold under Spark's NaN
-    ordering."""
+    every scorer path: the built-in expressions (jaccard, containment,
+    levenshtein, ngram_jaccard), the pandas UDFs (jaro_winkler,
+    damerau) and the corpus scorers (tfidf, weighted_jaccard) — NaN
+    would instead PASS any threshold under Spark's NaN ordering. A
+    half-present pair (u3 is absent from ``pages``) is dropped too,
+    keeping the inner-join contract: on the pair scorers it pivots to a
+    null side in ``pair_value_join``."""
     pages = spark.createDataFrame(
         [("u1", "real words here"), ("u2", None)], "url string, text string"
     )
-    pairs = spark.createDataFrame([("u1", "u2")], "url_a string, url_b string")
+    pairs = spark.createDataFrame(
+        [("u1", "u2"), ("u1", "u3"), ("u3", "u2")], "url_a string, url_b string"
+    )
     for scorer in (
         "jaccard",
         "containment",
@@ -313,6 +318,8 @@ def test_null_text_drops_pair_on_both_paths(spark):
         "ngram_jaccard",
         "jaro_winkler",
         "damerau",
+        "tfidf",
+        "weighted_jaccard",
     ):
         got = confirm_pairs(pairs, pages, 0.0, scorer=scorer).collect()
         assert got == [], scorer
@@ -366,27 +373,3 @@ def test_dropped_buckets_audits_exactly_the_capped_keys(spark):
         for r in dropped_buckets(_buckets(spark, rows), max_bucket=5).collect()
     }
     assert hot == {(1, 10)}
-
-
-def test_estimate_pairs_drops_half_present_pairs(spark):
-    """estimate_pairs keeps the inner-join contract on the melt/pivot
-    path: a pair with a side absent from sigs is DROPPED before
-    scoring (explicit not-null filter — defense-in-depth on top of the
-    estimate UDF's own NULL-never-NaN guarantee, minhash.py:293-297;
-    a NaN leak would pass any gate under Spark's NaN-above-everything
-    ordering)."""
-    from dedupe_algo_spark.operators.scoring import estimate_pairs
-
-    sigs = spark.createDataFrame(
-        [("u1", [1, 2, 3, 4]), ("u2", [1, 2, 3, 4]), ("u4", [9, 9, 9, 9])],
-        "url string, sig array<bigint>",
-    )
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3"), ("u3", "u2"), ("u1", "u4")],
-        "url_a string, url_b string",
-    )
-    got = {
-        (r["url_a"], r["url_b"]): r["est_score"]
-        for r in estimate_pairs(pairs, sigs, gate=0.5).collect()
-    }
-    assert got == {("u1", "u2"): 1.0}  # u3 pairs dropped; (u1,u4) est 0.0 < gate

@@ -226,16 +226,37 @@ def test_normalized_exact_key_merges_cheap_mutations(spark, pages_1k):
     assert a[["url", "cluster_id"]].equals(b[["url", "cluster_id"]])
 
 
-def test_estimate_only_tier2_matches_confirmed_on_synth(spark, pages_1k):
-    """exact_confirm=False gates tier 2 on the 128-perm MinHash-Jaccard
-    estimate instead of the exact token-set confirm. The synth corpus
-    separates dups (J >> threshold) from distractors (J << threshold),
-    so both tiers land the same clusters — the estimate path's softness
-    only shows within ~1/sqrt(128) of the threshold."""
-    base = dedup_pipeline(pages_1k).clusters.orderBy("url").toPandas()
-    est = (
-        dedup_pipeline(pages_1k, exact_confirm=False)
-        .clusters.orderBy("url")
-        .toPandas()
-    )
-    assert base[["url", "cluster_id"]].equals(est[["url", "cluster_id"]])
+def test_traced_pipeline_matches_dedup_pipeline(
+    spark, pages_1k, result, tmp_path, monkeypatch
+):
+    """The benchmark's traced run (perfbench/layertrace.py) rebuilds
+    ``dedup_pipeline`` layer by layer from the package's public
+    functions, so a rename or signature change there must fail here,
+    not only under ``perfbench/run.py --trace 1``. Its clusters equal
+    the pipeline's, with and without a (fresh) memo."""
+    import os
+
+    import pandas as pd
+
+    from dedupe_algo_spark.sources.memo import HashMemo
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.syspath_prepend(os.path.join(root, "perfbench"))
+    import layertrace
+
+    def ordered(pdf):
+        cols = ["url", "cluster_id", "match_kind"]
+        return pdf[cols].sort_values("url").reset_index(drop=True)
+
+    want = ordered(result.clusters.toPandas())
+    sc = spark.sparkContext
+    try:
+        for memo in (None, HashMemo(spark, str(tmp_path / "memo"))):
+            got, _, tracker = layertrace.traced_pipeline(
+                spark, pages_1k, layertrace.Tracer(spark, 0), memo=memo
+            )
+            tracker.release()
+            pd.testing.assert_frame_equal(ordered(got), want)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -144,24 +144,31 @@ def test_pack_sequences_shares_the_shuffle_exchange(spark, pages_1k):
     assert "text" not in exchange_columns(packed)
 
 
-def test_estimate_pairs_single_signature_exchange(spark):
-    # estimate_pairs rides the one-pass melt/pivot join: the 1KB-per-row
-    # signature array must cross exactly ONE shuffle (the slice side of
-    # the url join) — the classic double join moved it in two exchange
-    # children plus re-shuffled _sa through the second join.
-    from dedupe_algo_spark.operators.scoring import estimate_pairs
+def test_confirm_slice_crosses_one_exchange(spark):
+    # confirm_pairs rides the one-pass melt/pivot join: the slice's
+    # token-hash array must cross exactly ONE shuffle (the slice side
+    # of the url join). A double join moves it in two exchange children
+    # (as _ta and _tb) and re-shuffles _ta through the second join.
+    # Auto-broadcast is off so the tiny slice plans as it does at scale.
+    from dedupe_algo_spark.operators.scoring import confirm_pairs
     from dedupe_algo_spark.plans import exchange_column_sets
 
-    sigs = spark.createDataFrame(
-        [("u%d" % i, [i, 2, 3, 4]) for i in range(50)],
-        "url string, sig array<bigint>",
+    pages = spark.createDataFrame(
+        [("u%d" % i, "tok%d a b c d" % i) for i in range(50)],
+        "url string, text string",
     )
     pairs = spark.createDataFrame(
         [("u1", "u2"), ("u3", "u4")], "url_a string, url_b string"
     )
-    per_exchange = exchange_column_sets(estimate_pairs(pairs, sigs, 0.0))
-    sig_exchanges = sum(1 for cols in per_exchange if {"_v", "sig"} & cols)
-    assert sig_exchanges == 1, per_exchange
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        per_exchange = exchange_column_sets(confirm_pairs(pairs, pages, 0.0))
+    finally:
+        spark.conf.set(key, old)
+    token_exchanges = sum(1 for cols in per_exchange if {"_v", "_ta", "_tb"} & cols)
+    assert token_exchanges == 1, per_exchange
 
 
 def test_default_confirm_and_meta_scan_run_no_python(spark):
