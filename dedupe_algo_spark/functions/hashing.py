@@ -1,15 +1,15 @@
-"""Content hashing — the pass-2/pass-3 analog of the reference.
+"""Content hashing — the pass-3 analog of the reference.
 
 Reference: BLAKE3 partial hash of first 16KB + last 16KB (scanner.rs:21-48)
 and full streaming BLAKE3 (scanner.rs:50-68), invoked per-row inside rayon
 parallel maps (lib.rs:83-107,130-152).
 
-Ours: SHA-256, built-in ``F.sha2`` only (JVM-side, whole-stage codegen,
-zero Python). The *partial* (head+tail window) hash is ``sha2`` over a
-``substring`` window, so the window is counted in CHARACTERS, not UTF-8
-bytes: a 20,000-char text of 2-byte characters hashes whole, where a
-byte-windowed hash would cut it. The memo stores these digests, so the
-character window is part of its format.
+Ours: one content hash, SHA-256 over the UTF-8 bytes of the whole text,
+built-in ``F.sha2`` only (JVM-side, whole-stage codegen, zero Python).
+The reference's partial hash is a cheap gate that saves reading file
+bytes for non-candidates; here the text is already in the row, so the
+dedup path has no partial hash. The head+tail view survives only in
+``queries.py``'s pass-2 grouping query, which builds its own window.
 """
 
 from __future__ import annotations
@@ -17,24 +17,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-PARTIAL_WINDOW = 16 * 1024  # reference: 16KB head (+16KB tail if >32KB)
-
 
 def sha256_col(text: Column) -> Column:
     """Full content hash over the UTF-8 bytes, built-in."""
     return F.sha2(text.cast("binary"), 256)
-
-
-def partial_sha256_col(text: Column) -> Column:
-    """Head+tail windowed hash, built-in. Mirrors scanner.rs:33-45 with
-    characters in place of bytes: the first 16K characters, plus the
-    last 16K when the content exceeds 32K characters; empty content →
-    NULL (scanner.rs:30 returns None for empty files)."""
-    n = F.length(text)
-    head = F.substring(text, 1, PARTIAL_WINDOW)
-    tail = F.substring(text, -PARTIAL_WINDOW, PARTIAL_WINDOW)
-    window = F.when(n > 2 * PARTIAL_WINDOW, F.concat(head, tail)).otherwise(text)
-    return F.when(n > 0, F.sha2(window.cast("binary"), 256)).otherwise(F.lit(None))
 
 
 def length_bucket(text: Column) -> Column:

@@ -10,7 +10,7 @@ avoid *reading file bytes* for non-candidates (partial hash reads 32KB,
 full hash reads everything). In Spark the text is already in the row:
 one scan pass computes every per-row artifact map-side —
 
-    (url, text_len, partial_hash, content_sha256, LSH band keys)
+    (url, text_len, content_sha256, LSH band keys)
 
 — and ``text`` itself is dropped before the first shuffle. That is the
 100TB-defining property of this design: **text bytes never shuffle**;
@@ -23,10 +23,9 @@ The cascade's pruning semantics survive as grouping structure:
   its cardinality (~10^4) would put ~10^8 rows behind each key at
   10^12 rows;
 * pass-2/3 analog: one hash-agg on the well-distributed
-  ``(text_len, content_sha256)`` key; partial hashes are still computed
-  (memo table parity, cache.rs:19-25) but no longer gate a separate
-  pass — with the bytes in hand, SHA-256 over the full text costs the
-  same scan either way.
+  ``(text_len, content_sha256)`` key. There is no partial hash: the
+  reference's pass 2 is a gate that saves reading file bytes, and with
+  the bytes in hand one SHA-256 over the full text costs the same scan.
 
 Hashes are built-in ``sha2`` (JVM, whole-stage codegen); no Python
 runs on the exact path.
@@ -34,11 +33,21 @@ runs on the exact path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import normalized_for_dedup, partial_sha256_col, sha256_col
+from ..functions.hashing import normalized_for_dedup, sha256_col
 from ..functions.minhash import minhash_band_keys_udf
+
+
+def _keyed_text(exact_key: str) -> Column:
+    """The text view the exact tier measures and hashes (see
+    :func:`page_meta`'s ``exact_key``)."""
+    if exact_key == "raw":
+        return F.col("text")
+    if exact_key == "normalized":
+        return normalized_for_dedup(F.col("text"))
+    raise ValueError(f"unknown exact_key {exact_key!r}")
 
 
 def page_meta(
@@ -55,26 +64,19 @@ def page_meta(
     all the near-dup path needs to gate on band collisions; ``with_ts``
     carries ``warc_ts`` (the streaming ingest's projection).
 
-    ``exact_key="normalized"`` keys the whole exact cascade (size
-    bucket, partial hash, full hash) on the CCNet-style normalized view
-    of the text (:func:`~..functions.hashing.normalized_for_dedup`) —
+    ``exact_key="normalized"`` keys the exact tier (``text_len`` and
+    ``content_sha256``) on the CCNet-style normalized view of the text
+    (:func:`~..functions.hashing.normalized_for_dedup`) —
     casing/punctuation/whitespace/counter mutations then land in one
     exact cluster instead of leaking to the near tier. Still one
     codegen scan pass; the raw text is untouched (byte-identity
     invariant) and still never shuffles. Identical raw texts always
     normalize identically, so normalized-mode clusters are a coarsening
     of raw-mode clusters, never a split."""
-    keyed = (
-        normalized_for_dedup(F.col("text"))
-        if exact_key == "normalized"
-        else F.col("text")
-    )
-    if exact_key not in ("raw", "normalized"):
-        raise ValueError(f"unknown exact_key {exact_key!r}")
+    keyed = _keyed_text(exact_key)
     cols = [
         F.col("url"),
         F.length(keyed).cast("long").alias("text_len"),
-        partial_sha256_col(keyed).alias("partial_hash"),
         sha256_col(keyed).alias("content_sha256"),
     ]
     if with_ts:
@@ -93,17 +95,17 @@ def page_meta_incremental(
 ) -> DataFrame:
     """Incremental variant of ``page_meta`` — the reference's cache fast
     path (lib.rs:83-107,130-152): rows whose (url, text_len, warc_ts)
-    match a memo entry REUSE the stored hashes; stale or unseen rows
-    compute them. ``exact_key`` mirrors :func:`page_meta`; a memo must
+    match a memo entry REUSE the stored content hash; stale or unseen
+    rows compute it. ``exact_key`` mirrors :func:`page_meta`; a memo must
     be written and read under the SAME mode (the published text_len and
-    hashes — the memo's validity key and payload — are both functions
+    hash — the memo's validity key and payload — are both functions
     of the chosen key view, so mixing modes would reuse raw hashes in a
-    normalized run or vice versa). Shape: each hash is
+    normalized run or vice versa). Shape: the hash is
     ``coalesce(reused, computed)``, so the *published* value prefers the
     memoized one and downstream grouping keys are stable across runs
     even if the hash function version changes. The generated code
     evaluates ``coalesce`` lazily: on a memo hit it skips the SHA-256
-    digests of that row, so only stale or unseen rows pay for hashing.
+    digest of that row, so only stale or unseen rows pay for hashing.
     Band keys (``with_signature``) are computed for every row.
 
     Returns the same schema as ``page_meta`` (+ warc_ts) plus a
@@ -111,13 +113,7 @@ def page_meta_incremental(
     """
     from ..sources.memo import validity_join
 
-    if exact_key not in ("raw", "normalized"):
-        raise ValueError(f"unknown exact_key {exact_key!r}")
-    keyed = (
-        normalized_for_dedup(F.col("text"))
-        if exact_key == "normalized"
-        else F.col("text")
-    )
+    keyed = _keyed_text(exact_key)
     base = pages.where(F.length("text") >= min_len).select(
         "url",
         "warc_ts",
@@ -129,9 +125,6 @@ def page_meta_incremental(
         F.col("url"),
         F.col("warc_ts"),
         F.col("text_len"),
-        F.coalesce(F.col("reused_partial"), partial_sha256_col(keyed)).alias(
-            "partial_hash"
-        ),
         F.coalesce(F.col("reused_sha256"), sha256_col(keyed)).alias(
             "content_sha256"
         ),
@@ -151,6 +144,21 @@ def assign_exact(meta: DataFrame) -> DataFrame:
     )
 
 
+def exact_view(assigned: DataFrame, keep_singletons: bool = False) -> DataFrame:
+    """``assign_exact`` output → (url, text_len, content_sha256,
+    cluster_size, cluster_id), exact-duplicate rows only unless
+    ``keep_singletons``."""
+    if not keep_singletons:
+        assigned = assigned.where(F.col("cluster_size") >= 2)
+    return assigned.select(
+        "url",
+        "text_len",
+        "content_sha256",
+        "cluster_size",
+        F.col("rep_url").alias("cluster_id"),
+    )
+
+
 def exact_dup_assignments(
     pages: DataFrame,
     min_len: int = 10,
@@ -162,16 +170,7 @@ def exact_dup_assignments(
     deterministic under any row order.
     """
     meta = page_meta(pages, min_len=min_len, with_signature=False)
-    out = assign_exact(meta).select(
-        "url",
-        "text_len",
-        "content_sha256",
-        "cluster_size",
-        F.col("rep_url").alias("cluster_id"),
-    )
-    if not keep_singletons:
-        out = out.where(F.col("cluster_size") >= 2)
-    return out
+    return exact_view(assign_exact(meta), keep_singletons=keep_singletons)
 
 
 def exact_dup_groups(pages: DataFrame, min_len: int = 10) -> DataFrame:

@@ -4,7 +4,7 @@ Reference lifecycle (SURVEY.md §3.1, lib.rs:30-182) re-designed for
 Spark:
 
     pages (scan, read ONCE)
-      → page_meta: map-side (url, len, partial, sha256, LSH band keys);
+      → page_meta: map-side (url, len, sha256, LSH band keys);
         text dropped before any shuffle               (passes 1-3 compute)
       → exact grouping on (len, sha256)               (1 slim shuffle)
       → collapse to one representative per text       (scale lever)
@@ -40,7 +40,12 @@ from .operators.candidates import (
     candidate_pairs,
 )
 from .operators.cluster import connected_components
-from .operators.dedup import assign_exact, page_meta, page_meta_incremental
+from .operators.dedup import (
+    assign_exact,
+    exact_view,
+    page_meta,
+    page_meta_incremental,
+)
 from .operators.scoring import (
     BROADCAST_URL_LIMIT,
     DEFAULT_MIN_BAND_MATCHES,
@@ -73,8 +78,8 @@ class DedupResult:
             self.tracker.release(blocking)
 
     def commit_memo(self) -> None:
-        """Upsert this run's (url, len, ts, hashes) into the memo — the
-        reference's post-scan cache write (lib.rs:142-147, COALESCE
+        """Upsert this run's (url, len, ts, content hash) into the memo —
+        the reference's post-scan cache write (lib.rs:142-147, COALESCE
         keep-old semantics via HashMemo.upsert). Call AFTER the cluster
         outputs are consumed/committed, so a failed run never publishes
         hashes for results that were never produced; the next run then
@@ -151,9 +156,9 @@ def dedup_pipeline(
     only merge, never split, under it. A ``memo`` must have been
     written under the same ``exact_key`` mode.
     ``memo`` (a :class:`~dedupe_algo_spark.sources.memo.HashMemo`)
-    switches the meta scan to the incremental path: hashes memoized
-    under a matching (url, text_len, warc_ts) are REUSED instead of
-    recomputed (the reference's cache fast path, lib.rs:83-107), and
+    switches the meta scan to the incremental path: a content hash
+    memoized under a matching (url, text_len, warc_ts) is REUSED instead
+    of recomputed (the reference's cache fast path, lib.rs:83-107), and
     ``DedupResult.commit_memo()`` upserts this run's hashes back after
     the outputs are committed. Published hash values are identical
     either way, so warm and cold runs produce identical clusters.
@@ -177,13 +182,7 @@ def dedup_pipeline(
     # view, star edges, rep band keys, final cluster join) — without
     # this the 200MB window shuffle re-runs per consumer
     assigned = tracker.persist(assign_exact(meta))
-    exact_dups = assigned.where(F.col("cluster_size") >= 2).select(
-        "url",
-        "text_len",
-        "content_sha256",
-        "cluster_size",
-        F.col("rep_url").alias("cluster_id"),
-    )
+    exact_dups = exact_view(assigned)
 
     # Star edges url→representative (linear in members, never quadratic).
     exact_edges = (

@@ -51,7 +51,6 @@ MEMO_SCHEMA = StructType(
         StructField("url", StringType(), nullable=False),
         StructField("text_len", LongType(), nullable=False),
         StructField("warc_ts", TimestampType(), nullable=False),
-        StructField("partial_hash", StringType(), nullable=True),
         StructField("content_sha256", StringType(), nullable=True),
     ]
 )

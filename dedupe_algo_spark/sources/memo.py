@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 from ..schemas import MEMO_SCHEMA
 
 MEMO_KEY = "url"
-VALIDITY = ["text_len", "warc_ts"]
-HASHES = ["partial_hash", "content_sha256"]
 
 MANIFEST = "MANIFEST.json"
 
@@ -47,10 +45,10 @@ class HashMemo:
     same statement is a ``MERGE INTO`` against a table partitioned the
     same way (the manifest swap = the snapshot commit).
 
-    Legacy layouts (a pre-manifest flat or ``shard=k``-partitioned
-    parquet dir) are detected and migrated in place on first upsert:
-    every shard is treated as touched once, after which the memo is
-    manifested."""
+    The manifest is the only read path: a memo without one reads as
+    empty. It is a cache, so that costs one cold scan, never a wrong
+    hash; the first upsert commits a manifest and collects whatever
+    files were there before."""
 
     def __init__(self, spark: SparkSession, path: str, n_shards: int = 16):
         self.spark = spark
@@ -80,7 +78,7 @@ class HashMemo:
     def _gc(self, manifest: dict) -> None:
         """Remove everything under ``path`` not referenced by the
         committed manifest (replaced shard versions, crash orphans,
-        migrated legacy files)."""
+        files from before the first manifest)."""
         keep = set(manifest["shards"].values()) | {MANIFEST}
         for entry in os.listdir(self.path):
             if entry in keep:
@@ -103,41 +101,17 @@ class HashMemo:
         return self.spark.createDataFrame([], MEMO_SCHEMA)
 
     def read(self, shards: "list[int] | None" = None) -> DataFrame:
-        manifest = self._load_manifest()
-        if manifest is not None:
-            dirs = [
-                os.path.join(self.path, d)
-                for k, d in manifest["shards"].items()
-                if shards is None or int(k) in shards
-            ]
-            if not dirs:
-                return self._empty()
-            return self.spark.read.parquet(*dirs).select(
-                *MEMO_SCHEMA.fieldNames()
-            )
-        if os.path.exists(self.path):  # legacy flat / shard= layout
-            # ignore hidden entries (staged-but-uncommitted shard dirs,
-            # _SUCCESS) and manifest leftovers (a crash inside
-            # _commit_manifest — after the MANIFEST.json.tmp-* write,
-            # before os.replace — leaves a visible tmp file but no data):
-            # a crashed first-ever upsert must read as the previous
-            # (empty) state, not raise on a data-less parquet read
-            visible = [
-                e
-                for e in os.listdir(self.path)
-                if not e.startswith((".", "_", MANIFEST))
-            ]
-            if not visible:
-                return self._empty()
-            df = self.spark.read.parquet(self.path).select(
-                *MEMO_SCHEMA.fieldNames()
-            )
-            if shards is not None:
-                df = self._sharded(df).where(F.col("shard").isin(shards)).drop(
-                    "shard"
-                )
-            return df
-        return self._empty()
+        """The committed rows (of ``shards`` only, when given). Columns
+        beyond ``MEMO_SCHEMA`` in older shards are ignored."""
+        manifest = self._load_manifest() or {"shards": {}}
+        dirs = [
+            os.path.join(self.path, d)
+            for k, d in manifest["shards"].items()
+            if shards is None or int(k) in shards
+        ]
+        if not dirs:
+            return self._empty()
+        return self.spark.read.parquet(*dirs).select(*MEMO_SCHEMA.fieldNames())
 
     # -- upsert ---------------------------------------------------------
 
@@ -149,7 +123,6 @@ class HashMemo:
         never opened, and the swap of all touched shards is one atomic
         manifest replace."""
         manifest = self._load_manifest()
-        legacy = manifest is None and os.path.exists(self.path)
         if manifest is not None:
             # adopt the committed shard count BEFORE computing any shard
             # column: a memo committed with n_shards=4 reopened with the
@@ -159,13 +132,7 @@ class HashMemo:
         else:
             manifest = {"n_shards": self.n_shards, "shards": {}}
         u = self._sharded(updates.select(*MEMO_SCHEMA.fieldNames()))
-        if legacy:
-            # one full rewrite migrates the pre-manifest layout
-            touched = list(range(self.n_shards))
-        else:
-            touched = sorted(
-                r["shard"] for r in u.select("shard").distinct().collect()
-            )
+        touched = sorted(r["shard"] for r in u.select("shard").distinct().collect())
         cur = self.read(shards=touched)
         merged = (
             u.drop("shard")
@@ -175,9 +142,6 @@ class HashMemo:
                 F.col(MEMO_KEY),
                 F.coalesce(F.col("n.text_len"), F.col("o.text_len")).alias("text_len"),
                 F.coalesce(F.col("n.warc_ts"), F.col("o.warc_ts")).alias("warc_ts"),
-                F.coalesce(F.col("n.partial_hash"), F.col("o.partial_hash")).alias(
-                    "partial_hash"
-                ),
                 F.coalesce(
                     F.col("n.content_sha256"), F.col("o.content_sha256")
                 ).alias("content_sha256"),
@@ -190,11 +154,8 @@ class HashMemo:
         new_shards = dict(manifest["shards"])
         for k in touched:
             src = os.path.join(tmp, f"shard={k}")
-            # dot-prefixed: Spark's file listing skips hidden entries, so
-            # staged-but-uncommitted shards are invisible to the legacy
-            # (manifest-less) read path — a crash between staging and the
-            # manifest commit can never surface uncommitted rows or break
-            # partition discovery on a pre-manifest layout
+            # a staged shard is invisible until the manifest names it, so
+            # a crash between staging and the commit surfaces no rows
             staged = f".shard-{k}-{txn}"
             if os.path.exists(src):
                 os.rename(src, os.path.join(self.path, staged))
@@ -213,15 +174,14 @@ class HashMemo:
 
 
 def validity_join(pages_meta: DataFrame, memo: DataFrame) -> DataFrame:
-    """J1 — left join pages↔memo on url; a memoized hash is ``reused_*``
-    only when text_len AND warc_ts both match (stale ⇒ null ⇒ caller
-    recomputes). Mirrors lib.rs:97-105. ``pages_meta`` needs
-    (url, text_len, warc_ts)."""
+    """J1 — left join pages↔memo on url; the memoized content hash is
+    ``reused_sha256`` only when text_len AND warc_ts both match (stale ⇒
+    null ⇒ caller recomputes). Mirrors lib.rs:97-105. ``pages_meta``
+    needs (url, text_len, warc_ts)."""
     m = memo.select(
         F.col("url"),
         F.col("text_len").alias("m_len"),
         F.col("warc_ts").alias("m_ts"),
-        F.col("partial_hash").alias("m_partial"),
         F.col("content_sha256").alias("m_sha"),
     )
     valid = (F.col("text_len") == F.col("m_len")) & (
@@ -229,7 +189,6 @@ def validity_join(pages_meta: DataFrame, memo: DataFrame) -> DataFrame:
     )
     return (
         pages_meta.join(m, "url", "left")
-        .withColumn("reused_partial", F.when(valid, F.col("m_partial")))
         .withColumn("reused_sha256", F.when(valid, F.col("m_sha")))
-        .drop("m_len", "m_ts", "m_partial", "m_sha")
+        .drop("m_len", "m_ts", "m_sha")
     )

@@ -68,8 +68,8 @@ def ingest_pages_stream(
     options: dict | None = None,
 ) -> DataFrame:
     """Streaming page ingestion with the batch pipeline's projection
-    (``page_meta``): filter + map-side partial/full hash (F5 + C1/C2 as
-    a stream) → (url, warc_ts, text_len, partial_hash, content_sha256).
+    (``page_meta``): filter + map-side content hash (F5 + C2 as a
+    stream) → (url, warc_ts, text_len, content_sha256).
     ``options`` are file-source options (e.g. ``maxFilesPerTrigger`` to
     bound micro-batch size on a backlogged directory)."""
     reader = spark.readStream.schema(PAGES_SCHEMA)

@@ -64,11 +64,10 @@ import json
 def build_index(spark, corpus, name: str, location: str, buckets: int = 64) -> None:
     from pyspark.sql import functions as F
 
+    from dedupe_algo_spark.functions.hashing import sha256_col
     from dedupe_algo_spark.sources.bucketed import write_bucketed, write_near_index
 
-    hashes = corpus.select(
-        F.sha2(F.col("text"), 256).alias("content_sha256"), "url"
-    )
+    hashes = corpus.select(sha256_col(F.col("text")).alias("content_sha256"), "url")
     write_bucketed(
         hashes,
         f"{name}_hashes",
@@ -96,6 +95,7 @@ def probe_batch(
     probing from a fresh session without a shared catalog."""
     from pyspark.sql import functions as F
 
+    from dedupe_algo_spark.functions.hashing import sha256_col
     from dedupe_algo_spark.sources.bucketed import (
         incremental_near_dupes,
         read_bucketed,
@@ -120,9 +120,7 @@ def probe_batch(
     # hashed and near each feed two of the three outputs — persist so
     # the sha256 scan and the (expensive) MinHash probe run once, not
     # once per consumer (same PersistTracker discipline as prepare())
-    hashed = batch.withColumn(
-        "content_sha256", F.sha2(F.col("text"), 256)
-    ).persist()
+    hashed = batch.withColumn("content_sha256", sha256_col(F.col("text"))).persist()
     exact = hashed.join(
         hashes.select("content_sha256", F.col("url").alias("corpus_url")),
         "content_sha256",
@@ -173,15 +171,14 @@ def screen_batch(spark, batch, corpus, fpp: float = 1e-3):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from dedupe_algo_spark.functions.hashing import sha256_col
     from dedupe_algo_spark.operators.membership import build_key_bloom
 
-    hashed = batch.withColumn(
-        "content_sha256", F.sha2(F.col("text"), 256)
-    ).persist()
+    hashed = batch.withColumn("content_sha256", sha256_col(F.col("text"))).persist()
     bloom = build_key_bloom(hashed, "content_sha256", fpp=fpp)
     gated = bloom.gate(
         corpus.select(
-            F.sha2(F.col("text"), 256).alias("content_sha256"),
+            sha256_col(F.col("text")).alias("content_sha256"),
             F.col("url").alias("corpus_url"),
         ),
         "content_sha256",

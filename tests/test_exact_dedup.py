@@ -61,13 +61,14 @@ def test_singletons_excluded_by_default(spark):
 
 
 def test_same_length_different_text_not_clustered(spark):
-    # two texts, same length, same partial-hash block candidate set
+    # two texts of the same length: the size key alone never clusters
     df = _mk(spark, ["a" * 100, "b" * 100])
     assert exact_dup_assignments(df).count() == 0
 
 
 def test_partial_window_boundary(spark):
-    # same 16KB head+tail, different middle → partial collides, full differs
+    # same 16KB head+tail, different middle: the reference's partial
+    # hash would collide, the full content hash separates them
     head, tail = "h" * 20_000, "t" * 20_000
     a, b = head + "MIDDLE_A" + tail, head + "MIDDLE_B" + tail
     df = _mk(spark, [a, b])
@@ -85,25 +86,15 @@ def test_grouped_view_shape(spark, pages_1k):
 
 
 def test_page_meta_hashes_match_hashlib(spark):
-    """content_sha256 is SHA-256 of the UTF-8 text; partial_hash is
-    SHA-256 of the first + last 16K CHARACTERS once the text exceeds
-    32K characters, NULL for empty text. The window counts characters,
-    not bytes: 20,000 two-byte characters (40,000 bytes) hash whole.
-    The memo stores these digests, so this pins its format."""
+    """content_sha256 is SHA-256 of the UTF-8 text and text_len its
+    length in characters, on empty, ASCII, multi-byte and mixed-width
+    texts. The memo stores this digest, so this pins its format."""
     import hashlib
 
-    from dedupe_algo_spark.functions.hashing import PARTIAL_WINDOW
     from dedupe_algo_spark.operators.dedup import page_meta
 
     def sha(t):
         return hashlib.sha256(t.encode("utf-8")).hexdigest()
-
-    def partial(t):
-        if not t:
-            return None
-        if len(t) > 2 * PARTIAL_WINDOW:
-            t = t[:PARTIAL_WINDOW] + t[-PARTIAL_WINDOW:]
-        return sha(t)
 
     texts = [
         "",
@@ -123,10 +114,6 @@ def test_page_meta_hashes_match_hashlib(spark):
         r = got[f"https://x.com/{i}"]
         assert r["text_len"] == len(t), i
         assert r["content_sha256"] == sha(t), i
-        assert r["partial_hash"] == partial(t), i
-    assert got["https://x.com/0"]["partial_hash"] is None
-    # whole text, where a 16KiB byte window would have cut it
-    assert got["https://x.com/3"]["partial_hash"] == sha("é" * 20_000)
 
 
 def test_normalized_key_collapses_cheap_mutations(spark):

@@ -18,7 +18,7 @@ def test_memo_reuse_and_stale_recompute(spark, pages_1k, tmp_path):
     )
     memo = HashMemo(spark, str(tmp_path / "memo"))
     memo.upsert(
-        cold.select("url", "text_len", "warc_ts", "partial_hash", "content_sha256")
+        cold.select("url", "text_len", "warc_ts", "content_sha256")
     )
 
     # Poison valid memo entries with a sentinel hash: if the warm run
@@ -50,7 +50,7 @@ def test_incremental_equals_cold_on_empty_memo(spark, pages_1k):
     empty = spark.createDataFrame([], MEMO_SCHEMA)
     warm = page_meta_incremental(pages_1k, empty, with_signature=False)
     cold = page_meta(pages_1k, with_signature=False)
-    a = warm.select("url", "text_len", "partial_hash", "content_sha256").orderBy("url").toPandas()
+    a = warm.select("url", "text_len", "content_sha256").orderBy("url").toPandas()
     b = cold.orderBy("url").toPandas()
     assert a.equals(b)
     assert warm.where(F.col("cache_hit")).count() == 0

@@ -63,6 +63,14 @@ def test_probe_reregisters_index_from_location(spark, tmp_path):
     )
     loc = str(tmp_path / "seen")
     build_index(spark, corpus, "inc_rereg_idx", loc, buckets=4)
+    # the index keys on the pipeline's content hash, digest for digest
+    from dedupe_algo_spark.operators.dedup import page_meta
+
+    indexed = spark.read.parquet(f"{loc}_hashes").collect()
+    meta = page_meta(corpus, min_len=0, with_signature=False).collect()
+    assert {(r["url"], r["content_sha256"]) for r in indexed} == {
+        (r["url"], r["content_sha256"]) for r in meta
+    }
     # simulate the fresh session: catalog forgets, files remain
     for t in ("inc_rereg_idx_hashes", "inc_rereg_idx_bands", "inc_rereg_idx_text"):
         spark.sql(f"DROP TABLE {t}")

@@ -7,6 +7,7 @@ import datetime
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from dedupe_algo_spark.schemas import MEMO_SCHEMA
 from dedupe_algo_spark.sources.memo import HashMemo, validity_join
@@ -25,9 +26,9 @@ def test_validity_join_hit_and_stale(spark):
     memo = _memo_df(
         spark,
         [
-            ("u1", 100, T1, "p1", "s1"),  # valid
-            ("u2", 100, T1, "p2", "s2"),  # stale ts below
-            ("u3", 100, T1, "p3", "s3"),  # stale len below
+            ("u1", 100, T1, "s1"),  # valid
+            ("u2", 100, T1, "s2"),  # stale ts below
+            ("u3", 100, T1, "s3"),  # stale len below
         ],
     )
     pages = spark.createDataFrame(
@@ -43,18 +44,18 @@ def test_validity_join_hit_and_stale(spark):
 
 def test_upsert_coalesce_never_nulls_a_hash(spark, tmp_path):
     memo = HashMemo(spark, str(tmp_path / "memo"))
-    memo.upsert(_memo_df(spark, [("u1", 100, T1, "p1", "s1")]))
-    # new row with null hashes must keep old hashes (cache.rs:69-70)
-    memo.upsert(_memo_df(spark, [("u1", 100, T2, None, None)]))
+    memo.upsert(_memo_df(spark, [("u1", 100, T1, "s1")]))
+    # new row with a null hash must keep the old hash (cache.rs:69-70)
+    memo.upsert(_memo_df(spark, [("u1", 100, T2, None)]))
     row = memo.read().collect()[0]
-    assert row["partial_hash"] == "p1" and row["content_sha256"] == "s1"
+    assert row["content_sha256"] == "s1"
     assert row["warc_ts"] == T2  # metadata updated
 
 
 def test_upsert_inserts_and_updates(spark, tmp_path):
     memo = HashMemo(spark, str(tmp_path / "memo"))
-    memo.upsert(_memo_df(spark, [("u1", 1, T1, "p1", "s1")]))
-    memo.upsert(_memo_df(spark, [("u2", 2, T1, "p2", "s2"), ("u1", 1, T1, "px", "sx")]))
+    memo.upsert(_memo_df(spark, [("u1", 1, T1, "s1")]))
+    memo.upsert(_memo_df(spark, [("u2", 2, T1, "s2"), ("u1", 1, T1, "sx")]))
     rows = {r["url"]: r for r in memo.read().collect()}
     assert set(rows) == {"u1", "u2"}
     assert rows["u1"]["content_sha256"] == "sx"  # non-null new wins
@@ -63,18 +64,18 @@ def test_upsert_inserts_and_updates(spark, tmp_path):
 def test_upsert_touches_only_affected_shards(spark, tmp_path):
     path = str(tmp_path / "memo")
     memo = HashMemo(spark, path, n_shards=8)
-    seed = [(f"u{i}", i, T1, f"p{i}", f"s{i}") for i in range(64)]
+    seed = [(f"u{i}", i, T1, f"s{i}") for i in range(64)]
     memo.upsert(_memo_df(spark, seed))
 
     before = memo._load_manifest()["shards"]
     assert len(before) > 1  # keys actually spread
-    memo.upsert(_memo_df(spark, [("u1", 1, T2, "px", None)]))
+    memo.upsert(_memo_df(spark, [("u1", 1, T2, None)]))
     after = memo._load_manifest()["shards"]
     changed = [k for k in after if before.get(k) != after[k]]
     assert len(changed) == 1  # one key -> exactly one shard version bumped
     rows = {r["url"]: r for r in memo.read().collect()}
     assert len(rows) == 64
-    assert rows["u1"]["partial_hash"] == "px"
+    assert rows["u1"]["warc_ts"] == T2
     assert rows["u1"]["content_sha256"] == "s1"  # COALESCE kept across shard rewrite
 
 
@@ -87,21 +88,21 @@ def test_crashed_upsert_leaves_state_intact(spark, tmp_path, monkeypatch):
 
     path = str(tmp_path / "memo")
     memo = HashMemo(spark, path, n_shards=4)
-    memo.upsert(_memo_df(spark, [(f"u{i}", i, T1, f"p{i}", f"s{i}") for i in range(16)]))
+    memo.upsert(_memo_df(spark, [(f"u{i}", i, T1, f"s{i}") for i in range(16)]))
 
     def boom(manifest):
         raise RuntimeError("crash before commit")
 
     monkeypatch.setattr(memo, "_commit_manifest", boom)
     with pytest.raises(RuntimeError):
-        memo.upsert(_memo_df(spark, [("u1", 1, T2, "px", None)]))
+        memo.upsert(_memo_df(spark, [("u1", 1, T2, None)]))
     monkeypatch.undo()
     rows = {r["url"]: r for r in memo.read().collect()}
     assert len(rows) == 16 and rows["u1"]["warc_ts"] == T1  # old state
     orphans = [d for d in os.listdir(path) if d.startswith(".shard-")]
     assert len(orphans) > len(memo._load_manifest()["shards"])  # staged junk
 
-    memo.upsert(_memo_df(spark, [("u1", 1, T2, "px", None)]))
+    memo.upsert(_memo_df(spark, [("u1", 1, T2, None)]))
     rows = {r["url"]: r for r in memo.read().collect()}
     assert rows["u1"]["warc_ts"] == T2 and rows["u1"]["content_sha256"] == "s1"
     live = set(memo._load_manifest()["shards"].values())
@@ -109,22 +110,150 @@ def test_crashed_upsert_leaves_state_intact(spark, tmp_path, monkeypatch):
     assert on_disk == live  # orphans collected
 
 
-def test_legacy_unsharded_layout_migrates(spark, tmp_path):
-    """An upsert against a pre-manifest flat parquet memo must adopt it
-    (full one-time rewrite), not fail on the missing shard column."""
+def _write_five_column_memo(memo, rows):
+    """Commit ``rows`` (url, text_len, warc_ts, partial_hash,
+    content_sha256) the way memos were written before the memo dropped
+    its partial hash: one parquet file per ``.shard-<k>-<txn>`` dir with
+    the fifth column, and a MANIFEST.json naming the dirs."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    urls = memo.spark.createDataFrame([(r[0],) for r in rows], "url string")
+    shard_of = {r["url"]: r["shard"] for r in memo._sharded(urls).collect()}
+    shards = {}
+    for k in sorted(set(shard_of.values())):
+        part = [r for r in rows if shard_of[r[0]] == k]
+        name = f".shard-{k}-old00000"
+        os.makedirs(os.path.join(memo.path, name))
+        table = pa.table(
+            {
+                "url": [r[0] for r in part],
+                "text_len": pa.array([r[1] for r in part], pa.int64()),
+                "warc_ts": pa.array(
+                    [int(r[2].timestamp() * 1_000_000) for r in part],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "partial_hash": [r[3] for r in part],
+                "content_sha256": [r[4] for r in part],
+            }
+        )
+        pq.write_table(table, os.path.join(memo.path, name, "part-0.parquet"))
+        shards[str(k)] = name
+    with open(os.path.join(memo.path, "MANIFEST.json"), "w") as f:
+        json.dump({"n_shards": memo.n_shards, "shards": shards}, f)
+
+
+def test_five_column_manifested_memo_still_works(spark, tmp_path):
+    """A memo committed with the extra partial_hash column reads as
+    MEMO_SCHEMA, and upserts against it keep COALESCE keep-old on
+    content_sha256 while old 5-column and rewritten 4-column shards sit
+    side by side."""
+    import os
+
+    import pyarrow.parquet as pq
+
     path = str(tmp_path / "memo")
-    _memo_df(spark, [("u1", 1, T1, "p1", "s1"), ("u2", 2, T1, "p2", "s2")]).write.parquet(path)
     memo = HashMemo(spark, path, n_shards=4)
-    memo.upsert(_memo_df(spark, [("u1", 1, T2, None, None), ("u3", 3, T1, "p3", "s3")]))
+    _write_five_column_memo(
+        memo, [(f"u{i}", i, T1, f"p{i}", f"s{i}") for i in range(16)]
+    )
+    first = memo.read()
+    assert first.columns == MEMO_SCHEMA.fieldNames()
+    assert {r["url"]: r["content_sha256"] for r in first.collect()} == {
+        f"u{i}": f"s{i}" for i in range(16)
+    }
+
+    before = memo._load_manifest()["shards"]
+    memo.upsert(_memo_df(spark, [("u1", 1, T2, None)]))
+    after = memo._load_manifest()["shards"]
+    changed = [k for k in after if before[k] != after[k]]
+    assert len(changed) == 1
+
+    def columns(k):
+        d = os.path.join(path, after[k])
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        return {c for f in files for c in pq.read_schema(os.path.join(d, f)).names}
+
+    assert "partial_hash" not in columns(changed[0])
+    assert all("partial_hash" in columns(k) for k in after if k not in changed)
+
+    memo.upsert(_memo_df(spark, [("u2", 2, T2, "sx"), ("u20", 20, T1, "s20")]))
     rows = {r["url"]: r for r in memo.read().collect()}
-    assert set(rows) == {"u1", "u2", "u3"}
+    assert len(rows) == 17
     assert rows["u1"]["content_sha256"] == "s1" and rows["u1"]["warc_ts"] == T2
-    assert memo._load_manifest() is not None  # now manifested
+    assert rows["u2"]["content_sha256"] == "sx"  # non-null new wins
+    assert rows["u20"]["content_sha256"] == "s20"
+    for i in range(3, 16):
+        assert (rows[f"u{i}"]["warc_ts"], rows[f"u{i}"]["content_sha256"]) == (
+            T1,
+            f"s{i}",
+        )
+
+
+def test_pre_manifest_memo_reads_as_empty(spark, pages_1k, tmp_path):
+    """A flat parquet memo with no MANIFEST.json is not read: the memo
+    run computes every hash and clusters as a memo-less run does, even
+    though the flat rows carry valid (text_len, warc_ts) and wrong
+    hashes; commit_memo then leaves a manifested memo holding only this
+    run's rows."""
+    import os
+
+    from dedupe_algo_spark.operators.dedup import page_meta
+    from dedupe_algo_spark.pipeline import dedup_pipeline
+
+    path = str(tmp_path / "memo")
+    flat = (
+        page_meta(pages_1k, with_signature=False)
+        .join(pages_1k.select("url", "warc_ts"), "url")
+        .select(
+            "url",
+            "text_len",
+            "warc_ts",
+            F.lit("p").alias("partial_hash"),
+            F.lit("SENTINEL").alias("content_sha256"),
+        )
+        .unionByName(
+            _memo_df(spark, [("https://gone.example/x", 50, T1, "s")]).withColumn(
+                "partial_hash", F.lit("p")
+            )
+        )
+    )
+    flat.write.parquet(path)
+    memo = HashMemo(spark, path, n_shards=4)
+    assert memo.read().count() == 0
+
+    def triples(res):
+        return {
+            (r["url"], r["cluster_id"], r["match_kind"])
+            for r in res.clusters.collect()
+        }
+
+    plain = dedup_pipeline(pages_1k)
+    expected = triples(plain)
+    plain.unpersist()
+    res = dedup_pipeline(pages_1k, memo=memo)
+    assert triples(res) == expected
+    assert res.meta.where(F.col("cache_hit")).count() == 0
+    run_rows = {
+        (r["url"], r["content_sha256"]) for r in res.meta.collect()
+    }
+    res.commit_memo()
+    res.unpersist()
+
+    manifest = memo._load_manifest()
+    assert manifest is not None
+    assert {(r["url"], r["content_sha256"]) for r in memo.read().collect()} == run_rows
+    assert set(os.listdir(path)) == set(manifest["shards"].values()) | {
+        "MANIFEST.json"
+    }
 
 
 def test_clear(spark, tmp_path):
     memo = HashMemo(spark, str(tmp_path / "memo"))
-    memo.upsert(_memo_df(spark, [("u1", 1, T1, "p", "s")]))
+    memo.upsert(_memo_df(spark, [("u1", 1, T1, "s")]))
     memo.clear()
     assert memo.read().count() == 0
 
@@ -135,18 +264,17 @@ def test_reopen_adopts_committed_shard_count(spark, tmp_path):
     manifest swap have to agree or updates silently vanish."""
     path = str(tmp_path / "memo")
     HashMemo(spark, path, n_shards=4).upsert(
-        _memo_df(spark, [(f"u{i}", i, T1, f"p{i}", f"s{i}") for i in range(16)])
+        _memo_df(spark, [(f"u{i}", i, T1, f"s{i}") for i in range(16)])
     )
     memo = HashMemo(spark, path)  # default n_shards=16
     memo.upsert(
-        _memo_df(spark, [(f"u{i}", i, T2, f"q{i}", None) for i in range(16)])
+        _memo_df(spark, [(f"u{i}", i, T2, None) for i in range(16)])
     )
     assert memo.n_shards == 4
     rows = {r["url"]: r for r in memo.read().collect()}
     assert len(rows) == 16
     for i in range(16):
         assert rows[f"u{i}"]["warc_ts"] == T2  # every update landed
-        assert rows[f"u{i}"]["partial_hash"] == f"q{i}"
         assert rows[f"u{i}"]["content_sha256"] == f"s{i}"  # COALESCE kept
 
 
@@ -162,10 +290,10 @@ def test_crashed_first_upsert_reads_as_empty(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(memo, "_commit_manifest", boom)
     with pytest.raises(RuntimeError):
-        memo.upsert(_memo_df(spark, [("u1", 1, T1, "p1", "s1")]))
+        memo.upsert(_memo_df(spark, [("u1", 1, T1, "s1")]))
     monkeypatch.undo()
     assert memo.read().count() == 0  # previous (empty) state intact
 
-    memo.upsert(_memo_df(spark, [("u1", 1, T2, "p1", "s1")]))
+    memo.upsert(_memo_df(spark, [("u1", 1, T2, "s1")]))
     rows = {r["url"]: r for r in memo.read().collect()}
     assert rows["u1"]["warc_ts"] == T2  # recovery upsert lands cleanly

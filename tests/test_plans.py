@@ -51,14 +51,31 @@ def test_hash_projection_stays_in_codegen(spark, pages_1k):
     # The map-side hash projection (the hot path) must be inside
     # whole-stage codegen. (The full cascade's plan is AQE-wrapped, which
     # hides codegen spans until execution, so assert on the projection.)
-    from dedupe_algo_spark.functions.hashing import partial_sha256_col, sha256_col
+    from dedupe_algo_spark.functions.hashing import sha256_col
 
-    df = pages_1k.select(
-        "url",
-        partial_sha256_col(F.col("text")).alias("p"),
-        sha256_col(F.col("text")).alias("h"),
-    )
+    df = pages_1k.select("url", sha256_col(F.col("text")).alias("h"))
     assert has_whole_stage_codegen(df)
+
+
+def test_exact_grouping_exchange_carries_slim_meta(spark):
+    # The exact-grouping window is the one shuffle before the band
+    # self-join: it moves the grouping key, url and (near path) the band
+    # keys, never text and no second hash. Fresh pages, so no plan
+    # cached by another test is substituted into this one.
+    from dedupe_algo_spark.operators.dedup import assign_exact, page_meta
+    from dedupe_algo_spark.plans import exchange_column_sets
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"page {i % 7} alpha beta gamma") for i in range(40)],
+        "url string, text string",
+    )
+    meta = {"url", "text_len", "content_sha256"}
+    assert exchange_column_sets(assign_exact(page_meta(pages))) == [
+        meta | {"bands"}
+    ]
+    assert exchange_column_sets(
+        assign_exact(page_meta(pages, with_signature=False))
+    ) == [meta]
 
 
 def test_bucket_table_never_shuffles_text(spark, pages_1k):
