@@ -8,16 +8,19 @@ near-dup generalization needs a within-block self-join (SURVEY.md §2.4:
    representative per distinct text (the exact-dup assignment provides
    the mapping), so a 10^6-copy boilerplate page contributes one node,
    not 10^12 pairs. This is the single biggest scale lever.
-2. **Multi-path bucketing, one unioned bucket table.** A page emits one
-   bucket row per blocking path: the cheap key (length bucket ×
-   registered domain) and each MinHash LSH band. Equal bucket key ⇒
-   candidate. Paths union into one (bucket_key, url) table so the
-   self-join happens once.
-3. **Hot-bucket cap.** Buckets larger than ``max_bucket`` are dropped
-   (logged via the returned stats, audit-visible) — a 50k-row bucket
-   means the key carries no discriminating power (e.g. an empty-ish
-   boilerplate band) and would emit 10^9 junk pairs. AQE skew-join
-   handles residual imbalance.
+2. **One blocking key: 32 OPH MinHash bands.** A page emits one
+   (bucket_key:long, url) row per band; equal bucket key ⇒ candidate.
+   The reference's pass 1 is one cheap key (file size, lib.rs:54-58);
+   the cheap length/domain key and SimHash bands are not unioned in,
+   because profiled head-domain cheap keys emitted 2.76M junk pairs with
+   zero unique true pairs (README design rules).
+3. **Hot-bucket cap.** Buckets larger than ``max_bucket`` are dropped —
+   a 50k-row bucket means the key carries no discriminating power (e.g.
+   an empty-ish boilerplate band) and would emit 10^9 junk pairs. The
+   drop is NOT recorded on the production path: no stats are returned,
+   and ``dropped_buckets`` (the capped-bucket view) has no pipeline
+   caller yet (ROADMAP item 2). AQE skew-join handles residual
+   imbalance.
 4. **Pair dedup by (url_a, url_b)** with ``url_a < url_b`` so each
    unordered pair is scored once no matter how many buckets it fell in.
 """
@@ -28,8 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.minhash import minhash_band_keys_udf
-from ..functions.simhash import simhash64_udf, simhash_bands
-from .blocking import block_key
 
 DEFAULT_MAX_BUCKET = 2_000
 
@@ -41,49 +42,16 @@ def bucket_table_from_bands(bands: DataFrame) -> DataFrame:
     return bands.select(F.explode("bands").alias("bucket_key"), "url")
 
 
-def bucket_table(
-    working: DataFrame,
-    use_minhash: bool = True,
-    use_simhash: bool = False,
-    use_cheap_key: bool = True,
-) -> DataFrame:
-    """→ (bucket_key, url). ``working`` needs (url, text) columns.
-
-    Every path projects its (bucket_key, url) rows map-side directly on
-    the scan partitions — the band-key UDF folds the signature into
-    band keys, ``bucket_table_from_bands`` explodes them — so no
-    Exchange below the self-join ever carries the text column (the
-    text-never-shuffles invariant, asserted by test_plans via
-    plans.exchange_columns). A single-path call keeps its native key
-    type (minhash band keys stay slim longs); multi-path calls cast to
-    string for the union.
-    """
-    paths = []
-    if use_minhash:
-        bands = working.select(
-            "url", minhash_band_keys_udf(F.col("text")).alias("bands")
-        )
-        paths.append(bucket_table_from_bands(bands))
-    if use_cheap_key:
-        paths.append(
-            working.select(
-                block_key(F.col("text"), F.col("url")).alias("bucket_key"), "url"
-            )
-        )
-    if use_simhash:
-        sh = working.select("url", simhash64_udf(F.col("text")).alias("simhash"))
-        paths.append(
-            sh.select(
-                F.explode(simhash_bands(F.col("simhash"))).alias("bucket_key"), "url"
-            )
-        )
-    if len(paths) == 1:
-        return paths[0]
-    out = None
-    for p in paths:
-        p = p.select(F.col("bucket_key").cast("string").alias("bucket_key"), "url")
-        out = p if out is None else out.unionByName(p)
-    return out
+def bucket_table(working: DataFrame) -> DataFrame:
+    """→ (bucket_key:long, url): the MinHash band table of ``working``'s
+    (url, text) rows. The band-key UDF folds the signature into band
+    keys on the scan partitions and ``bucket_table_from_bands`` explodes
+    them, so no Exchange below the self-join ever carries the text
+    column (the text-never-shuffles invariant, asserted by test_plans
+    via plans.exchange_columns)."""
+    return bucket_table_from_bands(
+        working.select("url", minhash_band_keys_udf(F.col("text")).alias("bands"))
+    )
 
 
 def candidate_pairs(

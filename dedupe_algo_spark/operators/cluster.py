@@ -13,8 +13,9 @@ Scale notes:
   cluster this is a checkpoint dir / intermediate table write; local
   mode keeps it in block storage).
 * convergence test is a one-pass aggregate signature
-  (count + sum of xxhash64 over edges) — no exceptAll anti-join, no
-  collect of the edge set.
+  (count + bit_xor of xxhash64 over edges) observed on the checkpoint
+  job itself — no exceptAll anti-join, no collect of the edge set. A
+  graph that has not converged after ``MAX_SUPERSTEPS`` raises.
 * node ids are strings (urls); min() is lexicographic — deterministic.
 """
 
@@ -78,6 +79,12 @@ SMALL_GRAPH_EDGES_CAP = 1_000_000
 # than ~4g — where a 1M-row toPandas genuinely is a footgun.
 _EDGE_MEM_BUDGET = 4096
 
+# Superstep bound for the distributed path. Convergence is O(log n)
+# supersteps for any graph (2-3 for the dedup star/chain shapes), so
+# reaching this bound means something is wrong: the call raises rather
+# than return a labelling that is not a fixpoint.
+MAX_SUPERSTEPS = 25
+
 
 def _mem_to_bytes(mem: str) -> int:
     """Parse a JVM memory string ('16g', '512m', '64k', bare = MiB,
@@ -90,7 +97,7 @@ def _mem_to_bytes(mem: str) -> int:
 
 
 def small_graph_limit(spark) -> int:
-    """Derived ``small_graph_edges`` default:
+    """The union-find fast path's canonical-edge bound:
     ``min(1M, driver_memory / 4KiB-per-edge)``."""
     try:
         mem = spark.conf.get("spark.driver.memory", "1g")
@@ -149,31 +156,19 @@ def _local_cc(edges: DataFrame) -> DataFrame:
     return out
 
 
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    checkpoint: bool = True,
-    small_graph_edges: int | None = None,
-    tracker=None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, tracker=None) -> DataFrame:
     """→ (url, component) assignment for every node appearing in edges.
 
     ``component`` is the lexicographic min url of the component. Nodes
     not present in any edge are singletons and simply absent here.
 
-    Graphs whose canonical edge set is ≤ ``small_graph_edges`` are
-    solved with a driver-side union-find (same output, ~1 job instead of
-    ~10 per superstep); the default (``None``) derives the bound from
-    the driver heap via :func:`small_graph_limit`; pass 0 to force the
-    distributed path.
+    Graphs whose canonical edge set is ≤ :func:`small_graph_limit`
+    (derived from the driver heap) are solved with a driver-side
+    union-find (same output, ~1 job instead of ~10 per superstep).
+    Larger graphs run large-star/small-star supersteps until the edge
+    signature repeats; if it has not repeated after ``MAX_SUPERSTEPS``
+    the call raises instead of returning a labelling that may not be a
+    fixpoint.
 
     Checkpoint hygiene: each superstep's eager ``localCheckpoint``
     supersedes its parent, which is unpersisted immediately — only ONE
@@ -182,98 +177,68 @@ def connected_components(
     (a :class:`~dedupe_algo_spark.tracking.PersistTracker`) if given, so
     the caller can release it after consuming the assignment.
     """
-    from ..tracking import checkpoint_rdd_ids, persistent_rdd_ids, unpersist_rdd_ids
+    from pyspark.sql import Observation
+
+    from ..tracking import checkpoint_rdd_ids, unpersist_rdd_ids
 
     spark = edges.sparkSession
     live: set[int] = set()  # RDD ids of the current (newest) checkpoint
-    before = persistent_rdd_ids(spark) if checkpoint else set()
 
     def _ckpt(df: DataFrame) -> DataFrame:
-        nonlocal live, before
+        nonlocal live
         out = df.localCheckpoint(eager=True)
-        # Identify the checkpoint's OWN rdd id(s), precisely: the
-        # checkpointed DataFrame's LogicalRDD holds the persisted RDD.
-        # The persistent-RDD-set delta is only the fallback — a stage
-        # cache materialized by this same job (the first action of a
-        # lazy pipeline often runs inside the first checkpoint) lands
-        # in the delta and would get wrongly unpersisted later, forcing
-        # its consumers (audit flush, cluster join) to recompute — a
-        # measured 23s re-read of the confirm shuffle at 4M pages.
-        ids = checkpoint_rdd_ids(out)
-        now = persistent_rdd_ids(spark)
-        if ids is None:
-            ids = now - before
+        # Release exactly the checkpoint's own RDD, read off its plan —
+        # never a persistent-RDD-set delta, which would also catch a
+        # stage cache that this job happened to materialize (the first
+        # action of a lazy pipeline often runs inside the first
+        # checkpoint) and force its consumers to recompute it.
         unpersist_rdd_ids(spark, live)  # parent superstep is superseded
-        live = ids
-        before = now
+        live = checkpoint_rdd_ids(out)
         return out
 
-    if small_graph_edges is None:
-        small_graph_edges = small_graph_limit(spark)
-    cur = _canonical(edges.select(F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")))
-    if checkpoint:
-        cur = _ckpt(cur)
-    base_cache = None
-    if small_graph_edges:
-        # The size decision is one count over the canonical edge set. On
-        # the checkpointed path it is already materialized by the eager
-        # localCheckpoint above, so the count scans block-manager blocks
-        # (sub-second) without recomputing the edges. (A previous
-        # stream-and-abort design that folded the decision into a
-        # coalesce(1) iterator saved this count but paid a 6.2s
-        # single-threaded drain at 4M pages.) Without checkpointing,
-        # persist the canonical edges first so the count and their
-        # consumer (_local_cc's toPandas, or the first superstep) share
-        # one computation instead of running the edge plan twice.
-        if not checkpoint:
-            base_cache = cur = cur.persist()
-        if cur.count() <= small_graph_edges:
-            out = _local_cc(cur)
-            # the union-find consumed the edges; the canonical checkpoint
-            # / cache is dead weight (the result is Arrow/driver-backed)
-            unpersist_rdd_ids(spark, live)
-            if base_cache is not None:
-                base_cache.unpersist()
-            return out
+    cur = _ckpt(
+        _canonical(
+            edges.select(
+                F.col(edges.columns[0]).alias("src"),
+                F.col(edges.columns[1]).alias("dst"),
+            )
+        )
+    )
+    # The size decision is one count over the canonical edge set, already
+    # materialized by the eager localCheckpoint above, so the count scans
+    # block-manager blocks without recomputing the edges.
+    if cur.count() <= small_graph_limit(spark):
+        out = _local_cc(cur)
+        # the union-find consumed the edges; the canonical checkpoint is
+        # dead weight (the result is Arrow/driver-backed)
+        unpersist_rdd_ids(spark, live)
+        return out
     prev_sig = None
-    for i in range(max_iter):
-        cur = _canonical(_small_star(_large_star(cur)))
-        if checkpoint:
-            # convergence signature piggybacks on the checkpoint job
-            # itself: CollectMetrics rides the eager materialization
-            # (localCheckpoint runs under withAction, so the observed
-            # (count, bit_xor) lands with ZERO extra jobs or driver
-            # round-trips per superstep — previously a separate
-            # two-stage agg-collect each iteration)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            cur = cur.observe(
+    for _ in range(MAX_SUPERSTEPS):
+        # The convergence signature piggybacks on the checkpoint job:
+        # CollectMetrics rides the eager materialization, so the observed
+        # (count, bit_xor) costs no extra job per superstep.
+        obs = Observation()
+        cur = _ckpt(
+            _canonical(_small_star(_large_star(cur))).observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(
                     F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
                 ).alias("h"),
             )
-            cur = _ckpt(cur)
-            m = obs.get
-            sig = (int(m["n"]), int(m["h"]))
-        else:
-            # uncheckpointed path: no materializing job to ride — the
-            # signature stays its own two-stage agg over the lineage
-            # (a wasted superstep is ~10 shuffle jobs, so eager checking
-            # still minimizes total job count; star/clique edge sets --
-            # the dedup shape -- converge at superstep 2)
-            sig = _signature(cur)
-        if base_cache is not None:
-            # the non-checkpoint input cache fed the first superstep's
-            # signature pass; later iterations re-derive from lineage
-            base_cache.unpersist()
-            base_cache = None
+        )
+        m = obs.get
+        sig = (int(m["n"]), int(m["h"]))
         if sig == prev_sig:
             break
         prev_sig = sig
-    if tracker is not None and live:
+    else:
+        unpersist_rdd_ids(spark, live)
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_SUPERSTEPS} supersteps"
+        )
+    if tracker is not None:
         tracker.adopt_ids(spark, live)
     # fixpoint: every edge is (member, root). Roots map to themselves.
     members = cur.select(F.col("src").alias("url"), F.col("dst").alias("component"))
@@ -281,9 +246,7 @@ def connected_components(
     return members.union(roots).groupBy("url").agg(F.min("component").alias("component"))
 
 
-def merge_clusters(
-    assignments: DataFrame, new_edges: DataFrame, **cc_kwargs
-) -> DataFrame:
+def merge_clusters(assignments: DataFrame, new_edges: DataFrame) -> DataFrame:
     """→ (url, component): an existing cluster assignment updated with
     a batch of new match edges, recomputing ONLY the clusters the
     batch touches — the incremental counterpart of
@@ -330,6 +293,6 @@ def merge_clusters(
         .where(F.col("url") != F.col("component"))
         .select(F.col("component").alias("src"), F.col("url").alias("dst"))
     )
-    merged = connected_components(star.unionByName(e), **cc_kwargs)
+    merged = connected_components(star.unionByName(e))
     untouched = a.join(touched_comp, "component", "left_anti")
     return untouched.unionByName(merged.select("url", "component"))

@@ -131,7 +131,6 @@ def dedup_pipeline(
     min_len: int = 10,
     threshold: float = DEFAULT_THRESHOLD,
     include_near: bool = True,
-    scorer: str = "jaccard",
     exact_key: str = "raw",
     memo=None,
     stage=None,
@@ -146,9 +145,6 @@ def dedup_pipeline(
     or ``lambda name, fn: fn()`` to opt out entirely.
     ``include_near=False`` stops after the exact tier: no band keys, no
     candidates, no connected components.
-    ``scorer`` selects the confirm similarity ("jaccard" | "jaro_winkler"
-    | "levenshtein" | "ngram_jaccard" — see
-    :func:`~.operators.scoring.confirm_pairs`).
     ``exact_key="normalized"`` keys the exact tier on the CCNet-style
     normalized text view (casing/punctuation/whitespace/counter
     mutations become exact duplicates — see
@@ -169,7 +165,7 @@ def dedup_pipeline(
     if stage is None:
         from .sources.audit import audit_stage_hook
 
-        stage = audit_stage_hook(pages.sparkSession, tracker=tracker)
+        stage = audit_stage_hook(pages.sparkSession, tracker)
 
     opts = dict(min_len=min_len, with_signature=include_near, exact_key=exact_key)
     if memo is None:
@@ -215,9 +211,7 @@ def dedup_pipeline(
             cands = band_gate(pairs, min_matches=DEFAULT_MIN_BAND_MATCHES).select(
                 "url_a", "url_b"
             )
-            return confirm_pairs(
-                cands, pages, threshold=threshold, tracker=tracker, scorer=scorer
-            )
+            return confirm_pairs(cands, pages, threshold=threshold, tracker=tracker)
 
         near_edges = stage("near_edges", near)
         all_edges = exact_edges.unionByName(near_edges)

@@ -1554,7 +1554,7 @@ def q_minhash_pair_stats(spark, sf_dir):
 
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
-    pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
+    pairs = candidate_pairs(bucket_table(pages))
     stats = (
         confirm_pairs(pairs, pages, DEFAULT_THRESHOLD, tracker=tracker)
         .groupBy(F.round("score", 1).alias("score_bin"))
@@ -1590,7 +1590,7 @@ def q_minhash_dup_pairs(spark, sf_dir):
 
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
-    pairs = candidate_pairs(bucket_table(pages, use_cheap_key=False))
+    pairs = candidate_pairs(bucket_table(pages))
     out = confirm_pairs(pairs, pages, DEFAULT_THRESHOLD, tracker=tracker).select(
         "url_a", "url_b", F.round("score", 4).alias("score")
     )
@@ -1750,21 +1750,26 @@ FROM signed a JOIN signed b ON b.doc_id = a.doc_id + 1
 
 
 def q_simhash_candidates(spark, sf_dir):
-    """The north_star's pass-1 "SimHash band" blocking END-TO-END: band
-    keys via ``bucket_table(use_simhash=True)`` (the flagship's
-    explode-on-scan shape, text never shuffles) feeding the window-
-    pruned, hot-bucket-capped ``candidate_pairs`` self-join. The oracle
-    re-derives the signature chain, the 4×16-bit banding, the 2..cap
-    bucket-size gate, and the distinct pair join in DuckDB, so the
-    whole blocking tier — not just the hash kernel — is hash-checked.
-    candidate_pairs orients pairs lexicographically on the string key;
-    both sides re-orient numerically with least/greatest."""
-    from .operators.candidates import bucket_table, candidate_pairs
+    """SimHash band blocking END-TO-END (the flagship blocks on MinHash
+    bands only; this is the alternative key, checked on its own): each
+    doc's ``simhash64`` splits into 4×16-bit string band keys, exploded
+    on the scan partitions into (bucket_key, url) rows (text never
+    shuffles), feeding the window-pruned, hot-bucket-capped
+    ``candidate_pairs`` self-join. The oracle re-derives the signature
+    chain, the banding, the 2..cap bucket-size gate, and the distinct
+    pair join in DuckDB, so the whole blocking tier — not just the hash
+    kernel — is hash-checked. candidate_pairs orients pairs
+    lexicographically on the string key; both sides re-orient
+    numerically with least/greatest."""
+    from .functions.simhash import simhash64_udf, simhash_bands
+    from .operators.candidates import candidate_pairs
 
     docs = _docs(spark, sf_dir)
-    working = docs.select(F.col("doc_id").cast("string").alias("url"), "text")
     pairs = candidate_pairs(
-        bucket_table(working, use_minhash=False, use_cheap_key=False, use_simhash=True)
+        docs.select(
+            F.explode(simhash_bands(simhash64_udf(F.col("text")))).alias("bucket_key"),
+            F.col("doc_id").cast("string").alias("url"),
+        )
     )
     a = F.col("url_a").cast("long")
     b = F.col("url_b").cast("long")
@@ -4488,7 +4493,7 @@ def q_pr_curve(spark, sf_dir):
     tracker = PersistTracker()
     pages = synth_pages(spark, 2_000).select("url", "text")
     scored = confirm_pairs(
-        candidate_pairs(bucket_table(pages, use_cheap_key=False)),
+        candidate_pairs(bucket_table(pages)),
         pages,
         DEFAULT_THRESHOLD,
         tracker=tracker,

@@ -48,8 +48,8 @@ class CheckpointedRun:
         df = fn()
         df.write.mode("overwrite").parquet(path)
         out = self.spark.read.parquet(path)
-        self.audit.record_stage(
-            out, self.run_id, name, elapsed_ms=int((time.time() - t0) * 1000)
+        self.audit.record(
+            self.run_id, [(name, out, int((time.time() - t0) * 1000))]
         )
         self.computed.append(name)
         return out

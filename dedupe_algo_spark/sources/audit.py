@@ -57,13 +57,14 @@ def default_audit_dir() -> str:
     )
 
 
-def audit_stage_hook(spark: SparkSession, tracker=None, audit=None, run_id=None):
+def audit_stage_hook(spark: SparkSession, tracker):
     """The default ``stage`` hook for ``dedup_pipeline``: every stage
     writes lineage rows (north_rule — lineage is not opt-in).
 
     Deferred design, so lineage costs no extra pass over the data: at
-    stage time the output is only persisted (registered on ``tracker``
-    when given) and queued; ``stage.flush()`` — called by the pipeline
+    stage time the output is only persisted on ``tracker`` (a
+    :class:`~dedupe_algo_spark.tracking.PersistTracker`, the one owner
+    that releases it) and queued; ``stage.flush()`` — called by the pipeline
     once its own actions have materialized every stage cache — counts
     all queued outputs in ONE job over the caches and makes ONE append
     to the audit table at ``$DEDUPE_AUDIT_DIR`` (default
@@ -77,8 +78,8 @@ def audit_stage_hook(spark: SparkSession, tracker=None, audit=None, run_id=None)
     Contrast ``runner.CheckpointedRun.stage``, which instead commits
     each stage's output to a resumable parquet snapshot (its write is
     the materialization, so it records exact per-stage timings)."""
-    log = audit or AuditLog(spark, default_audit_dir())
-    rid = run_id or new_run_id()
+    log = AuditLog(spark, default_audit_dir())
+    rid = new_run_id()
     pending: list[tuple[str, DataFrame | int, float]] = []
 
     def stage(name: str, fn) -> DataFrame:
@@ -90,10 +91,7 @@ def audit_stage_hook(spark: SparkSession, tracker=None, audit=None, run_id=None)
         # not persisted: their one consumer reads them once.
         known = getattr(df, "_dedupe_known_rows", None)
         if known is None:
-            if tracker is not None:
-                tracker.persist(df)
-            else:
-                df.persist()
+            tracker.persist(df)
         pending.append((name, df if known is None else int(known), time.time()))
         return df
 
@@ -161,18 +159,7 @@ class AuditLog:
             self.path
         )
 
-    def record_stage(
-        self, df: DataFrame, run_id: str, stage: str, elapsed_ms: int = 0
-    ) -> None:
-        self.record(run_id, [(stage, df, elapsed_ms)])
-
     def read(self) -> DataFrame:
         if os.path.exists(self.path):
             return self.spark.read.parquet(self.path)
         return self.spark.createDataFrame([], AUDIT_SCHEMA)
-
-    def stages_of(self, run_id: str) -> list[str]:
-        return [
-            r["stage"]
-            for r in self.read().where(F.col("run_id") == run_id).select("stage").distinct().collect()
-        ]

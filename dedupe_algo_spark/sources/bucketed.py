@@ -145,15 +145,11 @@ def write_near_index(
     re-scan the corpus counts daily; pruning once at build keeps the
     probe's "only the batch moves" contract at any corpus size. Pass
     ``0`` to disable."""
-    from ..functions.minhash import minhash_band_keys_udf
-    from ..operators.candidates import DEFAULT_MAX_BUCKET, bucket_table_from_bands
+    from ..operators.candidates import DEFAULT_MAX_BUCKET, bucket_table
 
     if max_bucket is None:
         max_bucket = DEFAULT_MAX_BUCKET
-    bands = corpus_pages.select(
-        "url", minhash_band_keys_udf(F.col("text")).alias("bands")
-    )
-    band_table = bucket_table_from_bands(bands)
+    band_table = bucket_table(corpus_pages)
     if max_bucket:
         from pyspark.sql import Window
 
@@ -226,15 +222,14 @@ def incremental_near_candidates(
     buckets in place (asserted by test_bucketed). The collision count
     then rides a second slim exchange of only the MATCHED pairs.
     """
-    from ..functions.minhash import minhash_band_keys_udf
-    from ..operators.candidates import bucket_table_from_bands
+    from ..operators.candidates import bucket_table
     from ..operators.scoring import DEFAULT_MIN_BAND_MATCHES
 
     if min_matches is None:
         min_matches = DEFAULT_MIN_BAND_MATCHES
-    batch_buckets = bucket_table_from_bands(
-        batch.select("url", minhash_band_keys_udf(F.col("text")).alias("bands"))
-    ).select("bucket_key", F.col("url").alias("batch_url"))
+    batch_buckets = bucket_table(batch).select(
+        "bucket_key", F.col("url").alias("batch_url")
+    )
     corpus_buckets = corpus_bands.select(
         "bucket_key", F.col("url").alias("corpus_url")
     )

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import sha256_col
 from ..operators.dedup import page_meta
 from ..schemas import PAGES_SCHEMA
 
@@ -170,13 +169,9 @@ def dedup_warc_stream(
     pages = warc_segment_stream(
         spark, source_dir, options=options, segment_format=segment_format
     )
-    meta = pages.where(F.length("text") >= min_len).select(
-        "url",
-        "warc_ts",
-        F.length("text").cast("long").alias("text_len"),
-        sha256_col(F.col("text")).alias("content_sha256"),
+    return _stateful_first_seen(
+        page_meta(pages, min_len=min_len, with_signature=False, with_ts=True)
     )
-    return _stateful_first_seen(meta)
 
 
 def dedup_pages_stream(
@@ -197,10 +192,9 @@ def dedup_pages_stream(
     micro-batches (state is checkpoint-backed). Keeper choice within a
     batch is deterministic: min (warc_ts, url).
     """
-    meta = ingest_pages_stream(
-        spark, source_dir, min_len=min_len, options=options
-    ).select("url", "warc_ts", "text_len", "content_sha256")
-    return _stateful_first_seen(meta)
+    return _stateful_first_seen(
+        ingest_pages_stream(spark, source_dir, min_len=min_len, options=options)
+    )
 
 
 def near_dup_stream(

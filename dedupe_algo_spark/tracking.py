@@ -10,8 +10,9 @@ once the outputs are consumed (or committed to a table).
 
 ``localCheckpoint`` blocks are not reachable through ``DataFrame
 .unpersist`` (the checkpoint RDD is not a cache-manager entry), so the
-tracker records the delta of the context's persistent-RDD ids around
-the checkpointing operator and unpersists those ids directly.
+checkpointing operator registers the checkpoint's own RDD id (read off
+its plan by :func:`checkpoint_rdd_ids`) and the tracker unpersists
+those ids directly.
 """
 
 from __future__ import annotations
@@ -26,19 +27,12 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def checkpoint_rdd_ids(df: DataFrame) -> "set[int] | None":
+def checkpoint_rdd_ids(df: DataFrame) -> set[int]:
     """The persisted RDD id backing an (eagerly) ``localCheckpoint``-ed
     DataFrame — read straight off its LogicalRDD plan node, so callers
-    can release exactly the checkpoint's blocks without guessing from
-    persistent-RDD-set deltas (which can catch unrelated SQL caches
-    that happened to materialize during the checkpoint job). Returns
-    ``None`` if the plan isn't the expected shape (caller falls back
-    to the delta method)."""
-    try:
-        logical = df._jdf.queryExecution().logical()
-        return {int(logical.rdd().id())}
-    except Exception:
-        return None
+    release exactly the checkpoint's blocks, never an unrelated SQL
+    cache that happened to materialize during the checkpoint job."""
+    return {int(df._jdf.queryExecution().logical().rdd().id())}
 
 
 def unpersist_rdd_ids(spark: SparkSession, ids: set[int], blocking: bool = False) -> None:
@@ -62,11 +56,6 @@ class PersistTracker:
         df.persist()
         self.frames.append(df)
         return df
-
-    def adopt_new_rdds(self, spark: SparkSession, before: set[int]) -> None:
-        """Register every persistent RDD id created since ``before`` —
-        the ``localCheckpoint`` bookkeeping described above."""
-        self.adopt_ids(spark, persistent_rdd_ids(spark) - before)
 
     def adopt_ids(self, spark: SparkSession, ids: set[int]) -> None:
         self._spark = spark

@@ -187,17 +187,6 @@ def test_confirm_pairs_scorer_options(spark):
         confirm_pairs(pairs, pages, 0.0, scorer="nope").collect()
 
 
-def test_pipeline_scorer_passthrough(spark, pages_1k):
-    """dedup_pipeline(scorer=...) routes the confirm stage through the
-    selected scorer; exact tiers are scorer-independent."""
-    from dedupe_algo_spark.pipeline import dedup_pipeline
-
-    res = dedup_pipeline(pages_1k, scorer="levenshtein")
-    exact = res.clusters.where(F.col("match_kind") == "exact").count()
-    assert exact > 0
-    res.unpersist()
-
-
 def test_confirm_pairs_never_shuffles_table_text(spark, pages_1k):
     """The pages table's text column must not ride any Exchange: the
     candidate-url set broadcasts into the semi-join, and only the carved
@@ -326,22 +315,18 @@ def test_null_text_drops_pair_on_both_paths(spark):
 
 
 def test_simhash_blocking_recall_on_synth_corpus(spark, pages_1k, labels_1k):
-    """The north_star's pass-1 "SimHash band" blocking path
-    (bucket_table(use_simhash=True), 4 bands x 16 bits): identical text
+    """SimHash band blocking (4 bands x 16 bits, exploded into
+    (bucket_key, url) rows as q_simhash_candidates does): identical text
     hashes identically, so EVERY labeled exact-dup pair must share all
     four bands; the 1-5 token substitutions of the synth near copies
     flip few simhash bits, so near-dup recall should stay high while
     the candidate set stays ~pairs-of-dups-sized (no quadratic junk).
     The corpus is a pure function of (seed, index) — counts are pinned."""
-    from pyspark.sql import functions as F
+    from dedupe_algo_spark.functions.simhash import simhash64_udf, simhash_bands
 
-    from dedupe_algo_spark.operators.candidates import bucket_table
-
-    bt = bucket_table(
-        pages_1k.select("url", "text"),
-        use_minhash=False,
-        use_cheap_key=False,
-        use_simhash=True,
+    bt = pages_1k.select(
+        F.explode(simhash_bands(simhash64_udf(F.col("text")))).alias("bucket_key"),
+        "url",
     )
     pairs = candidate_pairs(bt).cache()
     assert pairs.count() == 1216  # ~1.2 candidates/doc, not O(n^2)

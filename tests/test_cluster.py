@@ -1,25 +1,35 @@
 """Connected components: correctness on adversarial graph shapes.
 
 Every case runs through BOTH paths — the driver union-find fast path
-(small_graph_edges default) and the distributed large-star/small-star
-loop (small_graph_edges=0) — which must produce identical labels.
+and the distributed large-star/small-star loop, chosen by patching the
+fast path's bound (``small_graph_limit``) — which must produce
+identical labels and leave no checkpoint block behind once released.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from dedupe_algo_spark.operators import cluster
 from dedupe_algo_spark.operators.cluster import connected_components
+from dedupe_algo_spark.tracking import PersistTracker, persistent_rdd_ids
 
 
 @pytest.fixture(params=[0, 1_000_000], ids=["distributed", "local-fastpath"])
-def _cc(spark, request):
+def _cc(spark, request, monkeypatch):
+    monkeypatch.setattr(cluster, "small_graph_limit", lambda _spark: request.param)
+
     def run(spark_, edges):
         df = spark_.createDataFrame(edges, ["src", "dst"])
-        out = connected_components(df, small_graph_edges=request.param).collect()
+        before = persistent_rdd_ids(spark_)
+        tracker = PersistTracker()
+        out = connected_components(df, tracker=tracker).collect()
+        tracker.release()
+        # nothing of ours left persisted behind, on either path
+        assert persistent_rdd_ids(spark_) == before
         return {r["url"]: r["component"] for r in out}
 
-    return lambda spark_, edges: run(spark_, edges)
+    return run
 
 
 def test_two_components(spark, _cc):
@@ -68,29 +78,14 @@ def test_small_graph_limit_derived_from_driver_memory(spark):
     assert _mem_to_bytes("16g") == 16 << 30
     assert _mem_to_bytes("512m") == 512 << 20
     assert _mem_to_bytes("2048") == 2048 << 20  # bare number = MiB
-    # the session driver (16g) derives 4M edges → the 1M cap binds
+    # the test session driver (6g) derives ~1.5M edges → the 1M cap binds
     assert small_graph_limit(spark) == SMALL_GRAPH_EDGES_CAP
     # a small driver derives a proportionally smaller bound
     assert (512 << 20) // _EDGE_MEM_BUDGET == 131_072 < SMALL_GRAPH_EDGES_CAP
 
 
-def test_non_checkpoint_smallgraph_single_compute(spark):
-    """checkpoint=False + fast path: the canonical edges are persisted so
-    the size count and _local_cc share one computation (ADVICE r3)."""
-    from dedupe_algo_spark.tracking import persistent_rdd_ids
-
-    before = persistent_rdd_ids(spark)
-    edges = [(f"n{i}", f"n{i+1}") for i in range(50)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = connected_components(df, checkpoint=False)
-    m = {r["url"]: r["component"] for r in out.collect()}
-    assert set(m.values()) == {"n0"} and len(m) == 51
-    # nothing of ours left persisted behind
-    assert persistent_rdd_ids(spark) - before == set()
-
-
-def test_threshold_boundary_both_paths_identical(spark):
-    """Stress the small_graph_edges boundary on a realistic dedup-shaped
+def test_threshold_boundary_both_paths_identical(spark, monkeypatch):
+    """Stress the small_graph_limit boundary on a realistic dedup-shaped
     graph (stars, chains, cliques, cross links): the same edge set run
     just OVER the threshold (distributed path forced) and under it
     (driver union-find) must produce identical labels."""
@@ -114,15 +109,32 @@ def test_threshold_boundary_both_paths_identical(spark):
     from dedupe_algo_spark.operators.cluster import _canonical
 
     n_canon = _canonical(df).count()
-    dist = {
-        (r["url"], r["component"])
-        for r in connected_components(df, small_graph_edges=n_canon - 1).collect()
-    }
-    fast = {
-        (r["url"], r["component"])
-        for r in connected_components(df, small_graph_edges=n_canon).collect()
-    }
+
+    def labels(limit):
+        monkeypatch.setattr(cluster, "small_graph_limit", lambda _spark: limit)
+        return {(r["url"], r["component"]) for r in connected_components(df).collect()}
+
+    dist = labels(n_canon - 1)
+    fast = labels(n_canon)
     assert dist == fast and len(dist) > 1000
+
+
+def test_unconverged_distributed_run_raises(spark, monkeypatch):
+    """A labelling that is not a fixpoint is never returned: with the
+    superstep bound at 2, the 40-node chain cannot converge and the
+    distributed path raises, while a one-edge graph (its signature
+    repeats at superstep 2) still converges."""
+    monkeypatch.setattr(cluster, "small_graph_limit", lambda _spark: 0)
+    monkeypatch.setattr(cluster, "MAX_SUPERSTEPS", 2)
+    nodes = [f"n{i:03d}" for i in range(40)]
+    chain = spark.createDataFrame(list(zip(nodes, nodes[1:])), ["src", "dst"])
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain)
+    assert persistent_rdd_ids(spark) == before
+    one = spark.createDataFrame([("b", "a")], ["src", "dst"])
+    out = {r["url"]: r["component"] for r in connected_components(one).collect()}
+    assert out == {"a": "a", "b": "a"}
 
 
 def test_merge_clusters_equals_full_recompute(spark):

@@ -13,7 +13,9 @@ from dedupe_algo_spark.pipeline import dedup_pipeline, pairwise_f1
 def result(pages_1k):
     res = dedup_pipeline(pages_1k)
     res.clusters.cache().count()
-    return res
+    yield res
+    res.clusters.unpersist()
+    res.unpersist()
 
 
 def test_pairwise_f1_gate(result, labels_1k):
@@ -26,6 +28,7 @@ def test_pairwise_f1_gate(result, labels_1k):
 def test_exact_only_pipeline_matches_exact_labels(pages_1k, labels_1k):
     res = dedup_pipeline(pages_1k, include_near=False)
     m = pairwise_f1(res.clusters, labels_1k.where(F.col("kind") != "near"))
+    res.unpersist()
     assert m["f1"] >= 0.99, m
 
 
@@ -34,6 +37,7 @@ def test_row_order_permutation_invariance(spark, pages_1k, result):
     res2 = dedup_pipeline(shuffled)
     a = result.clusters.orderBy("url").toPandas()
     b = res2.clusters.orderBy("url").toPandas()
+    res2.unpersist()
     assert a.equals(b)
 
 
@@ -54,6 +58,7 @@ def test_adding_nondup_rows_never_splits_clusters(spark, pages_1k, result):
     base = result.clusters.select("url", "cluster_id")
     new = res2.clusters.select("url", F.col("cluster_id").alias("cid2"))
     j = base.join(new, "url", "inner").toPandas()
+    res2.unpersist()
     # same-cluster relations among original urls must be preserved
     import pandas as pd
 
@@ -123,8 +128,9 @@ def test_default_run_writes_audit_lineage(spark, pages_1k, tmp_path, monkeypatch
     res.unpersist()
 
     # the default hook's rows, checked against each stage's output
+    monkeypatch.setenv("DEDUPE_AUDIT_DIR", str(tmp_path / "a2"))
     tracker = PersistTracker()
-    hook = audit_stage_hook(spark, tracker=tracker, audit=AuditLog(spark, str(tmp_path / "a2")))
+    hook = audit_stage_hook(spark, tracker)
     outputs = {}
 
     def stage(name, fn):
@@ -207,22 +213,25 @@ def test_normalized_exact_key_merges_cheap_mutations(spark, pages_1k):
         ],
         pages_1k.schema,
     )
+
+    def clusters(pages, exact_key):
+        res = dedup_pipeline(pages, include_near=False, exact_key=exact_key)
+        pdf = res.clusters.orderBy("url").toPandas()
+        res.unpersist()
+        return pdf
+
     pages = pages_1k.unionByName(extra)
-    raw = dedup_pipeline(pages, include_near=False).clusters
-    norm = dedup_pipeline(pages, include_near=False, exact_key="normalized").clusters
+    raw = clusters(pages, "raw")
+    norm = clusters(pages, "normalized")
     muts = {u for u, _ in mut}
-    assert raw.where(F.col("url").isin(*muts)).count() == 0
-    got = norm.where(F.col("url").isin(*muts)).toPandas()
+    assert not raw["url"].isin(muts).any()
+    got = norm[norm["url"].isin(muts)]
     assert set(got["url"]) == muts
     assert got["cluster_id"].nunique() == 1
     assert (got["match_kind"] == "exact").all()
     # coarsening-only: on the mutation-free corpus both modes agree
-    a = dedup_pipeline(pages_1k, include_near=False).clusters.orderBy("url").toPandas()
-    b = (
-        dedup_pipeline(pages_1k, include_near=False, exact_key="normalized")
-        .clusters.orderBy("url")
-        .toPandas()
-    )
+    a = clusters(pages_1k, "raw")
+    b = clusters(pages_1k, "normalized")
     assert a[["url", "cluster_id"]].equals(b[["url", "cluster_id"]])
 
 

@@ -80,8 +80,8 @@ def test_exact_grouping_exchange_carries_slim_meta(spark):
 
 def test_bucket_table_never_shuffles_text(spark, pages_1k):
     # the text-never-shuffles invariant for the standalone bucket_table
-    # path (the flagship pipeline uses bucket_table_from_bands on
-    # band-key columns computed map-side in page_meta): every Exchange
+    # (the flagship pipeline uses bucket_table_from_bands on band-key
+    # columns computed map-side in page_meta): every Exchange
     # below the candidate self-join must carry only slim
     # (bucket_key, url) rows — all signature work is map-side.
     from dedupe_algo_spark.operators.candidates import bucket_table, candidate_pairs
@@ -91,26 +91,6 @@ def test_bucket_table_never_shuffles_text(spark, pages_1k):
     assert "text" not in moved, moved
     assert "sig" not in moved, moved
     assert "bands" not in moved, moved
-
-
-def test_bucket_table_three_path_union_never_shuffles_text(spark, pages_1k):
-    # the same invariant with ALL pass-1 keys on (minhash bands +
-    # cheap length/domain key + simhash bands): every signature UDF is
-    # consumed map-side on the scan partitions, so the union still
-    # exchanges only (bucket_key, url) rows.
-    from dedupe_algo_spark.operators.candidates import bucket_table, candidate_pairs
-
-    bt = bucket_table(
-        pages_1k.select("url", "text"),
-        use_minhash=True,
-        use_cheap_key=True,
-        use_simhash=True,
-    )
-    moved = exchange_columns(candidate_pairs(bt))
-    assert "text" not in moved, moved
-    assert "sig" not in moved, moved
-    assert "bands" not in moved, moved
-    assert "simhash" not in moved, moved
 
 
 def test_small_dims_broadcast(spark):
