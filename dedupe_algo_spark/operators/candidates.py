@@ -151,34 +151,21 @@ def wminhash_candidate_pairs(
     ``corpus_stats.weighted_jaccard_pairs`` — the sketch estimates the
     exact measure that operator computes.
 
-    Scale shape, same contract as the flagship generator above: one
-    Arrow-batched UDF computes signature+bands in the scan stage
-    (text never leaves it), the self-join input is the slim
-    (band_key, id) posting table, hot buckets beyond ``max_bucket``
-    are dropped before pairing (auditable the same way as
-    ``dropped_buckets``), one exchange keyed on the band hash, one
-    slim pair rollup."""
+    Scale shape: one Arrow-batched UDF computes signature+bands in the
+    scan stage (text never leaves it); the slim (bucket_key, id)
+    posting table then goes through ``candidate_pairs`` (hot-bucket
+    prune, self-join, pair count) and ``band_gate`` at
+    ``min_shared``."""
     from ..functions.wminhash import wband_udf, wminhash_udf
+    from .scoring import band_gate
 
-    posts = (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.explode(wband_udf(wminhash_udf(F.col(text_col)))).alias("bk"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("bk")
-    kept = (
-        posts.withColumn("_n", F.count(F.lit(1)).over(w))
-        .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket))
-        .select("_id", "bk")
-    )
-    a = kept.select(F.col("_id").alias(id_a), "bk")
-    b = kept.select(F.col("_id").alias(id_b), "bk")
-    return (
-        a.join(b, "bk")
-        .where(F.col(id_a) < F.col(id_b))
-        .groupBy(id_a, id_b)
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+    # distinct: a doc posts each band key once, so n_shared counts
+    # distinct shared buckets even when two of its bands fold alike
+    posts = docs.select(
+        F.col(id_col).alias("url"),
+        F.explode(wband_udf(wminhash_udf(F.col(text_col)))).alias("bucket_key"),
+    ).distinct()
+    pairs = candidate_pairs(posts, max_bucket, with_counts=True)
+    return band_gate(pairs, min_matches=min_shared).select(
+        F.col("url_a").alias(id_a), F.col("url_b").alias(id_b), "n_shared"
     )

@@ -21,31 +21,34 @@ bit-for-bit in any engine; callers derive the fractions:
   duplicate-n-gram-character-fraction, n=5; overlaps counted, as in
   the paper's published implementation).
 
-Two physical strategies, proven equivalent by test:
+One zero-shuffle, Arrow-batched pass: a ``mapInPandas`` computes every
+signal per document with a ``Counter`` over its gram stream, O(tokens)
+per doc, so neither the text nor the gram occurrences ever shuffle. An
+explode+groupBy formulation shuffled ~2 slim rows per token (it spilled
+past a single local disk at 4M pages) and measured 6-8x slower over 20k
+synthetic pages; a higher-order-function JVM rewrite measured ~3.5x
+slower. The values are exact integers identical to any SQL engine's
+(the DuckDB twin is ``queries.SQL_REP_SIGNALS``):
 
-- ``mode="groupby"`` (default, the many-disk cluster path): one
-  explode of slim (id, n, gram) triples for n ∈ {2, 5}, one groupBy on
-  (id, n, gram) with map-side partial aggregation, one per-doc rollup,
-  one join back to the map-side doc stats. Linear in tokens; the text
-  column itself never shuffles — but the exploded gram occurrences DO
-  (~2 rows per token: ≈4B slim rows per 4M pages), which is fine
-  spread across a cluster's disks and fatal on a one-disk box (the
-  spill exceeded local storage at 4M pages here).
-- ``mode="pandas"`` — zero shuffle, Arrow-batched: one ``mapInPandas``
-  computes every signal per document with a ``Counter`` over the gram
-  stream, O(tokens) per doc. The UDF boundary is the price; for a
-  spill-constrained or shuffle-dominated setting it is the cheapest
-  plan by far, and the per-doc work is exact-integer identical (the
-  tokenizer is Java ``\\s`` replicated as ``re.ASCII``; string
-  tie-breaks agree because UTF-8 byte order is code-point order).
+- tokenizer: Java ``\\s+`` (ASCII class) ⇒ ``re.compile(r"\\s+",
+  re.ASCII)`` — both are exactly ``[ \\t\\n\\x0B\\f\\r]``; Spark
+  ``trim`` strips 0x20 only ⇒ ``str.strip(' ')``.
+- an EMPTY trimmed doc splits to ``['']`` (n_tokens 1); a NULL doc
+  gives null stats and zeroed gram signals.
+- top-bigram tie-break: max (cnt, gram) in UTF-8-binary string order —
+  Python code-point comparison agrees because UTF-8 byte order
+  preserves code-point order.
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from typing import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-TOKEN_RE = r"\s+"
 
 OUT_COLS = [
     "n_chars",
@@ -56,193 +59,50 @@ OUT_COLS = [
     "dup_5gram_chars",
 ]
 
-
-def _toks(text_col: str):
-    return F.split(F.trim(F.col(text_col)), TOKEN_RE)
+_WS = re.compile(r"\s+", re.ASCII)
 
 
-def _with_toks(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, text, _toks): the token array MATERIALIZED as a column.
-
-    Building grams as ``transform(starts, i -> slice(split(text), i, n))``
-    with the split inlined re-evaluates the split PER ARRAY ELEMENT
-    (higher-order lambdas are interpreted; no common-subexpression
-    elimination crosses the lambda boundary) — O(tokens²) per document,
-    measured 55× slower at ~600-token pages. Referencing a projected
-    attribute keeps the split once-per-row; Catalyst's CollapseProject
-    leaves the alias alone because it is non-cheap and multiply
-    referenced."""
-    return docs.select(
-        F.col(id_col), F.col(text_col), _toks(text_col).alias("_toks")
-    )
-
-
-def _doc_stats(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Map-side per-doc stats — array_distinct is linear, no shuffle."""
-    toks = _toks(text_col)
-    return docs.select(
-        F.col(id_col),
-        F.length(F.trim(F.col(text_col))).cast("long").alias("n_chars"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        (F.size(toks) - F.size(F.array_distinct(toks)))
-        .cast("long")
-        .alias("n_dup_tokens"),
-    )
-
-
-def _grams(toks, n: int):
-    """Array of space-joined n-grams (empty for docs shorter than n)."""
-    starts = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+def _signals(t: str | None) -> tuple:
+    """The six signals of one document, in ``OUT_COLS`` order."""
+    if t is None:
+        return (None, None, None, None, 0, 0)
+    trimmed = t.strip(" ")
+    toks = _WS.split(trimmed)
+    n = len(toks)
+    top_gram, top_cnt, dup5 = None, 0, 0
+    if n >= 2:
+        c2 = Counter(" ".join(toks[j : j + 2]) for j in range(n - 1))
+        top_cnt = max(c2.values())
+        top_gram = max(g for g, c in c2.items() if c == top_cnt)
+    if n >= 5:
+        c5 = Counter(" ".join(toks[j : j + 5]) for j in range(n - 4))
+        dup5 = sum(c * len(g) for g, c in c5.items() if c >= 2)
+    return (len(trimmed), n, n - len(set(toks)), top_gram, top_cnt, dup5)
 
 
 def repetition_signals(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "groupby",
 ) -> DataFrame:
     """→ (``id_col``, n_chars, n_tokens, n_dup_tokens, top_bigram,
     top_bigram_count, dup_5gram_chars) — see module docstring for the
     signal definitions. ``top_bigram`` is NULL (count 0) for docs with
     fewer than two tokens."""
-    if mode == "pandas":
-        return _signals_pandas(docs, id_col, text_col)
-    if mode != "groupby":
-        raise ValueError(f"mode must be 'groupby' or 'pandas', got {mode!r}")
-
-    stats = _doc_stats(docs, id_col, text_col)
-    toks = F.col("_toks")
-    # One explode for both gram sizes: slim (id, n, gram) triples only —
-    # the text column never shuffles. Token array materialized once per
-    # row (see _with_toks — inlining it is quadratic in tokens).
-    sites = _with_toks(docs, id_col, text_col).select(
-        F.col(id_col),
-        F.explode(
-            F.concat(
-                F.transform(
-                    _grams(toks, 2),
-                    lambda g: F.struct(F.lit(2).alias("n"), g.alias("gram")),
-                ),
-                F.transform(
-                    _grams(toks, 5),
-                    lambda g: F.struct(F.lit(5).alias("n"), g.alias("gram")),
-                ),
-            )
-        ).alias("_g"),
-    ).select(id_col, F.col("_g.n").alias("n"), F.col("_g.gram").alias("gram"))
-    counts = sites.groupBy(id_col, "n", "gram").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    per_doc = counts.groupBy(id_col).agg(
-        F.max(
-            F.when(F.col("n") == 2, F.struct(F.col("cnt"), F.col("gram")))
-        ).alias("_top2"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    (F.col("n") == 5) & (F.col("cnt") >= 2),
-                    F.col("cnt") * F.length(F.col("gram")),
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("dup_5gram_chars"),
-    )
-    return (
-        stats.join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            "n_chars",
-            "n_tokens",
-            "n_dup_tokens",
-            F.col("_top2.gram").alias("top_bigram"),
-            F.coalesce(F.col("_top2.cnt"), F.lit(0))
-            .cast("long")
-            .alias("top_bigram_count"),
-            F.coalesce(F.col("dup_5gram_chars"), F.lit(0))
-            .cast("long")
-            .alias("dup_5gram_chars"),
-        )
-    )
-
-
-def _signals_pandas(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Zero-shuffle Arrow-batched variant: per-doc ``Counter`` over the
-    gram stream, O(tokens) per document — see the module docstring for
-    when this beats the groupby shuffle. Bit-for-bit parity contract
-    with the groupby mode (pinned by test_repetition_modes_agree):
-
-    - tokenizer: Java ``\\s+`` (ASCII class) ⇒ ``re.compile(r"\\s+",
-      re.ASCII)`` — both are exactly ``[ \\t\\n\\x0B\\f\\r]``; Spark
-      ``trim`` strips 0x20 only ⇒ ``str.strip(' ')``.
-    - an EMPTY trimmed doc splits to ``['']`` in both engines
-      (n_tokens 1), a NULL doc gives null stats and zeroed gram
-      signals (the groupby left-join shape).
-    - top-bigram tie-break: max (cnt, gram) with UTF-8-binary string
-      order — Python code-point comparison agrees because UTF-8 byte
-      order preserves code-point order.
-    """
-    import re
-    from collections import Counter
-    from typing import Iterator
-
-    import pandas as pd
-
     id_type = dict(docs.dtypes)[id_col]
     schema = (
         f"{id_col} {id_type}, n_chars long, n_tokens long, "
         "n_dup_tokens long, top_bigram string, top_bigram_count long, "
         "dup_5gram_chars long"
     )
-    ws = re.compile(r"\s+", re.ASCII)
-    cols = [
-        id_col,
-        "n_chars",
-        "n_tokens",
-        "n_dup_tokens",
-        "top_bigram",
-        "top_bigram_count",
-        "dup_5gram_chars",
-    ]
+    cols = [id_col, *OUT_COLS]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    rows.append((i, None, None, None, None, 0, 0))
-                    continue
-                trimmed = t.strip(" ")
-                toks = ws.split(trimmed)
-                n = len(toks)
-                top_gram, top_cnt, dup5 = None, 0, 0
-                if n >= 2:
-                    c2 = Counter(
-                        " ".join(toks[j : j + 2]) for j in range(n - 1)
-                    )
-                    m = max(c2.values())
-                    top_cnt = m
-                    top_gram = max(g for g, c in c2.items() if c == m)
-                if n >= 5:
-                    c5 = Counter(
-                        " ".join(toks[j : j + 5]) for j in range(n - 4)
-                    )
-                    dup5 = sum(c * len(g) for g, c in c5.items() if c >= 2)
-                rows.append(
-                    (
-                        i,
-                        len(trimmed),
-                        n,
-                        n - len(set(toks)),
-                        top_gram,
-                        top_cnt,
-                        dup5,
-                    )
-                )
+            rows = [
+                (i, *_signals(None if pd.isna(t) else t))
+                for i, t in zip(pdf[id_col], pdf[text_col])
+            ]
             yield pd.DataFrame(rows, columns=cols)
 
     return docs.select(id_col, text_col).mapInPandas(gen, schema=schema)

@@ -2224,12 +2224,11 @@ def q_rep_signals(spark, sf_dir):
     """Gopher-style repetition quality signals (Rae et al. 2021) —
     exact-integer numerators/denominators per doc, so the DuckDB twin
     reproduces every value bit-for-bit (no float thresholds in the
-    checked output). Uses the explode+groupBy long-document scale path;
-    the zero-shuffle higher-order-function twin is parity-pinned by
-    test_repetition."""
+    checked output). One zero-shuffle Arrow-batched pass over the
+    documents (operators/repetition.py)."""
     from .operators.repetition import repetition_signals
 
-    return repetition_signals(_docs(spark, sf_dir), mode="groupby")
+    return repetition_signals(_docs(spark, sf_dir))
 
 
 SQL_REP_SIGNALS = r"""

@@ -156,7 +156,7 @@ class HashMemo:
             src = os.path.join(tmp, f"shard={k}")
             # a staged shard is invisible until the manifest names it, so
             # a crash between staging and the commit surfaces no rows
-            staged = f".shard-{k}-{txn}"
+            staged = f"shard-{k}-{txn}"
             if os.path.exists(src):
                 os.rename(src, os.path.join(self.path, staged))
                 new_shards[str(k)] = staged

@@ -52,9 +52,11 @@ class PersistTracker:
         self._spark: SparkSession | None = None
 
     def persist(self, df: DataFrame) -> DataFrame:
-        """persist + register (idempotent on an already-persisted df)."""
-        df.persist()
-        self.frames.append(df)
+        """persist + register; a no-op on an already-persisted df, so a
+        frame persisted twice is neither re-cached nor registered twice."""
+        if not df.is_cached:
+            df.persist()
+            self.frames.append(df)
         return df
 
     def adopt_ids(self, spark: SparkSession, ids: set[int]) -> None:

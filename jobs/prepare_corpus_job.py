@@ -92,7 +92,6 @@ def prepare(
     robots_rules=None,
     robots_agent: str = "*",
     link_rank: bool = False,
-    rep_mode: str = "groupby",
     keep_html: bool = True,
 ):
     """Run the six-stage preparation over a pages DataFrame. Returns
@@ -195,16 +194,8 @@ def prepare(
         lineage["c4_clean"] = pages.select("url").count()
 
     # 2. Gopher repetition gate (keep verdicts are exact-integer).
-    # rep_mode picks the physical strategy (operators/repetition.py):
-    # "groupby" explodes slim (id, n, gram) triples — linear in tokens,
-    # the right plan when shuffle spreads across a cluster's disks;
-    # "pandas" computes the same signals in zero-shuffle Arrow batches
-    # — the plan for spill-constrained boxes (the gram shuffle exceeds
-    # one local disk at 4M pages).
     keep = repetition_filter(
-        repetition_signals(
-            pages, id_col="url", text_col="text", mode=rep_mode
-        ),
+        repetition_signals(pages, id_col="url", text_col="text"),
         id_col="url",
     ).where("keep").select("url")
     pages = pages.join(keep, "url", "left_semi")
@@ -454,14 +445,6 @@ def main() -> None:
         "without it html rejoins the kept rows at write time",
     )
     p.add_argument(
-        "--rep-mode",
-        choices=("groupby", "pandas"),
-        default="groupby",
-        help="repetition-signal strategy: groupby (gram shuffle — the "
-        "many-disk cluster plan), pandas (zero-shuffle Arrow batches — "
-        "the spill-constrained plan)",
-    )
-    p.add_argument(
         "--link-rank",
         action="store_true",
         help="attach a host_rank column: damped PageRank over the "
@@ -577,7 +560,6 @@ def main() -> None:
         robots_rules=robots_rules,
         robots_agent=args.robots_agent,
         link_rank=args.link_rank,
-        rep_mode=args.rep_mode,
         keep_html=not args.drop_html,
     )
     writer = mixed

@@ -99,14 +99,14 @@ def test_crashed_upsert_leaves_state_intact(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     rows = {r["url"]: r for r in memo.read().collect()}
     assert len(rows) == 16 and rows["u1"]["warc_ts"] == T1  # old state
-    orphans = [d for d in os.listdir(path) if d.startswith(".shard-")]
+    orphans = [d for d in os.listdir(path) if d.startswith("shard-")]
     assert len(orphans) > len(memo._load_manifest()["shards"])  # staged junk
 
     memo.upsert(_memo_df(spark, [("u1", 1, T2, None)]))
     rows = {r["url"]: r for r in memo.read().collect()}
     assert rows["u1"]["warc_ts"] == T2 and rows["u1"]["content_sha256"] == "s1"
     live = set(memo._load_manifest()["shards"].values())
-    on_disk = {d for d in os.listdir(path) if d.startswith(".shard-")}
+    on_disk = {d for d in os.listdir(path) if d.startswith("shard-")}
     assert on_disk == live  # orphans collected
 
 
@@ -147,10 +147,11 @@ def _write_five_column_memo(memo, rows):
 
 
 def test_five_column_manifested_memo_still_works(spark, tmp_path):
-    """A memo committed with the extra partial_hash column reads as
-    MEMO_SCHEMA, and upserts against it keep COALESCE keep-old on
-    content_sha256 while old 5-column and rewritten 4-column shards sit
-    side by side."""
+    """A memo committed with the extra partial_hash column (in the older
+    hidden ``.shard-<k>-<txn>`` dirs) reads as MEMO_SCHEMA, and upserts
+    against it keep COALESCE keep-old on content_sha256 while old
+    5-column and rewritten 4-column shards sit side by side; the
+    replaced hidden dir is collected."""
     import os
 
     import pyarrow.parquet as pq
@@ -171,6 +172,9 @@ def test_five_column_manifested_memo_still_works(spark, tmp_path):
     after = memo._load_manifest()["shards"]
     changed = [k for k in after if before[k] != after[k]]
     assert len(changed) == 1
+    assert before[changed[0]].startswith(".shard-")
+    assert after[changed[0]].startswith("shard-")
+    assert set(os.listdir(path)) == set(after.values()) | {"MANIFEST.json"}
 
     def columns(k):
         d = os.path.join(path, after[k])
@@ -191,6 +195,20 @@ def test_five_column_manifested_memo_still_works(spark, tmp_path):
             T1,
             f"s{i}",
         )
+
+
+def test_committed_shard_dirs_are_not_hidden(spark, tmp_path):
+    """Spark skips ``.``/``_``-prefixed paths as hidden, so a committed
+    shard directory must carry neither prefix."""
+    import os
+
+    path = str(tmp_path / "memo")
+    memo = HashMemo(spark, path, n_shards=4)
+    memo.upsert(_memo_df(spark, [(f"u{i}", i, T1, f"s{i}") for i in range(16)]))
+    live = set(memo._load_manifest()["shards"].values())
+    assert len(live) > 1
+    assert not any(d.startswith((".", "_")) for d in live)
+    assert set(os.listdir(path)) == live | {"MANIFEST.json"}
 
 
 def test_pre_manifest_memo_reads_as_empty(spark, pages_1k, tmp_path):

@@ -25,6 +25,13 @@ def test_pairwise_f1_gate(result, labels_1k):
     assert m["recall"] >= 0.99, m
 
 
+def test_tracker_registers_each_frame_once(result):
+    # the default audit hook persists page_meta on the same tracker the
+    # pipeline then hands it to: it must be cached and registered once
+    frames = result.tracker.frames
+    assert frames and len({id(f) for f in frames}) == len(frames)
+
+
 def test_exact_only_pipeline_matches_exact_labels(pages_1k, labels_1k):
     res = dedup_pipeline(pages_1k, include_near=False)
     m = pairwise_f1(res.clusters, labels_1k.where(F.col("kind") != "near"))

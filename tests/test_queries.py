@@ -46,6 +46,8 @@ SAMPLE = [
     "winnow_fingerprints",
     "winnow_overlap_pairs",
     "paragraph_dedup",
+    "rep_signals",
+    "rep_filter",
 ]
 
 

@@ -1,8 +1,8 @@
 """Gopher repetition signals, substring-span removal, URL canonicalization.
 
-Hand-computed truths plus the groupby/pandas physical-plan parity pin
-(the two strategies must agree on ANY input, including unicode and
-degenerate docs — the CORRECTNESS oracle only exercises one of them).
+Hand-computed truths (including the Java-``\\s``/``trim`` tokenizer edges
+and the UTF-8 tie-break) plus a DuckDB cross-check of the repetition
+signals at the synthetic corpus's real document lengths.
 """
 
 from __future__ import annotations
@@ -60,51 +60,56 @@ def test_repetition_signals_hand_truth(spark):
     assert d5["n_chars"] == len("héllo wörld héllo wörld")
 
 
-def test_repetition_modes_agree(spark):
+def test_repetition_signals_tokenizer_edges(spark):
     docs = _docs(
         spark,
-        REP_DOCS
-        + [
+        [
             (9, ""),
             # Java \s+ boundary set [ \t\n\x0B\f\r]: tab/VT/CR split,
-            # U+00A0/U+2009 (unicode whitespace) must NOT split in any
-            # mode, and leading \t must survive trim (trim is 0x20-only)
+            # U+00A0/U+2009 (unicode whitespace) must NOT split, and a
+            # leading \t / trailing \n survive trim (0x20-only) as empty
+            # edge tokens
             (10, "\ta b\x0bc\rd e f g h a b\n"),
             (11, None),
             # tie-break between multibyte grams: UTF-8 byte order ==
-            # code-point order, both modes must pick the same
+            # code-point order, so "ü b" (U+00FC) beats "é a" (U+00E9)
             (12, "é a é a ü b ü b"),
         ],
     )
-    a = sorted(
-        repetition_signals(docs, mode="groupby").collect(),
-        key=lambda r: r.doc_id,
-    )
-    c = sorted(
-        repetition_signals(docs, mode="pandas").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert a == c
+    out = {
+        r["doc_id"]: tuple(r)[1:]
+        for r in repetition_signals(docs).collect()
+    }
+    # (n_chars, n_tokens, n_dup_tokens, top_bigram, top_bigram_count,
+    #  dup_5gram_chars)
+    assert out[9] == (0, 1, 0, None, 0, 0)  # "" splits to [""]
+    # tokens ["", a, b, c, d, "e\u00a0f", "g\u2009h", a, b, ""]: 7 distinct
+    assert out[10] == (21, 10, 3, "a b", 2, 0)
+    assert out[11] == (None, None, None, None, 0, 0)
+    assert out[12] == (15, 8, 4, "ü b", 2, 0)
 
 
-def test_repetition_pandas_mode_at_synth_lengths(spark):
-    # the synthetic corpus's real length profile (~530-token mean) —
-    # the regime where groupby's gram shuffle is the cost: pandas
-    # must match groupby exactly
+def test_repetition_signals_match_duckdb_at_synth_lengths(spark):
+    # the synthetic corpus's real length profile (~530-token mean),
+    # checked against the DuckDB twin of the rep_signals query
+    import duckdb
+
+    from dedupe_algo_spark.queries import SQL_REP_SIGNALS
     from dedupe_algo_spark.synth import synth_pages
 
     docs = synth_pages(spark, 300).select(
         F.col("url").alias("doc_id"), "text"
     )
-    a = sorted(
-        repetition_signals(docs, mode="groupby").collect(),
-        key=lambda r: r.doc_id,
-    )
-    c = sorted(
-        repetition_signals(docs, mode="pandas").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert a == c
+    pdf = docs.toPandas()
+    # RE2's \s lacks \x0B (Java's has it): the twin only agrees on
+    # texts without one
+    assert not pdf["text"].str.contains("\x0b").any()
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(con.execute(SQL_REP_SIGNALS).fetchall())
+    got = sorted(tuple(r) for r in repetition_signals(docs).collect())
+    assert len(got) == 300
+    assert got == want
 
 
 def test_repetition_filter_bitmask(spark):
