@@ -1,13 +1,12 @@
-"""Multimodal column plumbing — image/audio/video as opaque binary.
+"""Multimodal column plumbing — media as an opaque ``binary`` column.
 
-Per the task spec: media payloads are ``binary`` columns with typed
-metadata; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas functions over ``mapInPandas``. The decode step is
-STUBBED in this container (no image/audio libs): ``decode_stub``
-raises ``NotImplementedError`` unless ``fake=True``, in which case it
-produces a deterministic fake feature (byte histogram) so the
-Spark-side plumbing — schema, partitioning, UDF signature, Arrow batch
-shape — is real and tested end-to-end.
+``doc_media`` derives a media table (payload + typed metadata) from the
+``documents`` table, and ``extract_features_csv`` runs feature
+extraction as an Arrow-batched ``mapInPandas`` pass over it. The
+package ships no image or audio codec, so the "decode" is the payload's
+UTF-8 codepoints and the feature is their 16-bin histogram; the Spark-side
+plumbing (schema, batch shape, scalar output) is what the
+``media_features`` query and its DuckDB oracle check.
 """
 
 from __future__ import annotations
@@ -20,84 +19,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import MEDIA_FEATURES_CSV_SCHEMA, MEDIA_FEATURES_SCHEMA, MEDIA_SCHEMA
-
-
-def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (binary payload = seeded bytes)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kinds = ["image", "audio", "video"]
-        mimes = {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                rng = np.random.default_rng([seed, int(i)])
-                kind = kinds[int(i) % 3]
-                payload = rng.integers(0, 256, size=int(rng.integers(64, 512)), dtype=np.uint8).tobytes()
-                rows.append(
-                    (
-                        int(i),
-                        kind,
-                        payload,
-                        mimes[kind],
-                        int(rng.integers(16, 4096)) if kind == "image" else None,
-                        int(rng.integers(16, 4096)) if kind == "image" else None,
-                        int(rng.integers(1000, 600000)) if kind != "image" else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=MEDIA_SCHEMA.fieldNames()
-            )
-
-    return spark.range(0, n, numPartitions=max(2, spark.sparkContext.defaultParallelism)).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
-
-
-def decode_stub(payload: bytes, mime: str, fake: bool = False) -> np.ndarray:
-    """Real deployments plug a codec here (PIL / torchaudio / pyav).
-    This container has none — the stub either raises or produces a
-    deterministic 16-bin byte histogram standing in for decoded features."""
-    if not fake:
-        raise NotImplementedError(
-            "media decoding requires image/audio codecs not present in this "
-            "container; pass fake=True for the deterministic stand-in"
-        )
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=16, range=(0, 256))
-    return hist.astype(np.int32)
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction: (media_id, kind, feature[16],
-    n_bytes). Batch shape and schema are the production contract; only
-    the decode internals are stubbed."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_stub(p, m, fake=fake).tolist()
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feature": feats,
-                    "n_bytes": pdf["payload"].map(len),
-                }
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
+from ..schemas import MEDIA_FEATURES_CSV_SCHEMA
 
 
 def doc_media(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from the ``documents`` table —
-    payload = UTF-8 bytes of the text, kind/mime cycle by doc_id. Unlike
-    ``synth_media`` (numpy-seeded payloads, realistic but engine-specific),
-    every byte here is reproducible by any SQL engine, so the feature
-    extraction downstream can carry a DuckDB oracle."""
+    payload = UTF-8 bytes of the text, kind/mime cycle by doc_id. Every
+    byte is reproducible by any SQL engine, so the feature extraction
+    downstream can carry a DuckDB oracle."""
     kind = (
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")
@@ -120,10 +49,11 @@ def doc_media(docs: DataFrame) -> DataFrame:
 
 
 def extract_features_csv(media: DataFrame) -> DataFrame:
-    """Same mapInPandas plumbing as ``extract_features`` but the feature
-    vector leaves as a scalar CSV string: 16-bin histogram of the decoded
-    payload's codepoints (clipped to 255), bins of width 16. Scalar output
-    keeps every row hashable for sort/hash-based comparators."""
+    """mapInPandas feature extraction → (media_id, kind, feature_csv,
+    n_bytes). The feature is the 16-bin histogram of the decoded
+    payload's codepoints (clipped to 255), bins of width 16, as a
+    comma-joined string; scalar output keeps every row hashable for
+    sort/hash-based comparators."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -146,17 +76,3 @@ def extract_features_csv(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=MEDIA_FEATURES_CSV_SCHEMA)
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata rollup — pure built-ins over the binary column's
-    stats (never deserializes the payload)."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("payload")).alias("total_bytes"),
-            F.avg(F.length("payload")).alias("avg_bytes"),
-        )
-        .orderBy("kind")
-    )

@@ -1,36 +1,33 @@
-"""Similarity search over embedding columns (`array<float>`).
+"""Similarity search and near-duplicate detection over embedding
+columns (`array<float>`).
 
-Three paths per the task spec ("brute-force cosine top-k as the
-baseline; an IVF or LSH-bucketed variant as the scale path" — this
-module provides BOTH scale variants):
-
-* **Brute-force cosine top-k** — correctness baseline. Cosine is a pure
+* **Brute-force cosine top-k** (``brute_force_topk``) — cosine is a pure
   built-in reduction (``aggregate``/``zip_with`` over the two arrays —
   JVM-side, no Python), the query side is broadcast, and top-k is a
-  ranking window per query. O(N·Q) but fully distributed; right answer
-  at any scale, right *choice* only for small Q.
-* **LSH-bucketed (random hyperplane / SimHash-for-vectors)** — the
-  data-independent scale path: each vector hashes to ``n_tables``
-  signature buckets via random hyperplanes (Charikar 2002); neighbors
-  are only scored within shared buckets. Recall is tunable with
-  (n_bits, n_tables); candidate scoring reuses the same built-in cosine.
-* **IVF (inverted-file index, Jégou/Douze/Schmid 2011)** — the
-  data-adaptive scale path: spherical k-means centroids trained once on
-  a deterministic bounded sample, broadcast everywhere; each vector is
-  assigned map-side (one GEMM per Arrow batch) to its nearest cell(s);
-  queries probe only their ``n_probe`` nearest cells, so probe cost is
-  ~``n_probe/n_cells`` of the data instead of all of it. Training is
-  parallelism-invariant (hash-ordered sample, seeded init, fixed Lloyd
-  iterations) so the index — and every result — is reproducible across
-  cluster sizes.
+  ranking window per query. O(N·Q) but fully distributed.
+* **Near-duplicate pairs** — two bucketed generators that share one
+  slim self-join + exact-cosine tail (``_confirm_keyed_pairs``):
 
-Plus the dedup-side consumer of those pair generators:
+  - ``embedding_near_dupes`` — random-hyperplane LSH (SimHash for
+    vectors, Charikar 2002): data-independent; each vector hashes to
+    ``n_tables`` sign-pattern buckets, recall tunable with
+    (n_bits, n_tables).
+  - ``ivf_near_dupes`` — IVF cells (inverted-file index,
+    Jégou/Douze/Schmid 2011): data-adaptive; spherical k-means centroids
+    trained once on a deterministic bounded sample and broadcast, each
+    vector assigned map-side (one GEMM per Arrow batch) to its nearest
+    cells. Training is parallelism-invariant (hash-ordered sample,
+    seeded init, fixed Lloyd iterations), so every result is
+    reproducible across cluster sizes.
 
 * **Semantic dedup (SemDeDup, Abbas et al. 2023, public)** —
-  near-duplicate *pairs* are only half the training-data story; the
-  pipeline must decide which rows to KEEP. ``semantic_dedup`` closes
-  pairs into clusters with the same large-star/small-star CC the text
-  pipeline uses and applies a keeper policy per semantic cluster.
+  ``semantic_dedup`` closes pairs into clusters with the same
+  large-star/small-star CC the text pipeline uses and applies a keeper
+  policy per semantic cluster.
+
+A NULL embedding never pairs: it is neither sampled for training nor
+bucketed, so its row stays a singleton (its own keeper). Input without a
+single non-NULL embedding gives an empty pair frame.
 """
 
 from __future__ import annotations
@@ -61,27 +58,6 @@ def cosine_sim(a: Column, b: Column) -> Column:
     na = F.sqrt(F.aggregate(ad, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(bd, F.lit(0.0), lambda acc, x: acc + x * x))
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
-
-
-def _score_and_rank(
-    cands: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
-) -> DataFrame:
-    """Shared top-k tail: exact cosine against the carried ``_qvec``,
-    then a per-query ranking window (ties broken by id for determinism).
-    Every search variant ends here, so precision/tie-break fixes land
-    once."""
-    scored = cands.select(
-        query_id_col,
-        id_col,
-        F.round(cosine_sim(F.col(vec_col), F.col("_qvec")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
 
 
 def _confirm_keyed_pairs(
@@ -123,6 +99,15 @@ def _confirm_keyed_pairs(
     )
 
 
+def _no_pairs(vectors: DataFrame, id_col: str) -> DataFrame:
+    """The empty (id_a, id_b, cosine) frame, for input without a single
+    non-NULL vector."""
+    i = F.col(id_col)
+    return vectors.select(
+        i.alias("id_a"), i.alias("id_b"), F.lit(0.0).alias("cosine")
+    ).where(F.lit(False))
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -139,8 +124,18 @@ def brute_force_topk(
             F.col(query_id_col), F.col(vec_col).alias("_qvec")
         )
     )
-    crossed = vectors.select(id_col, vec_col).crossJoin(q)
-    return _score_and_rank(crossed, k, id_col, vec_col, query_id_col)
+    scored = vectors.select(id_col, vec_col).crossJoin(q).select(
+        query_id_col,
+        id_col,
+        F.round(cosine_sim(F.col(vec_col), F.col("_qvec")), 6).alias("cosine"),
+    )
+    # ties broken by id for determinism
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc("cosine"), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
 
 
 def _hyperplanes(dim: int, n_bits: int, n_tables: int) -> np.ndarray:
@@ -183,33 +178,6 @@ def hyperplane_buckets(dim: int, n_bits: int = 12, n_tables: int = 4):
     return buckets
 
 
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_bits: int = 12,
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: score only vectors sharing ≥1 hyperplane bucket
-    with the query. Same output shape as ``brute_force_topk`` (a vector
-    missed by every table is simply absent — the recall/cost dial)."""
-    bucketer = hyperplane_buckets(dim, n_bits, n_tables)
-    v = vectors.select(
-        id_col, vec_col, F.explode(bucketer(F.col(vec_col))).alias("bucket")
-    )
-    q = queries.select(
-        query_id_col,
-        F.col(vec_col).alias("_qvec"),
-        F.explode(bucketer(F.col(vec_col))).alias("bucket"),
-    )
-    cands = v.join(F.broadcast(q), "bucket").dropDuplicates([query_id_col, id_col])
-    return _score_and_rank(cands, k, id_col, vec_col, query_id_col)
-
-
 _IVF_SEED = 0x1F5EED
 
 
@@ -230,14 +198,18 @@ def train_ivf_centroids(
     partitioning or cluster size. Training is driver-side numpy on ≤
     ``sample_cap`` rows (bounded, like cluster._local_cc); everything
     downstream of training is map-side against the broadcast centroids.
-    Seeded init + fixed Lloyd iterations ⇒ bit-reproducible index."""
+    Seeded init + fixed Lloyd iterations ⇒ bit-reproducible index.
+    Only non-NULL vectors are sampled; without any, there are 0 cells."""
     sample = (
-        vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("v"))
+        vectors.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("v"))
         .orderBy(F.xxhash64(F.col("_id")), F.col("_id"))
         .limit(int(sample_cap))
         .select("v")
         .toPandas()
     )
+    if sample.empty:
+        return np.zeros((0, 0), dtype=np.float32)
     x = np.vstack([np.asarray(v, dtype=np.float64) for v in sample["v"]])
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     x = x / np.where(norms == 0, 1.0, norms)
@@ -302,41 +274,6 @@ def ivf_cell_assigner(centroids: np.ndarray, n_assign: int = 1):
     return cells
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVF approximate top-k: score only vectors whose cell is among the
-    query's ``n_probe`` nearest cells. Same output shape as
-    ``brute_force_topk``. The vector side carries one extra INT column
-    (its cell — map-side GEMM, no shuffle); the query side explodes to
-    ``n_probe`` rows and is broadcast, so the probe is a broadcast-hash
-    join touching ~``n_probe/n_cells`` of the data."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, n_cells=n_cells, id_col=id_col, vec_col=vec_col
-        )
-    one = ivf_cell_assigner(centroids, n_assign=1)
-    probe = ivf_cell_assigner(centroids, n_assign=n_probe)
-    v = vectors.select(
-        id_col, vec_col, F.element_at(one(F.col(vec_col)), 1).alias("cell")
-    )
-    q = queries.select(
-        query_id_col,
-        F.col(vec_col).alias("_qvec"),
-        F.explode(probe(F.col(vec_col))).alias("cell"),
-    )
-    cands = v.join(F.broadcast(q), "cell")
-    return _score_and_rank(cands, k, id_col, vec_col, query_id_col)
-
-
 def ivf_near_dupes(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -356,6 +293,8 @@ def ivf_near_dupes(
         centroids = train_ivf_centroids(
             vectors, n_cells=n_cells, id_col=id_col, vec_col=vec_col
         )
+    if len(centroids) == 0:
+        return _no_pairs(vectors, id_col)
     assign = ivf_cell_assigner(centroids, n_assign=n_assign)
     b = vectors.select(
         F.col(id_col), F.explode(assign(F.col(vec_col))).alias("cell")
@@ -379,7 +318,13 @@ def embedding_near_dupes(
     The bucket self-join carries ONLY (bucket, id) — never the vector
     payload ×n_tables; see ``_confirm_keyed_pairs``."""
     if dim is None:
-        first = vectors.select(F.size(vec_col).alias("d")).first()
+        first = (
+            vectors.where(F.col(vec_col).isNotNull())
+            .select(F.size(vec_col).alias("d"))
+            .first()
+        )
+        if first is None:
+            return _no_pairs(vectors, id_col)
         dim = int(first["d"])
     bucketer = hyperplane_buckets(dim, n_bits, n_tables)
     b = vectors.select(

@@ -2,9 +2,8 @@
 
 Reference: pass 1 buckets by file size and discards singleton buckets
 before any I/O (lib.rs:54-64). Ours blocks by
-``(length_bucket, registered_domain)`` (north_star pass 1), prunes
-singleton blocks the same way, and salts hot keys so head domains don't
-produce straggler partitions at 10^12 rows.
+``(length_bucket, registered_domain)`` (north_star pass 1) and prunes
+singleton blocks the same way.
 
 All shuffles here are on the block key; the singleton prune uses a
 window count over the same partitioning Catalyst already created for the
@@ -18,8 +17,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import length_bucket
 from ..functions.urls import registered_domain
-
-MAX_BLOCK_ROWS = 20_000  # pair cap guard: 20k rows → ≤2·10^8 pairs per block
 
 
 def block_key(text: Column, url: Column) -> Column:
@@ -40,17 +37,6 @@ def prune_singleton_blocks(df: DataFrame, key: str | list[str] = "block_key") ->
         df.withColumn("_n", F.count(F.lit(1)).over(w))
         .where(F.col("_n") >= 2)
         .drop("_n")
-    )
-
-
-def salted(df: DataFrame, key: str = "block_key", buckets: int = 16) -> DataFrame:
-    """Append a salt to hot keys for shuffle-balance-sensitive stages
-    (hash confirm, scoring). Exact-dup grouping is salt-safe because the
-    content hash refines the block key; for pair generation use
-    ``candidates.candidate_pairs`` which handles hot blocks explicitly."""
-    return df.withColumn(
-        "salted_key",
-        F.concat_ws("#", F.col(key), (F.crc32(F.col("url")) % buckets).cast("string")),
     )
 
 

@@ -171,17 +171,3 @@ def exact_dup_assignments(
     """
     meta = page_meta(pages, min_len=min_len, with_signature=False)
     return exact_view(assign_exact(meta), keep_singletons=keep_singletons)
-
-
-def exact_dup_groups(pages: DataFrame, min_len: int = 10) -> DataFrame:
-    """Nested ScanResult-shaped view (reference lib.rs:18-21):
-    one row per cluster with the member list collected. Only for
-    human-scale result sets — at 10^12 rows keep the flat assignment."""
-    flat = exact_dup_assignments(pages, min_len=min_len)
-    return (
-        flat.groupBy("cluster_id", "text_len", "content_sha256")
-        .agg(
-            F.sort_array(F.collect_list("url")).alias("urls"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-    )

@@ -1,96 +1,10 @@
-"""Scan-time filters — the reference's traversal-time pushdown set.
-
-The reference evaluates all of these during the filesystem walk so
-excluded rows never materialize (scanner.rs:139-189); we express them as
-plain Column predicates so Catalyst pushes what it can into the scan and
-evaluates the rest before anything wide happens.
-"""
+"""Path helpers — the reference's basename/dirname split of a path
+string, as plain Column expressions (JVM side, codegen eligible)."""
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# F1 — path-prefix blacklist (scanner.rs:80-85): system prefixes → ours,
-# URL prefixes that never carry content worth deduping.
-URL_PREFIX_BLACKLIST = [
-    "https://localhost",
-    "http://localhost",
-    "https://127.0.0.1",
-    "http://127.0.0.1",
-]
-
-# F2 — path-component blacklist (scanner.rs:87-91): dev folders → ours,
-# path segments marking non-content pages.
-SEGMENT_BLACKLIST = [
-    "cgi-bin", "wp-admin", "wp-json", "api", "static", "assets",
-    "node_modules", ".git",
-]
-
-# F4 — extension whitelist (scanner.rs:93-117): ~45 extensions gated by
-# type toggles; ours keeps the toggle structure over web content types.
-EXT_DOCS = ["html", "htm", "txt", "md", "xml", "json"]
-EXT_IMAGES = ["jpg", "jpeg", "png", "gif", "webp", "svg"]
-EXT_VIDEOS = ["mp4", "webm", "avi", "mov"]
-EXT_ARCHIVES = ["zip", "gz", "tar", "7z"]
-
-
-def not_blacklisted_prefix(url: Column) -> Column:
-    """F1 — drop rows whose url starts with any blacklisted prefix."""
-    return ~reduce(or_, [url.startswith(p) for p in URL_PREFIX_BLACKLIST])
-
-
-def no_blacklisted_segment(url: Column) -> Column:
-    """F2 — drop rows with a blacklisted path component, checked per
-    segment (exists over split), like the reference's per-component walk
-    (scanner.rs:154-173)."""
-    segs = F.split(url, "/")
-    return ~F.exists(segs, lambda s: s.isin(SEGMENT_BLACKLIST))
-
-
-def not_hidden(url: Column) -> Column:
-    """F3 — hidden-file filter: last path segment starts with '.'
-    (scanner.rs:139-147)."""
-    return ~F.element_at(F.split(url, "/"), -1).startswith(".")
-
-
-def url_extension(url: Column) -> Column:
-    """C3 — lowercased extension of the last path segment; '' if none."""
-    last = F.element_at(F.split(url, "/"), -1)
-    return F.when(
-        last.contains("."), F.lower(F.substring_index(last, ".", -1))
-    ).otherwise(F.lit(""))
-
-
-def extension_whitelist(
-    url: Column,
-    include_images: bool = False,
-    include_videos: bool = False,
-    include_archives: bool = False,
-) -> Column:
-    """F4 — config-driven whitelist with type toggles (scanner.rs:93-117).
-    Extension-less urls (the common web page) pass with the docs class."""
-    allowed = list(EXT_DOCS)
-    if include_images:
-        allowed += EXT_IMAGES
-    if include_videos:
-        allowed += EXT_VIDEOS
-    if include_archives:
-        allowed += EXT_ARCHIVES
-    ext = url_extension(url)
-    return (ext == "") | ext.isin(allowed)
-
-
-def system_name_filter(name: Column) -> Column:
-    """F10 — drop system artifacts case-insensitively plus the
-    ``found.NNN`` numeric pattern (lib.rs:383-403)."""
-    lowered = F.lower(name)
-    return ~lowered.isin(
-        ["$recycle.bin", ".spotlight-v100", ".trashes", "system volume information"]
-    ) & ~name.rlike(r"^found\.[0-9]+$")
 
 
 def basename(path: Column) -> Column:
@@ -106,27 +20,3 @@ def dirname(path: Column) -> Column:
     return F.when(
         path.contains("/"), F.regexp_replace(path, r"/[^/]*$", "")
     ).otherwise(F.lit(""))
-
-
-def name_contains(name: Column, query: str) -> Column:
-    """F9 — case-insensitive substring filter on an entry name
-    (FileExplorerView.tsx:321-323)."""
-    return F.lower(name).contains(query.lower())
-
-
-def removable_only(drives: DataFrame) -> DataFrame:
-    """F11 — keep removable drives only (Sidebar.tsx:108-112:
-    ``drives.filter(d => d.is_removable)``)."""
-    return drives.where(F.col("is_removable"))
-
-
-def extension_category(url: Column) -> Column:
-    """C14 — extension→category classifier (dataTransform.ts:30-44)."""
-    ext = url_extension(url)
-    return (
-        F.when(ext.isin(EXT_IMAGES), "Images")
-        .when(ext.isin(EXT_VIDEOS), "Videos")
-        .when(ext.isin(EXT_DOCS), "Documents")
-        .when(ext.isin(EXT_ARCHIVES), "Archives")
-        .otherwise("Others")
-    )

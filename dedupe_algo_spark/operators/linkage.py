@@ -36,7 +36,6 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -314,14 +313,6 @@ def expected_pattern_counts(
             pu *= u[i] if gamma[i] else 1.0 - u[i]
         out.append((gamma, round(total * (pm + pu))))
     return out
-
-
-def fs_log_weight(m: float, u: float, agree: bool) -> float:
-    """Reference-form log2 field weight (Fellegi–Sunter's w_i). Kept as
-    a driver-side helper (reporting / threshold calibration) — the
-    distributed scorer multiplies raw ratios instead so the scored
-    column avoids cross-libm log differences."""
-    return math.log2(m / u) if agree else math.log2((1.0 - m) / (1.0 - u))
 
 
 # ---------------------------------------------------------------------------

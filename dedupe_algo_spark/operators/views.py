@@ -114,42 +114,6 @@ def top_k_preview(df: DataFrame, order: list[Column], k: int = 100) -> DataFrame
     return df.orderBy(*order).limit(k)
 
 
-def selection_impact(
-    clusters: DataFrame,
-    selection: DataFrame,
-    category: Column,
-    size_col: str = "size",
-    path_col: str = "url",
-) -> DataFrame:
-    """A9/J2 — deletion-impact summary: join the selection (small →
-    broadcast) and roll up count + size per category
-    (DeleteConfirmation.tsx:23-58)."""
-    j = clusters.join(F.broadcast(selection), path_col, "inner")
-    return (
-        j.withColumn("category", category)
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("n_files"), F.sum(size_col).alias("total_size"))
-        .orderBy(F.desc("total_size"), "category")
-    )
-
-
-def apply_deletion(
-    clusters: DataFrame,
-    deleted: DataFrame,
-    cluster_col: str = "cluster_id",
-    path_col: str = "url",
-) -> DataFrame:
-    """J5 + re-applied F7 — anti-join deleted paths out of the result,
-    then drop clusters that fell under 2 members (useStore.ts:116-127)."""
-    kept = clusters.join(F.broadcast(deleted), path_col, "left_anti")
-    w = Window.partitionBy(cluster_col)
-    return (
-        kept.withColumn("_n", F.count(F.lit(1)).over(w))
-        .where(F.col("_n") >= 2)
-        .drop("_n")
-    )
-
-
 def longest_prefix_join(
     paths: DataFrame,
     mounts: DataFrame,

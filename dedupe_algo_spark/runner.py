@@ -16,7 +16,6 @@ import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .sources.audit import AuditLog, new_run_id
 
@@ -53,24 +52,3 @@ class CheckpointedRun:
         )
         self.computed.append(name)
         return out
-
-
-def run_dedup_checkpointed(
-    spark: SparkSession,
-    pages: DataFrame,
-    workdir: str,
-    run_id: str | None = None,
-    **pipeline_kwargs,
-) -> tuple[DataFrame, CheckpointedRun]:
-    """The full dedup pipeline with stage-level commit/resume: the
-    exact assignment, near-edge, and component stages each commit, and a
-    re-run over the same workdir resumes from the last committed one."""
-    from .pipeline import dedup_pipeline
-
-    run = CheckpointedRun(spark, workdir, run_id)
-    result = dedup_pipeline(pages, stage=run.stage, **pipeline_kwargs)
-    clusters = run.stage("clusters", lambda: result.clusters)
-    # every stage is committed to parquet now — the in-memory
-    # intermediates are dead weight in a long-lived session
-    result.unpersist()
-    return clusters, run

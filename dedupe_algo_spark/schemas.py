@@ -10,10 +10,8 @@ BASELINE.json input_hint exactly.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -70,52 +68,9 @@ AUDIT_SCHEMA = StructType(
     ]
 )
 
-# Flat cluster assignment (url → cluster). At 10^12 rows the nested
-# groups shape of the reference (ScanResult.groups, lib.rs:18-21) is kept
-# flat; the nested view is derivable via collect_list when small.
-CLUSTERS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), nullable=False),
-        StructField("cluster_id", StringType(), nullable=False),
-        StructField("match_kind", StringType(), nullable=False),  # exact|near
-    ]
-)
-
-# Match edge between two pages (candidate pair that survived scoring).
-EDGES_SCHEMA = StructType(
-    [
-        StructField("url_a", StringType(), nullable=False),
-        StructField("url_b", StringType(), nullable=False),
-        StructField("score", DoubleType(), nullable=True),
-    ]
-)
-
-# Multimodal: opaque binary payload + typed metadata (task spec — image /
-# audio / video as binary columns; decode stubbed in this container).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), nullable=False),
-        StructField("kind", StringType(), nullable=False),  # image|audio|video
-        StructField("payload", BinaryType(), nullable=False),
-        StructField("mime", StringType(), nullable=False),
-        StructField("width", IntegerType(), nullable=True),
-        StructField("height", IntegerType(), nullable=True),
-        StructField("duration_ms", LongType(), nullable=True),
-    ]
-)
-
-MEDIA_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), nullable=False),
-        StructField("kind", StringType(), nullable=False),
-        StructField("feature", ArrayType(IntegerType()), nullable=False),
-        StructField("n_bytes", LongType(), nullable=False),
-    ]
-)
-
-# Scalar-encoded twin of MEDIA_FEATURES_SCHEMA: the 16-bin histogram as a
-# comma-joined string, so downstream comparators that sort/hash rows
-# (e.g. the driver's canonicalizer) see only hashable scalars.
+# Multimodal features (multimodal.extract_features_csv): the 16-bin
+# histogram as a comma-joined string, so downstream comparators that
+# sort/hash rows see only hashable scalars.
 MEDIA_FEATURES_CSV_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), nullable=False),

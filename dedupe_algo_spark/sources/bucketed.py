@@ -90,22 +90,6 @@ def incremental_unseen(
     return batch.join(corpus.select(key), on=key, how="left_anti")
 
 
-def incremental_seen_lookup(
-    batch: DataFrame, corpus: DataFrame, key: str = "content_sha256"
-) -> DataFrame:
-    """Inner lookup variant: batch rows annotated with their existing
-    corpus assignment (columns of ``corpus`` prefixed ``corpus_``)."""
-    right = corpus.select(
-        *[
-            (  # keep the join key un-prefixed; prefix the payload
-                corpus[c] if c == key else corpus[c].alias(f"corpus_{c}")
-            )
-            for c in corpus.columns
-        ]
-    )
-    return batch.join(right, on=key, how="inner")
-
-
 # ---------------------------------------------------------------------------
 # Near-duplicate tier: the same exchange-free-corpus contract for the LSH
 # path. Two materialized tables make an incremental *near*-dedup index:

@@ -1,4 +1,5 @@
-"""Similarity search: brute-force correctness vs numpy; LSH recall."""
+"""Similarity search: brute-force correctness vs numpy; near-dup pairs
+(LSH, IVF) and SemDeDup clustering."""
 
 from __future__ import annotations
 
@@ -10,7 +11,8 @@ from dedupe_algo_spark.operators.ann import (
     brute_force_topk,
     cosine_sim,
     embedding_near_dupes,
-    lsh_topk,
+    ivf_near_dupes,
+    semantic_dedup,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -55,26 +57,6 @@ def test_brute_force_topk_shape(spark, emb):
         assert (grp.sort_values("rank")["cosine"].diff().dropna() <= 1e-12).all()
 
 
-def test_lsh_topk_recall(spark, emb):
-    # These embeddings' true top-5 sit near cosine ≈ 0.3 (nearly
-    # orthogonal) — the adversarial case for hyperplane LSH, where
-    # per-table collision prob is (1-acos(c)/pi)^bits. Few bits + many
-    # tables is the correct dial: 4 bits × 16 tables ⇒ ~0.9 expected
-    # recall at c=0.3.
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, k=5).toPandas()
-    approx = lsh_topk(emb, queries, dim=64, k=5, n_bits=4, n_tables=16).toPandas()
-    e = set(map(tuple, exact[["query_id", "vec_id"]].values))
-    a = set(map(tuple, approx[["query_id", "vec_id"]].values))
-    recall = len(e & a) / len(e)
-    assert recall >= 0.6, recall
-    # self-retrieval is certain (identical sign pattern in every table)
-    r1 = approx[approx["rank"] == 1]
-    assert (r1["query_id"] == r1["vec_id"]).all()
-
-
 def test_embedding_near_dupes_symmetry_and_threshold(spark, emb):
     pairs = embedding_near_dupes(emb, threshold=0.8, n_bits=6, n_tables=8).toPandas()
     assert (pairs["id_a"] < pairs["id_b"]).all()
@@ -94,25 +76,26 @@ def test_ivf_training_is_deterministic_and_bounded(spark, emb):
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0, atol=1e-5)
 
 
-def test_ivf_topk_recall(spark, emb):
-    """IVF probe recall on near-orthogonal vectors — the adversarial
-    case: k-means cells on isotropic data are near-random partitions,
-    so recall ≈ n_probe/n_cells plus the own-cell bias. Probing 6 of 8
-    cells must surface most of the true top-5; self-retrieval is
-    certain (a vector's own cell is always its best cell)."""
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    from dedupe_algo_spark.operators.ann import ivf_topk
-
-    exact = brute_force_topk(emb, queries, k=5).toPandas()
-    approx = ivf_topk(emb, queries, k=5, n_cells=8, n_probe=6).toPandas()
-    e = set(map(tuple, exact[["query_id", "vec_id"]].values))
-    a = set(map(tuple, approx[["query_id", "vec_id"]].values))
-    assert len(e & a) / len(e) >= 0.6
-    r1 = approx[approx["rank"] == 1]
-    assert (r1["query_id"] == r1["vec_id"]).all()
-    assert (r1["cosine"] == 1.0).all()
+def test_null_and_empty_embeddings_stay_unpaired(spark):
+    """A NULL embedding never pairs and never feeds IVF training; input
+    with no non-NULL embedding (empty or all-NULL) gives no pairs, and
+    semantic_dedup keeps every such row as its own keeper."""
+    schema = "vec_id long, embedding array<float>"
+    e1, e2 = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    four = spark.createDataFrame([(1, e1), (2, e1), (3, None), (4, e2)], schema)
+    inputs = [  # (vectors, pairs, vec_id -> sem_cluster)
+        (four, {(1, 2)}, {1: 1, 2: 1, 3: 3, 4: 4}),
+        (spark.createDataFrame([], schema), set(), {}),
+        (spark.createDataFrame([(1, None), (2, None)], schema), set(), {1: 1, 2: 2}),
+    ]
+    for vectors, pairs, clusters in inputs:
+        for near_dupes in (embedding_near_dupes, ivf_near_dupes):
+            got = near_dupes(vectors, threshold=0.9).collect()
+            assert {(r["id_a"], r["id_b"]) for r in got} == pairs
+        for policy in ("min_id", "farthest_from_centroid"):
+            out = semantic_dedup(vectors, threshold=0.9, keep_policy=policy).collect()
+            assert {r["vec_id"]: r["sem_cluster"] for r in out} == clusters
+            assert {r["vec_id"] for r in out if r["keep"]} == set(clusters.values())
 
 
 def test_ivf_pairs_match_exhaustive_on_planted(spark):

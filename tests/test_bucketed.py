@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from dedupe_algo_spark.plans import formatted_plan
 from dedupe_algo_spark.sources.bucketed import (
-    incremental_seen_lookup,
     incremental_unseen,
     read_bucketed,
     write_bucketed,
@@ -42,17 +41,7 @@ def test_unseen_semantics(spark, corpus):
     assert got == list(range(1000, 1010))
 
 
-def test_seen_lookup_semantics(spark, corpus):
-    batch = _batch(spark, 995, 1005)
-    out = incremental_seen_lookup(batch, corpus).collect()
-    assert sorted(r["batch_id"] for r in out) == list(range(995, 1000))
-    assert all(r["corpus_url"] == f"https://c/{r['batch_id']}" for r in out)
-
-
-@pytest.mark.parametrize(
-    "join_fn", [incremental_unseen, incremental_seen_lookup], ids=["anti", "inner"]
-)
-def test_corpus_side_never_shuffles(spark, corpus, join_fn):
+def test_corpus_side_never_shuffles(spark, corpus):
     """The point of the layout: the (huge) corpus scan feeds the join
     directly — no Exchange above it. The batch side shuffles into the
     corpus's bucket scheme (exactly one Exchange in the whole plan)."""
@@ -62,7 +51,7 @@ def test_corpus_side_never_shuffles(spark, corpus, join_fn):
         import re
 
         batch = _batch(spark, 0, 100)
-        plan = formatted_plan(join_fn(batch, corpus))
+        plan = formatted_plan(incremental_unseen(batch, corpus))
         n_exchange = sum(
             1
             for line in plan.splitlines()

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dedupe_algo_spark.operators.dedup import exact_dup_assignments, exact_dup_groups
+from dedupe_algo_spark.operators.dedup import exact_dup_assignments
 from dedupe_algo_spark.schemas import PAGES_SCHEMA
 
 
@@ -75,14 +75,6 @@ def test_partial_window_boundary(spark):
     assert exact_dup_assignments(df).count() == 0  # full hash separates
     out = exact_dup_assignments(df, keep_singletons=True).toPandas()
     assert out["content_sha256"].nunique() == 2
-
-
-def test_grouped_view_shape(spark, pages_1k):
-    g = exact_dup_groups(pages_1k)
-    pdf = g.orderBy(F.desc("n_members")).limit(1).toPandas()
-    assert pdf.iloc[0]["n_members"] == 42  # skew-block cluster
-    assert len(pdf.iloc[0]["urls"]) == 42
-    assert list(pdf.iloc[0]["urls"]) == sorted(pdf.iloc[0]["urls"])
 
 
 def test_page_meta_hashes_match_hashlib(spark):

@@ -1,79 +1,11 @@
-"""Scan filters (F1-F4, F10, C14), format scalars (C5/C6/C13), and the
-listing/parse/delete sources (S6, S8-S10)."""
+"""Path helpers (C4): ``basename``/``dirname``, the split behind the
+``dirname_rollup`` query."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
-from dedupe_algo_spark.functions.format import bytes_human, epoch_to_date, percent
 from dedupe_algo_spark.operators import filters
-
-
-def _urls(spark, urls):
-    return spark.createDataFrame([(u,) for u in urls], "url string")
-
-
-def test_prefix_blacklist(spark):
-    df = _urls(spark, ["https://localhost/x", "https://site.com/y"])
-    out = df.where(filters.not_blacklisted_prefix(F.col("url"))).collect()
-    assert [r["url"] for r in out] == ["https://site.com/y"]
-
-
-def test_segment_blacklist(spark):
-    df = _urls(
-        spark,
-        [
-            "https://a.com/static/app.js",
-            "https://a.com/blog/post",
-            "https://a.com/wp-admin/x",
-        ],
-    )
-    out = df.where(filters.no_blacklisted_segment(F.col("url"))).collect()
-    assert [r["url"] for r in out] == ["https://a.com/blog/post"]
-
-
-def test_hidden_filter(spark):
-    df = _urls(spark, ["https://a.com/.hidden", "https://a.com/vis"])
-    out = df.where(filters.not_hidden(F.col("url"))).collect()
-    assert [r["url"] for r in out] == ["https://a.com/vis"]
-
-
-def test_extension_whitelist_toggles(spark):
-    df = _urls(
-        spark,
-        [
-            "https://a.com/page.html",
-            "https://a.com/pic.JPG",
-            "https://a.com/clip.mp4",
-            "https://a.com/plain",
-        ],
-    )
-    base = df.where(filters.extension_whitelist(F.col("url"))).count()
-    with_img = df.where(
-        filters.extension_whitelist(F.col("url"), include_images=True)
-    ).count()
-    assert base == 2  # .html + extension-less
-    assert with_img == 3  # + .JPG (case-insensitive, scanner.rs:176-179)
-
-
-def test_system_name_filter(spark):
-    df = spark.createDataFrame(
-        [("$RECYCLE.BIN",), ("found.001",), ("Documents",)], "name string"
-    )
-    out = df.where(filters.system_name_filter(F.col("name"))).collect()
-    assert [r["name"] for r in out] == ["Documents"]
-
-
-def test_extension_category(spark):
-    df = _urls(spark, ["https://a.com/x.png", "https://a.com/x.html", "https://a.com/x.bin"])
-    got = [
-        r["c"]
-        for r in df.select(filters.extension_category(F.col("url")).alias("c")).collect()
-    ]
-    assert got == ["Images", "Documents", "Others"]
 
 
 def test_basename_dirname(spark):
@@ -88,125 +20,3 @@ def test_basename_dirname(spark):
         ("", "solo"),  # no separator -> '' like the reference's empty slice
         ("", "rooted"),
     ]
-
-
-def test_name_contains(spark):
-    df = spark.createDataFrame([("Report.PDF",), ("notes.txt",)], "name string")
-    out = df.where(filters.name_contains(F.col("name"), "pdf")).collect()
-    assert [r["name"] for r in out] == ["Report.PDF"]
-
-
-def test_removable_filter_and_system_nodes(spark, tmp_path):
-    from dedupe_algo_spark.sources.listing import (
-        enrich_system_nodes,
-        parse_df_output,
-        system_nodes,
-    )
-
-    text = (
-        "Filesystem 1024-blocks Used Available Capacity Mounted on\n"
-        "/dev/disk3s1 1000 10 990 1% /\n"
-        "/dev/disk5s1 2000 1 1999 1% /Volumes/USB\n"
-    )
-    p = tmp_path / "df.txt"
-    p.write_text(text)
-    drives = parse_df_output(spark, str(p))
-    # F11 — removable drives only
-    rem = filters.removable_only(drives).collect()
-    assert [r["mount_point"] for r in rem] == ["/Volumes/USB"]
-    # S7 — static roots dimension + longest-prefix disk enrichment (J4)
-    nodes = system_nodes(spark, home="/home/user")
-    assert nodes.count() == 6
-    enriched = {r["name"]: r for r in enrich_system_nodes(nodes, drives).collect()}
-    assert enriched["Desktop"]["path"] == "/home/user/Desktop"
-    assert enriched["Desktop"]["mount_point"] == "/"
-    assert enriched["Desktop"]["total_space"] == 1000 * 1024
-
-
-def test_bytes_human(spark):
-    df = spark.createDataFrame([(0,), (512,), (2048,), (3 * 1024**2,)], "n long")
-    got = [r["h"] for r in df.select(bytes_human(F.col("n")).alias("h")).collect()]
-    assert got == ["0 B", "512.00 B", "2.00 KB", "3.00 MB"]
-
-
-def test_epoch_to_date_and_percent(spark):
-    df = spark.createDataFrame([(1767225600, 50, 200)], "e long, u long, t long")
-    row = df.select(
-        epoch_to_date(F.col("e")).alias("d"), percent(F.col("u"), F.col("t")).alias("p")
-    ).collect()[0]
-    assert row["d"] == "2026-01-01" and row["p"] == 25
-
-
-def test_parse_df_output(spark, tmp_path):
-    from dedupe_algo_spark.sources.listing import parse_df_output
-
-    text = (
-        "Filesystem 1024-blocks Used Available Capacity Mounted on\n"
-        "/dev/disk3s1 971350180 10000 861350180 12% /\n"
-        "devfs 400 400 0 100% /dev\n"
-        "/dev/disk5s1 1000000 1 999999 1% /Volumes/USB\n"
-        "map auto_home 0 0 0 100% /System/Volumes/Data/home\n"
-    )
-    p = tmp_path / "df.txt"
-    p.write_text(text)
-    out = {r["mount_point"]: r for r in parse_df_output(spark, str(p)).collect()}
-    assert set(out) == {"/", "/Volumes/USB"}
-    assert out["/"]["name"] == "System"
-    assert out["/"]["total_space"] == 971350180 * 1024
-    assert out["/Volumes/USB"]["is_removable"] is True
-    assert out["/"]["is_removable"] is False
-
-
-def test_list_directory_and_subdirs(spark, tmp_path):
-    from dedupe_algo_spark.sources.listing import list_directory, subdirectories
-
-    (tmp_path / "zeta").mkdir()
-    (tmp_path / "Alpha").mkdir()
-    (tmp_path / "$RECYCLE.BIN").mkdir()
-    (tmp_path / ".hidden").write_text("x")
-    (tmp_path / "b.txt").write_text("hello")
-    out = list_directory(spark, str(tmp_path)).collect()
-    # dirs first, case-insensitive alpha; system + hidden dropped (O5, F10, F3)
-    assert [r["name"] for r in out] == ["Alpha", "zeta", "b.txt"]
-    assert [r["name"] for r in subdirectories(spark, str(tmp_path)).collect()] == [
-        "Alpha",
-        "zeta",
-    ]
-
-
-def test_delete_urls_report_and_refilter(spark, tmp_path):
-    from dedupe_algo_spark.sources.listing import delete_urls
-    from dedupe_algo_spark.synth import synth_pages
-
-    table = str(tmp_path / "pages")
-    synth_pages(spark, 100).write.parquet(table)
-    targets = [
-        "https://" + r["url"].split("://")[1]
-        for r in spark.read.parquet(table).limit(2).collect()
-    ]
-    report = delete_urls(spark, table, targets + ["https://nope.com/x"])
-    assert report["success_count"] == 2
-    assert report["fail_count"] == 1
-    assert "not found: https://nope.com/x" in report["errors"]
-    remaining = spark.read.parquet(table)
-    assert remaining.count() == 98
-    assert remaining.where(F.col("url").isin(targets)).count() == 0
-
-
-def test_delete_urls_error_sample_is_bounded(spark, tmp_path):
-    """An oversized miss selection must not flood the driver: fail_count
-    stays exact while the error strings are a bounded sample."""
-    from dedupe_algo_spark.sources.listing import MAX_DELETE_ERRORS, delete_urls
-    from dedupe_algo_spark.synth import synth_pages
-
-    table = str(tmp_path / "pages")
-    synth_pages(spark, 50).write.parquet(table)
-    n_miss = MAX_DELETE_ERRORS + 500
-    misses = spark.range(n_miss).select(
-        F.concat(F.lit("https://missing.example/"), F.col("id")).alias("url")
-    )
-    report = delete_urls(spark, table, misses)
-    assert report["success_count"] == 0
-    assert report["fail_count"] == n_miss  # exact, from the anti-join count
-    assert len(report["errors"]) == MAX_DELETE_ERRORS  # bounded sample
-    assert spark.read.parquet(table).count() == 50

@@ -1,8 +1,7 @@
-"""Incremental pipeline: memo reuse semantics + salted aggregation."""
+"""Incremental pipeline: memo reuse semantics."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,53 +53,6 @@ def test_incremental_equals_cold_on_empty_memo(spark, pages_1k):
     b = cold.orderBy("url").toPandas()
     assert a.equals(b)
     assert warm.where(F.col("cache_hit")).count() == 0
-
-
-def test_salted_agg_equals_direct(spark):
-    from dedupe_algo_spark.operators.skew import salted_agg
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    direct = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.sum("l_quantity").alias("sq"),
-            F.count(F.lit(1)).alias("n"),
-            F.min("l_extendedprice").alias("mn"),
-            F.max("l_extendedprice").alias("mx"),
-        )
-        .orderBy("l_returnflag")
-        .toPandas()
-    )
-    salted = (
-        salted_agg(
-            li,
-            key="l_returnflag",
-            id_col="l_orderkey",
-            aggs={
-                "sq": ("sum", "l_quantity"),
-                "n": ("count", None),
-                "mn": ("min", "l_extendedprice"),
-                "mx": ("max", "l_extendedprice"),
-            },
-            buckets=8,
-        )
-        .orderBy("l_returnflag")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(direct, salted, check_dtype=False)
-
-
-def test_key_histogram_shares(spark, pages_1k):
-    from dedupe_algo_spark.functions.urls import registered_domain
-    from dedupe_algo_spark.operators.skew import key_histogram
-
-    with_dom = pages_1k.withColumn("domain", registered_domain(F.col("url")))
-    hist = key_histogram(with_dom, "domain", top=5).toPandas()
-    assert len(hist) == 5
-    # synth plants head-domain skew: site000.com must be the top key
-    assert hist.iloc[0]["domain"] == "site000.com"
-    assert hist["share"].between(0, 1).all()
-    assert hist["n"].is_monotonic_decreasing
 
 
 def test_pipeline_memo_warm_run(spark, pages_1k, tmp_path):

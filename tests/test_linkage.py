@@ -8,7 +8,6 @@ from dedupe_algo_spark.operators.linkage import (
     cbs_edges,
     em_fit,
     expected_pattern_counts,
-    fs_log_weight,
     fs_pattern_counts,
     fs_score_pairs,
     meta_block,
@@ -103,11 +102,6 @@ def test_em_recovers_planted_parameters():
     m, u, p = em_fit(pats, 3, n_iter=200)
     for got, want in zip(m + u + [p], m_true + u_true + [p_true]):
         assert abs(got - want) < 0.02, (m, u, p)
-
-
-def test_fs_log_weight_signs():
-    assert fs_log_weight(0.9, 0.1, True) > 0
-    assert fs_log_weight(0.9, 0.1, False) < 0
 
 
 def _corpus(spark):

@@ -1,40 +1,25 @@
-"""Multimodal plumbing: schema, mapInPandas batch shape, decode stub."""
+"""Multimodal plumbing: ``extract_features_csv`` over ``doc_media``
+against hand-computed codepoint histograms."""
 
 from __future__ import annotations
 
-import pytest
-
-from dedupe_algo_spark.multimodal import (
-    decode_stub,
-    extract_features,
-    media_stats,
-    synth_media,
-)
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"\x00\x01", "image/png")
-
-
-def test_decode_stub_fake_is_deterministic():
-    a = decode_stub(b"\x00\x01\x02\xff", "image/png", fake=True)
-    b = decode_stub(b"\x00\x01\x02\xff", "image/png", fake=True)
-    assert (a == b).all()
-    assert a.sum() == 4 and len(a) == 16
+from dedupe_algo_spark.multimodal import doc_media, extract_features_csv
 
 
 def test_extract_features_end_to_end(spark):
-    media = synth_media(spark, 60)
-    feats = extract_features(media, fake=True).toPandas()
-    assert len(feats) == 60
-    assert set(feats["kind"]) == {"image", "audio", "video"}
-    assert feats["feature"].map(len).eq(16).all()
-    # histogram mass equals payload byte count
-    assert (feats["feature"].map(sum) == feats["n_bytes"]).all()
-
-
-def test_media_stats(spark):
-    out = media_stats(synth_media(spark, 30)).toPandas()
-    assert list(out["kind"]) == ["audio", "image", "video"]
-    assert (out["n"] == 10).all()
+    texts = ["abc", "", "héllo wörld", "日本語 ok", "ÿĀ"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    feats = {
+        r["media_id"]: r for r in extract_features_csv(doc_media(docs)).collect()
+    }
+    assert [feats[i]["kind"] for i in range(3)] == ["image", "audio", "video"]
+    for i, text in enumerate(texts):
+        hist = [int(x) for x in feats[i]["feature_csv"].split(",")]
+        assert len(hist) == 16
+        # histogram mass equals the codepoint count; n_bytes is UTF-8 size
+        assert sum(hist) == len(text)
+        assert feats[i]["n_bytes"] == len(text.encode("utf-8"))
+        # codepoints >= 255 are clipped into the last bin (240..255)
+        assert hist[15] == sum(ord(c) >= 240 for c in text)
+    assert feats[0]["feature_csv"] == ",".join(["0"] * 6 + ["3"] + ["0"] * 9)
+    assert feats[4]["feature_csv"].endswith(",2")

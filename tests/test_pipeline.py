@@ -75,17 +75,25 @@ def test_adding_nondup_rows_never_splits_clusters(spark, pages_1k, result):
 
 
 def test_checkpoint_resume_equals_cold_run(spark, pages_1k, tmp_path):
-    from dedupe_algo_spark.runner import run_dedup_checkpointed
+    """jobs/dedup_job.py --checkpoint-dir: every stage commits on the cold
+    run, and a re-run over the same directory resumes all of them."""
+    from dedupe_algo_spark.runner import CheckpointedRun
 
     wd = str(tmp_path / "run1")
-    cold, run1 = run_dedup_checkpointed(spark, pages_1k, wd)
-    cold_pdf = cold.orderBy("url").toPandas()
+
+    def run():
+        ckpt = CheckpointedRun(spark, wd)
+        result = dedup_pipeline(pages_1k, stage=ckpt.stage)
+        pdf = result.clusters.orderBy("url").toPandas()
+        result.unpersist()
+        return pdf, ckpt
+
+    cold_pdf, run1 = run()
     assert run1.computed and not run1.resumed
 
-    warm, run2 = run_dedup_checkpointed(spark, pages_1k, wd)
-    warm_pdf = warm.orderBy("url").toPandas()
+    warm_pdf, run2 = run()
     assert cold_pdf.equals(warm_pdf)
-    assert "clusters" in run2.resumed and not run2.computed
+    assert run2.resumed == run1.computed and not run2.computed
 
     # one audit flush per computed stage, each matching a direct
     # per-partition count of the committed output

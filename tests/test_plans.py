@@ -101,16 +101,11 @@ def test_small_dims_broadcast(spark):
     assert has_broadcast_join(q_prefix_theta_join(spark, SF_DIR))
 
 
-def test_selection_join_broadcasts(spark, pages_1k):
-    from dedupe_algo_spark.operators.views import selection_impact
+def test_selection_join_broadcasts(spark):
+    # A9/J2: the deletion selection joins the corpus as a broadcast
+    from dedupe_algo_spark.queries import QUERIES
 
-    sel = pages_1k.select("url").limit(10)
-    df = selection_impact(
-        pages_1k.withColumn("size", F.length("text")),
-        sel,
-        category=F.col("lang"),
-    )
-    assert has_broadcast_join(df)
+    assert has_broadcast_join(QUERIES["deletion_impact"](spark, SF_DIR))
 
 
 def test_pack_sequences_shares_the_shuffle_exchange(spark, pages_1k):

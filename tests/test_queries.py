@@ -24,6 +24,10 @@ SAMPLE = [
     "partial_hash_clusters",
     "line_parse",
     "post_delete_refilter",
+    "deletion_impact",
+    "dirname_rollup",
+    "prefix_theta_join",
+    "listing_order",
     "size_format",
     "media_features",
     "doc_fingerprint",

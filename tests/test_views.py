@@ -57,14 +57,23 @@ def test_group_search_keeps_whole_cluster(files):
     }
 
 
-def test_apply_deletion_refilters_singletons(spark, files):
-    deleted = spark.createDataFrame(
-        [("https://b.com/xy",)], "url string"
-    )
-    out = views.apply_deletion(files, deleted).toPandas()
-    # c2 fell to 1 member → dropped entirely (useStore.ts:116-127)
-    assert set(out["cluster_id"]) == {"c1"}
-    assert len(out) == 3
+def test_post_delete_refilter_drops_singletons(spark, tmp_path):
+    """J5 + re-applied F7 (useStore.ts:116-127), as the
+    ``post_delete_refilter`` query runs it: the selection (doc_id % 3 ==
+    0) is anti-joined out, then clusters (same n_chars) that fell under
+    2 members drop entirely."""
+    from dedupe_algo_spark.queries import QUERIES
+
+    spark.createDataFrame(
+        [(1, 100), (2, 100), (3, 100), (4, 50), (6, 50), (5, 70), (7, 70)],
+        "doc_id long, n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    out = QUERIES["post_delete_refilter"](spark, str(tmp_path)).collect()
+    # n_chars=50 fell to 1 member (doc 6 deleted) → dropped
+    assert sorted((r["n_chars"], r["n_members"], r["min_doc_id"]) for r in out) == [
+        (70, 2, 5),
+        (100, 2, 1),
+    ]
 
 
 def test_category_rollup_ordering(spark):
