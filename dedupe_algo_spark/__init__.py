@@ -12,9 +12,8 @@ dedup over Common-Crawl-style page tables per BASELINE.json:
 - pass 2: exact-duplicate grouping on JVM ``sha2`` SHA-256 content
   hashes computed map-side — reference passes 2/3 (lib.rs:83-160)
 - pass 3: near-duplicate pair scoring (MinHash band-collision gate,
-  then an exact token-Jaccard confirm; n-gram Jaccard and
-  Levenshtein/Jaro-Winkler are ``confirm_pairs`` scorers) + transitive
-  clustering via iterative large-star/small-star connected components
+  then an exact token-Jaccard confirm) + transitive clustering via
+  iterative large-star/small-star connected components
 
 Everything is built on the public PySpark DataFrame/SQL API; custom logic
 is vectorized pandas/Arrow UDFs (never row-at-a-time Python).

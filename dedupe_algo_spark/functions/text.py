@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
+from pyspark.sql.types import LongType
 
 # Tiny per-language stopword lists for the n-gram/stopword-ratio
 # heuristic language ID (public common-word lists).

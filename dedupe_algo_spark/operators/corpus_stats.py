@@ -28,7 +28,10 @@ term counts back to that table on the token key. The corpus scalar
 (total docs / total tokens) rides a 1-row broadcast cross join. At
 10^12 docs the vocab table is the natural bucketing candidate; the
 join key is already the aggregate's shuffle key, so AQE reuses the
-exchange.
+exchange. The pair scorers (``tfidf_cosine_pairs``,
+``weighted_jaccard_pairs``) replace each token with its xxhash64 id
+before their first aggregate, so their shuffles carry 8-byte longs,
+never token strings.
 
 Determinism contract: ranking uses INTEGER keys only (tf desc, df
 asc, token asc) — float scores are reported, never sorted on, so the
@@ -208,23 +211,21 @@ def tfidf_weights(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (``id_col``, token, w): smoothed TF-IDF weight of every
     (document, token) — ``w = tf · ln((N+1)/(df+1))``, the same
     formula as :func:`tfidf_topk` so the two views can never drift.
 
-    ``hashed=True`` (the scale default) replaces each token string
-    with its xxhash64 id BEFORE the tf aggregate, so every shuffle in
-    the weighting (tf, df, and any downstream pair join) carries an
-    8-byte long instead of raw text — the "text never shuffles"
-    invariant extended to token granularity. Weights are identical to
-    the string path up to 2^-64 token-hash collisions (two distinct
-    tokens colliding would merge their tf/df counts). ``hashed=False``
-    keeps the strings for oracle parity at test scale."""
-    toks = _tokens(docs, id_col, text_col)
-    if hashed:
-        toks = toks.withColumn("token", F.xxhash64("token"))
+    ``token`` is the xxhash64 id of the token string, taken BEFORE the
+    tf aggregate, so every shuffle in the weighting (tf, df, and any
+    downstream pair join) carries an 8-byte long instead of raw text —
+    the "text never shuffles" invariant extended to token granularity.
+    Weights equal those over token strings up to 2^-64 token-hash
+    collisions (two distinct tokens colliding would merge their tf/df
+    counts)."""
+    toks = _tokens(docs, id_col, text_col).withColumn(
+        "token", F.xxhash64("token")
+    )
     tf = toks.groupBy(id_col, "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -252,7 +253,6 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (``id_a``, ``id_b``, cosine): TF-IDF cosine similarity of each
     candidate pair — the classic lexical near-duplicate confirm
@@ -274,7 +274,7 @@ def tfidf_cosine_pairs(
     0.0. Rounded to 6 decimals: upstream weights are bit-exact (ints
     and one ln), only the sum order differs across engines (~1e-15
     relative), the same rounding contract as ``tfidf_topk``."""
-    w = tfidf_weights(docs, id_col, text_col, hashed=hashed)
+    w = tfidf_weights(docs, id_col, text_col)
     members = (
         pairs.select(F.col(id_a).alias(id_col))
         .unionByName(pairs.select(F.col(id_b).alias(id_col)))
@@ -330,7 +330,6 @@ def weighted_jaccard_pairs(
     text_col: str = "text",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (``id_a``, ``id_b``, wjaccard): exact weighted (multiset)
     Jaccard over token counts — ``Σ_t min(cA,cB) / Σ_t max(cA,cB)``
@@ -344,15 +343,15 @@ def weighted_jaccard_pairs(
     full-outer token alignment into ONE inner join on shared tokens
     plus two scalar per-doc totals, all restricted to pair members
     first (pair-side-small, the ``confirm_pairs`` shape). Token
-    identity is xxhash64 when ``hashed`` (8-byte shuffle rows; equal
-    to the string path up to 2^-64 collisions). Integer counts make
-    every score one exact division — bit-identical across engines.
+    identity is xxhash64 (8-byte shuffle rows; equal to token strings
+    up to 2^-64 collisions). Integer counts make every score one exact
+    division — bit-identical across engines.
     Pairs with a token-less side score 0.0 unless BOTH are token-less
     (two empty docs are identical → 1.0, matching the set-Jaccard
     convention in operators/scoring.py)."""
-    toks = _tokens(docs, id_col, text_col)
-    if hashed:
-        toks = toks.withColumn("token", F.xxhash64("token"))
+    toks = _tokens(docs, id_col, text_col).withColumn(
+        "token", F.xxhash64("token")
+    )
     members = (
         pairs.select(F.col(id_a).alias(id_col))
         .unionByName(pairs.select(F.col(id_b).alias(id_col)))

@@ -16,9 +16,10 @@ explodes to slim ``(id, pos, gram)`` triples inside codegen and
 probes the broadcast hash relation map-side. Zero shuffle of training
 text, zero shuffle of training grams — the only exchange is the final
 per-document aggregate of hits, which is empty for the overwhelming
-majority of docs. With ``hashed=True`` both sides key on xxhash64 of
-the gram (the production dial; collisions only ever OVER-flag, which
-for decontamination is the safe direction).
+majority of docs. ``decontaminate`` keys both sides on xxhash64 of
+the gram (collisions only ever OVER-flag, which for decontamination
+is the safe direction); ``contamination_report`` keeps the gram
+strings unless asked for hashes.
 
 Reference parity: out of the reference's scope (it dedupes one disk
 against itself, src-tauri/src/scanner.rs); mandated by the
@@ -110,17 +111,16 @@ def decontaminate(
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """Drop every training document sharing an n-gram with the eval
     corpus (the GPT-3 "conservative" action: remove, don't splice).
     Returns ``train`` unchanged in schema, contaminated rows removed,
     via a LEFT ANTI join on the id — the broadcast-probe report side
     carries only (id) so the anti join's build side stays minimal.
-    Defaults to hashed grams: over-flagging on a 2^-64 collision is
+    Keys on hashed grams: over-flagging on a 2^-64 collision is
     acceptable for decontamination, and the key bytes matter at
     10^12 docs."""
     bad = contamination_report(
-        train, eval_docs, n=n, id_col=id_col, text_col=text_col, hashed=hashed
+        train, eval_docs, n=n, id_col=id_col, text_col=text_col, hashed=True
     ).select(id_col)
     return train.join(bad, id_col, "left_anti")

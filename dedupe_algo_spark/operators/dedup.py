@@ -144,13 +144,10 @@ def assign_exact(meta: DataFrame) -> DataFrame:
     )
 
 
-def exact_view(assigned: DataFrame, keep_singletons: bool = False) -> DataFrame:
+def exact_view(assigned: DataFrame) -> DataFrame:
     """``assign_exact`` output → (url, text_len, content_sha256,
-    cluster_size, cluster_id), exact-duplicate rows only unless
-    ``keep_singletons``."""
-    if not keep_singletons:
-        assigned = assigned.where(F.col("cluster_size") >= 2)
-    return assigned.select(
+    cluster_size, cluster_id), exact-duplicate rows only."""
+    return assigned.where(F.col("cluster_size") >= 2).select(
         "url",
         "text_len",
         "content_sha256",
@@ -159,15 +156,11 @@ def exact_view(assigned: DataFrame, keep_singletons: bool = False) -> DataFrame:
     )
 
 
-def exact_dup_assignments(
-    pages: DataFrame,
-    min_len: int = 10,
-    keep_singletons: bool = False,
-) -> DataFrame:
+def exact_dup_assignments(pages: DataFrame, min_len: int = 10) -> DataFrame:
     """→ (url, text_len, content_sha256, cluster_size, cluster_id).
 
     ``cluster_id`` = min(url) within the (text_len, sha256) group —
     deterministic under any row order.
     """
     meta = page_meta(pages, min_len=min_len, with_signature=False)
-    return exact_view(assign_exact(meta), keep_singletons=keep_singletons)
+    return exact_view(assign_exact(meta))

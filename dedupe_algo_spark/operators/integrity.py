@@ -24,11 +24,9 @@ cluster-count-sized (≪ corpus). No Python anywhere — the score is the
 same whole-stage-codegen ``array_intersect`` Jaccard as the confirm
 tier.
 
-Token identity: ``hashed=True`` reuses the shared tier-2 32-bit token
-hash (operators/scoring.py:token_hash_array) so audit verdicts can
-never desynchronize from confirm verdicts — the production dial.
-``hashed=False`` keeps raw string tokens (ASCII-whitespace split,
-engine-reproducible) — the oracle dial.
+Token identity: distinct raw string tokens (ASCII-whitespace split),
+so the audit is reproducible by the DuckDB oracle; the Jaccard over
+them is the confirm tier's ``token_jaccard_score``.
 """
 
 from __future__ import annotations
@@ -36,16 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scoring import token_hash_array, token_jaccard_score
-
-
-def _string_tokens(text):
-    """Distinct raw string tokens, ASCII-whitespace split — the
-    DuckDB-reproducible twin of ``token_hash_array`` (same split
-    boundaries on ASCII-spaced corpora; no hash)."""
-    return F.array_distinct(
-        F.array_remove(F.split(F.trim(text), r"\s+"), "")
-    )
+from .scoring import token_jaccard_score
 
 
 def keeper_audit(
@@ -55,7 +44,6 @@ def keeper_audit(
     id_col: str = "url",
     cluster_col: str = "cluster_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (``id_col``, ``cluster_col``, keeper, score, flagged): every
     NON-keeper cluster member scored against its cluster's keeper
@@ -68,12 +56,14 @@ def keeper_audit(
     member joined the entity only through a chain — review it, or cut
     its bridge pairs and re-cluster.
     """
-    toks = token_hash_array if hashed else _string_tokens
     a = assignments.select(id_col, cluster_col)
     keepers = a.groupBy(cluster_col).agg(F.min(id_col).alias("_keeper"))
     # tokenize AT THE SCAN, before any join: the id-join then moves
-    # token arrays (4 bytes/token when hashed), never the text column
-    page_t = pages.select(id_col, toks(F.col(text_col)).alias("_pt"))
+    # token arrays, never the text column
+    toks = F.array_distinct(
+        F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
+    )
+    page_t = pages.select(id_col, toks.alias("_pt"))
     member_t = a.join(page_t, id_col).select(
         id_col, cluster_col, F.col("_pt").alias("_mt")
     )

@@ -17,10 +17,8 @@ column itself NEVER shuffles — the frequency aggregate gets map-side
 partial combine on the line key, and the surviving frequent-line set
 joins back against a second codegen scan of the input. The rewrite
 then runs entirely inside whole-stage codegen (filter + concat_ws on
-the split array). With ``hashed=True`` the shuffle key is the 64-bit
-``xxhash64`` of the normalized line — the production dial at 10^12
-documents — while the default string key is exactly reproducible by
-the DuckDB oracle.
+the split array). The shuffle key is the normalized line string,
+exactly reproducible by the DuckDB oracle.
 
 Reference parity: dedupe-algo's cascade compares whole files only
 (src-tauri/src/scanner.rs); line-level dedup is part of the web-scale
@@ -52,14 +50,13 @@ def duplicate_line_stats(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
     unit: str = "line",
 ) -> DataFrame:
     """→ (``id_col``, line_no, line_key, n_docs): every site of a
     normalized line that occurs in ≥ ``min_docs`` distinct documents.
     ``line_no`` is the 0-based position of the line in its document;
-    ``line_key`` is the normalized line text (or its xxhash64 when
-    ``hashed``); ``n_docs`` its distinct-document frequency.
+    ``line_key`` is the normalized line text; ``n_docs`` its
+    distinct-document frequency.
 
     Plan shape: one explode to (id, line_no, key) — tokens of text per
     row, never the document — one groupBy(key) with partial
@@ -73,8 +70,6 @@ def duplicate_line_stats(
     ).select(
         id_col, "line_no", _norm(F.col("_raw")).alias("line_key")
     ).where(F.col("line_key") != "")
-    if hashed:
-        sites = sites.withColumn("line_key", F.xxhash64("line_key"))
     freq = (
         sites.groupBy("line_key")
         .agg(F.countDistinct(id_col).alias("n_docs"))

@@ -10,9 +10,9 @@ well-linked host is worth more than a spam farm's).
   Each step is one join + one aggregate on (node, double) rows —
   O(edges) shuffle of an 8-byte payload, never page bodies. The rank
   frame is ``localCheckpoint``-ed per step so the plan does not grow
-  with iterations (same discipline as the CC operator,
-  operators/cluster.py); the dangling mass is one scalar ``first()``
-  per step — a driver barrier that moves 8 bytes.
+  with iterations, and each superseded checkpoint is released (same
+  discipline as the CC operator, operators/cluster.py); the dangling
+  mass is a one-row aggregate broadcast into the step's own plan.
 
 Public references: Page et al. 1999; the dangling-node uniform
 redistribution is the standard formulation (Berkhin 2005 survey).
@@ -70,7 +70,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Damped PageRank over ``edges``; returns (node, pagerank).
 
@@ -87,7 +86,15 @@ def pagerank(
     was a second driver-blocking job every superstep, the same
     fixed-latency barrier class the connected-components Observation
     fold removed; on a 200-host graph the barrier latency, not the
-    data, dominated a 10-iteration run."""
+    data, dominated a 10-iteration run.
+
+    Checkpoint hygiene: each superstep's checkpoint supersedes its
+    parent, which is released at once; the node, edge and tag
+    checkpoints are released when no later frame reads them. Only the
+    checkpoint backing the returned frame stays live."""
+    from ..tracking import checkpoint_rdd_ids, unpersist_rdd_ids
+
+    spark = edges.sparkSession
     w = F.col(weight_col) if weight_col else F.lit(1)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
@@ -96,9 +103,8 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         # empty graph (e.g. a corpus with no absolute links): an empty
@@ -107,62 +113,55 @@ def pagerank(
             F.col("node"), F.lit(0.0).alias("pagerank")
         ).limit(0)
     outdeg = e.groupBy("src").agg(F.sum("w").alias("outw"))
-    e = e.join(outdeg, "src").select(
-        "src", "dst", (F.col("w") / F.col("outw")).alias("share")
+    e = (
+        e.join(outdeg, "src")
+        .select("src", "dst", (F.col("w") / F.col("outw")).alias("share"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
     # nodes tagged once with has-outlinks membership so each
     # superstep can aggregate the dangling mass without an anti-join
     has_out = outdeg.select(F.col("src").alias("node"), F.lit(True).alias("_has"))
-    tagged = nodes.join(has_out, "node", "left").select(
-        "node", F.coalesce("_has", F.lit(False)).alias("_has")
+    tagged = (
+        nodes.join(has_out, "node", "left")
+        .select("node", F.coalesce("_has", F.lit(False)).alias("_has"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        tagged = tagged.localCheckpoint(eager=True)
+    unpersist_rdd_ids(spark, checkpoint_rdd_ids(nodes))  # read only by tagged
+    live: set[int] = set()  # RDD ids of the newest superstep's checkpoint
     pr = tagged.select("node", "_has", F.lit(1.0 / n).alias("pr"))
     for _ in range(iterations):
-        if checkpoint:
-            # dangling mass as a broadcast ONE-ROW aggregate inside the
-            # superstep's own plan — no driver collect, no extra job.
-            # Safe ONLY because the eager checkpoint below truncates
-            # lineage per step: this shape references ``pr`` twice (here
-            # and in inflow), which without truncation would double the
-            # logical plan per iteration.
-            dang = (
-                pr.where(~F.col("_has"))
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dang"))
-            )
-            dang_term = F.col("_dang")
-        else:
-            # checkpoint=False (tests / tiny graphs): keep plan growth
-            # LINEAR by collecting the scalar driver-side — the single
-            # remaining ``pr`` reference per iteration. The folded
-            # aggregate above would nest ~2^iterations plan copies.
-            dang_val = (
-                pr.where(~F.col("_has"))
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-            )
-            dang_term = F.lit(dang_val)
+        # dangling mass as a broadcast ONE-ROW aggregate inside the
+        # superstep's own plan — no driver collect, no extra job.
+        # Safe ONLY because the eager checkpoint below truncates
+        # lineage per step: this shape references ``pr`` twice (here
+        # and in inflow), which without truncation would double the
+        # logical plan per iteration.
+        dang = pr.where(~F.col("_has")).agg(
+            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dang")
+        )
         inflow = (
             e.join(pr, e.src == pr.node)
             .select("dst", (F.col("pr") * F.col("share")).alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        pr = tagged.join(inflow, tagged.node == inflow.dst, "left")
-        if checkpoint:
-            pr = pr.crossJoin(F.broadcast(dang))
-        pr = pr.select(
-            "node",
-            "_has",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce("inflow", F.lit(0.0)) + dang_term / n)
-            ).alias("pr"),
+        pr = (
+            tagged.join(inflow, tagged.node == inflow.dst, "left")
+            .crossJoin(F.broadcast(dang))
+            .select(
+                "node",
+                "_has",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce("inflow", F.lit(0.0)) + F.col("_dang") / n)
+                ).alias("pr"),
+            )
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            pr = pr.localCheckpoint(eager=True)
+        unpersist_rdd_ids(spark, live)  # parent superstep is superseded
+        live = checkpoint_rdd_ids(pr)
+    # only the supersteps read e and tagged; with none, the result reads tagged
+    done = checkpoint_rdd_ids(e) | (checkpoint_rdd_ids(tagged) if live else set())
+    unpersist_rdd_ids(spark, done)
     return pr.select("node", F.col("pr").alias("pagerank"))

@@ -11,8 +11,7 @@ MinHash-Jaccard"):
 2. **Confirm** — exact token-set Jaccard over the texts, but only for
    gate survivors: the text column is re-read from the source and
    joined against the (tiny) survivor list — pair-side-small, so text
-   never shuffles. Jaro-Winkler / Levenshtein scorers are available for
-   fielded-record linkage via the same join shape.
+   never shuffles.
 
 The reference analog is pass 3's full-hash byte-confirm after the cheap
 partial-hash gate (lib.rs:130-160) — same cheap-gate-then-confirm shape,
@@ -23,14 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.similarity import (
-    LEV_CAP,
-    levenshtein_sim_col,
-    ngram_jaccard_col,
-    pair_damerau_sim_udf,
-    pair_jaro_winkler_udf,
-)
 
 DEFAULT_THRESHOLD = 0.80
 
@@ -153,61 +144,14 @@ def band_gate(
     return pairs_with_counts.where(F.col("n_shared") >= min_matches)
 
 
-def _prefix(text):
-    return F.substring(text, 1, LEV_CAP)
-
-
-# Pass-3 scorers that score a pair from its two slice values: scorer →
-# (per-url slice projection of the text, score over the pivoted
-# ``_ta``/``_tb`` sides). The corpus scorers ("tfidf",
-# "weighted_jaccard") need corpus-wide statistics and take their own
-# path in ``confirm_pairs``.
-_PAIR_SCORERS = {
-    "jaccard": (token_hash_array, token_jaccard_score),
-    "containment": (token_hash_array, token_containment_score),
-    "levenshtein": (_prefix, levenshtein_sim_col),
-    "ngram_jaccard": (_prefix, ngram_jaccard_col),
-    "jaro_winkler": (_prefix, pair_jaro_winkler_udf),
-    "damerau": (_prefix, pair_damerau_sim_udf),
-}
-_CORPUS_SCORERS = ("tfidf", "weighted_jaccard")
-
-
 def confirm_pairs(
     candidates: DataFrame,
     pages: DataFrame,
     threshold: float,
     tracker=None,
-    scorer: str = "jaccard",
 ) -> DataFrame:
     """Exact token-Jaccard confirm on band-gate survivors.
     → (url_a, url_b, score).
-
-    ``scorer`` selects the pass-3 similarity (north_star names the
-    first three): ``"jaccard"`` (default — exact token-set Jaccard, the
-    right scorer for whole web pages), ``"jaro_winkler"`` (batched
-    pandas UDF on 512-char prefixes), ``"levenshtein"`` (JVM built-in
-    1−dist/max on 512-char prefixes), ``"damerau"`` (batched pandas
-    UDF, transposition-aware edit similarity on the same prefixes), or
-    ``"ngram_jaccard"`` (JVM
-    character-5-gram set Jaccard on the same prefixes — order-robust
-    like token Jaccard but sub-word-granular, the dial for boilerplate
-    with small edits). The prefix scorers exist for fielded-record
-    linkage (names, titles); they reuse the exact same carve-out/join
-    shape, so text still never shuffles. ``"containment"`` swaps the
-    token-set denominator for min(|A|,|B|) — the doc-in-doc dial
-    (syndicated article embedded in a longer page scores 1.0 where its
-    Jaccard sinks); identical plan to "jaccard". ``"tfidf"`` scores pairs by
-    corpus-IDF-weighted cosine (operators/corpus_stats.py) — the dial
-    when candidate pages share heavy boilerplate that unweighted token
-    Jaccard over-credits; it adds ONE corpus-wide slim aggregate (the
-    (token-hash, df) model — the same cost class as the signature
-    stage) and its pair joins are pair-side-small like the branches
-    below. ``"weighted_jaccard"`` scores exact multiset Jaccard over
-    token COUNTS (Σmin/Σmax via the Σmax = |A|+|B|−Σmin identity — one
-    inner join on shared token hashes), the dial when repetition-spam
-    pages inflate a set-Jaccard score. Text never shuffles on any
-    path. An unknown name raises ``ValueError``.
 
     The text column is read from the source exactly ONCE: a semi-join
     against the candidate url set carves out the text slice (≤2×|pairs|
@@ -228,7 +172,7 @@ def confirm_pairs(
     gates a plan-time decision (the broadcast hint) for the very next
     job, so no earlier action exists to ride.
 
-    The token scorers tokenize each slice row ONCE into a distinct
+    The confirm tokenizes each slice row ONCE into a distinct
     token-hash array during the carve-out (``token_hash_array``), and
     the per-pair score is ``array_intersect``/``size`` — whole-stage
     codegen, zero Python in the confirm stage. Token identity is a
@@ -266,36 +210,19 @@ def confirm_pairs(
     the pair out per version as the old double join did; pre-dedup
     un-deduped input before direct calls.
     """
-    if scorer not in _PAIR_SCORERS and scorer not in _CORPUS_SCORERS:
-        raise ValueError(f"unknown scorer {scorer!r}")
     _persist = tracker.persist if tracker is not None else (lambda df: df.persist())
     cand = _persist(candidates.select("url_a", "url_b"))
-    n_pairs = cand.count()
-    if scorer == "tfidf":
-        from .corpus_stats import tfidf_cosine_pairs
-
-        scored = tfidf_cosine_pairs(
-            pages, cand, id_col="url", id_a="url_a", id_b="url_b"
-        ).withColumnRenamed("cosine", "score")
-    elif scorer == "weighted_jaccard":
-        from .corpus_stats import weighted_jaccard_pairs
-
-        scored = weighted_jaccard_pairs(
-            pages, cand, id_col="url", id_a="url_a", id_b="url_b"
-        ).withColumnRenamed("wjaccard", "score")
-    else:
-        urls = (
-            cand.select(F.col("url_a").alias("url"))
-            .union(cand.select(F.col("url_b").alias("url")))
-            .distinct()
-        )
-        if 2 * n_pairs <= BROADCAST_URL_LIMIT:
-            urls = F.broadcast(urls)
-        project, score = _PAIR_SCORERS[scorer]
-        slice_ = pages.join(urls, "url", "left_semi").select(
-            "url", project(F.col("text")).alias("_v")
-        )
-        scored = pair_value_join(cand, slice_, "_v").withColumn(
-            "score", score(F.col("_ta"), F.col("_tb"))
-        )
+    urls = (
+        cand.select(F.col("url_a").alias("url"))
+        .union(cand.select(F.col("url_b").alias("url")))
+        .distinct()
+    )
+    if 2 * cand.count() <= BROADCAST_URL_LIMIT:
+        urls = F.broadcast(urls)
+    slice_ = pages.join(urls, "url", "left_semi").select(
+        "url", token_hash_array(F.col("text")).alias("_v")
+    )
+    scored = pair_value_join(cand, slice_, "_v").withColumn(
+        "score", token_jaccard_score(F.col("_ta"), F.col("_tb"))
+    )
     return scored.where(F.col("score") >= threshold).select("url_a", "url_b", "score")

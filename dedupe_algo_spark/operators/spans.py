@@ -15,10 +15,7 @@ site where it occurs.
 Scale shape: one explode (≈ tokens-per-doc rows, slim (id, pos, gram)
 triples — the text column itself never shuffles as a whole), one
 groupBy on the gram key (map-side partial aggregation applies), one
-join back to the exploded sites. With ``hashed=True`` the shuffle key
-is a 64-bit ``xxhash64`` of the gram instead of the string — the
-production dial at 10^12 documents (bytes per key drop ~6×; collisions
-≈ n²/2⁶⁴ merge unrelated spans) — while the default string key is
+join back to the exploded sites. The shuffle key is the gram string,
 exactly reproducible by engines without xxhash64 (the DuckDB oracle).
 
 The physical plan scans the input TWICE (once under the frequency
@@ -45,12 +42,11 @@ def duplicate_ngram_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
 ) -> DataFrame:
     """→ (``id_col``, pos, gram, n_docs): every site of a token n-gram
     that occurs in ≥ ``min_docs`` distinct documents. ``pos`` is the
     1-based token offset of the span start; ``gram`` is the
-    space-joined span (or its xxhash64 when ``hashed``); ``n_docs`` is
+    space-joined span; ``n_docs`` is
     the distinct-document frequency of that gram over the corpus.
 
     Downstream: a training-data pipeline drops or clips the flagged
@@ -85,8 +81,6 @@ def duplicate_ngram_spans(
             )
         ).alias("_g"),
     ).select(id_col, F.col("_g.pos").alias("pos"), F.col("_g.gram").alias("gram"))
-    if hashed:
-        sites = sites.withColumn("gram", F.xxhash64("gram"))
     freq = (
         sites.groupBy("gram")
         .agg(F.countDistinct(id_col).alias("n_docs"))

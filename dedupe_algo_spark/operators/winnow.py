@@ -22,11 +22,9 @@ lambda consumes it: an inlined array is re-evaluated per higher-order
 element (no CSE across the HOF boundary — same O(n²) trap
 operators/spans.py documents).
 
-Hash dials, mirroring spans.py: ``hashed=True`` (production) uses
-``xxhash64`` over the gram string; ``hashed=False`` uses the dual-31
-polynomial chain of functions/text (mod 2^31-1), which DuckDB
-reproduces exactly — the ``winnow_fingerprints`` oracle value-checks
-window selection end-to-end.
+Gram hash: the first 31-chain polynomial of functions/text (mod
+2^31-1), which DuckDB reproduces exactly — the ``winnow_fingerprints``
+oracle value-checks window selection end-to-end.
 
 Reference parity: the reference's cascade has no substring tier at all
 (SURVEY §2 — whole-file hashes only); winnowing belongs to the
@@ -63,7 +61,6 @@ def winnow_fingerprints(
     w: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (``id_col``, pos, fp): the winnowing fingerprint set — one row
     per selected window minimum, ``pos`` the 1-based token position of
@@ -84,14 +81,10 @@ def winnow_fingerprints(
         n_grams >= 1, F.sequence(F.lit(1), n_grams)
     ).otherwise(F.array().cast("array<int>"))
     gram = lambda i: F.concat_ws(" ", F.slice(toks, i, k))  # noqa: E731
-    ghash = (
-        (lambda i: F.xxhash64(gram(i)))
-        if hashed
-        else (lambda i: _poly_hash(gram(i)))
-    )
     # gram-hash array materialized BEFORE the window pass (CSE boundary)
     grams = toked.select(
-        F.col(id_col), F.transform(gram_starts, ghash).alias("_g")
+        F.col(id_col),
+        F.transform(gram_starts, lambda i: _poly_hash(gram(i))).alias("_g"),
     )
     g = F.col("_g")
     n_windows = F.size(g) - (w - 1)
@@ -127,7 +120,6 @@ def winnow_overlap_candidates(
     max_postings: int = 2_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (id_a, id_b, n_shared): document pairs sharing ≥ ``min_shared``
     distinct winnowing fingerprints — every pair with a common substring
@@ -143,7 +135,7 @@ def winnow_overlap_candidates(
     slim pair rollup.
     """
     fps = winnow_fingerprints(
-        docs, k=k, w=w, id_col=id_col, text_col=text_col, hashed=hashed
+        docs, k=k, w=w, id_col=id_col, text_col=text_col
     ).select(F.col(id_col).alias("_id"), "fp").distinct()
     from pyspark.sql import Window
 

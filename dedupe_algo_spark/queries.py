@@ -1962,12 +1962,12 @@ FROM codes
 
 
 def q_jaro_winkler(spark, sf_dir):
-    """Batched Jaro-Winkler over consecutive-doc pairs (north_star's
-    pass-3 scorer). The pandas UDF mirrors DuckDB's rapidfuzz-derived
-    ``jaro_winkler_similarity`` bit-for-bit (classic window, integer
-    transposition division, boost gated at jaro>0.7 — tools/jw_parity.py
-    fuzzes 30k adversarial pairs), so the oracle hash matches on raw
-    doubles with no rounding."""
+    """Batched Jaro-Winkler over consecutive-doc pairs (the
+    fielded-record similarity north_star names). The pandas UDF mirrors
+    DuckDB's rapidfuzz-derived ``jaro_winkler_similarity`` bit-for-bit
+    (classic window, integer transposition division, boost gated at
+    jaro>0.7 — tools/jw_parity.py fuzzes 30k adversarial pairs), so the
+    oracle hash matches on raw doubles with no rounding."""
     from .functions.similarity import pair_jaro_winkler_udf
 
     t = _docs(spark, sf_dir).select(
@@ -1997,9 +1997,9 @@ FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
 def q_levenshtein_sim(spark, sf_dir):
     """Levenshtein similarity (1 − dist/maxlen on 80-char prefixes) over
     the same consecutive-doc pairs, computed by the JVM built-in
-    (``levenshtein_sim_col``, the form ``confirm_pairs`` scores with),
-    so each oracle row pins builtin == DuckDB. Distances are integers,
-    so the double division is bit-identical across engines."""
+    (``levenshtein_sim_col``), so each oracle row pins builtin ==
+    DuckDB. Distances are integers, so the double division is
+    bit-identical across engines."""
     from .functions.similarity import levenshtein_sim_col
 
     t = _docs(spark, sf_dir).select(
@@ -2683,13 +2683,13 @@ FROM agg
 
 def q_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprint selection (Schleimer et al. 2003) over
-    ``documents`` at k=3, w=4, on the DuckDB-exact polynomial hash dial.
+    ``documents`` at k=3, w=4, on the DuckDB-exact polynomial gram hash.
     The twin re-derives gram hashes, per-window minima AND the
     rightmost-tie positions, so the windowing algorithm itself is
     value-checked, not just the hashes."""
     from .operators.winnow import winnow_fingerprints
 
-    return winnow_fingerprints(_docs(spark, sf_dir), k=3, w=4, hashed=False)
+    return winnow_fingerprints(_docs(spark, sf_dir), k=3, w=4)
 
 
 def _sql_winnow_core(source: str) -> str:
@@ -2747,9 +2747,7 @@ def q_winnow_overlap_pairs(spark, sf_dir):
         F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
     )
     alld = docs.select("doc_id", "text").unionByName(twins)
-    return winnow_overlap_candidates(
-        alld, k=3, w=4, min_shared=1, hashed=False
-    )
+    return winnow_overlap_candidates(alld, k=3, w=4, min_shared=1)
 
 
 SQL_WINNOW_OVERLAP_PAIRS = f"""
@@ -4060,8 +4058,8 @@ def q_tfidf_cosine(spark, sf_dir):
     each base doc, id+10000 — the winnow_overlap_pairs corpus), each
     base paired with its own twin. Short docs score near 1 (the prefix
     IS the doc), long docs lower, disjoint-after-truncation cases near
-    0 — a full spread of the cosine range. Runs hashed (xxhash64 token
-    ids, the scale path); the DuckDB twin weights string tokens — equal
+    0 — a full spread of the cosine range. Runs on xxhash64 token ids;
+    the DuckDB twin weights string tokens — equal
     up to 2^-64 token-hash collisions, the tier-2 identity argument."""
     from .operators.corpus_stats import tfidf_cosine_pairs
 
@@ -4415,7 +4413,7 @@ def q_keeper_audit(spark, sf_dir):
     """Cluster-integrity audit: score every member against its
     cluster's keeper, flag chain-only members. Synthetic heterogeneous
     clusters (doc_id % 40 — genuinely dissimilar members) exercise the
-    flag; string-token mode is the engine-reproducible oracle dial."""
+    flag; string tokens keep the audit engine-reproducible."""
     from .operators.integrity import keeper_audit
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 200)
@@ -4427,7 +4425,6 @@ def q_keeper_audit(spark, sf_dir):
         docs.select("doc_id", "text"),
         threshold=0.2,
         id_col="doc_id",
-        hashed=False,
     )
 
 
@@ -4604,13 +4601,14 @@ _ZQ_SAMPLE = "substring(sha256(url), 1, 1) = '0'"
 
 
 def q_containment_pairs(spark, sf_dir):
-    """Token-set containment |A∩B|/min(|A|,|B|) — the doc-in-doc dial
-    (confirm_pairs scorer="containment") — on planted embedded pairs:
-    each doc vs its own first-40-token slice (containment exactly 1.0)
-    and vs its successor doc. Every row also carries the token-set
-    Jaccard of the same pair (jaccard ≤ containment: the embedded
-    slice's Jaccard sinks to |slice|/|doc|), both scored by the JVM
-    column forms ``confirm_pairs`` uses, over string token arrays."""
+    """Token-set containment |A∩B|/min(|A|,|B|) — the doc-in-doc score
+    (``token_containment_score``) — on planted embedded pairs: each doc
+    vs its own first-40-token slice (containment exactly 1.0) and vs
+    its successor doc. Every row also carries the token-set Jaccard of
+    the same pair (jaccard ≤ containment: the embedded slice's Jaccard
+    sinks to |slice|/|doc|) from ``token_jaccard_score``, the form
+    ``confirm_pairs`` confirms with; both run over string token
+    arrays."""
     from .operators.scoring import token_containment_score, token_jaccard_score
 
     toks = F.array_distinct(

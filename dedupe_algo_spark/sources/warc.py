@@ -415,8 +415,6 @@ def _finish_pages(df: DataFrame) -> DataFrame:
 def pages_from_warc(
     blobs: DataFrame,
     prior_pages: DataFrame | None = None,
-    ok_status_only: bool = True,
-    html_only: bool = True,
     **read_kw,
 ) -> DataFrame:
     """WARC blobs → the flagship pages table, end to end: parse the
@@ -436,26 +434,22 @@ def pages_from_warc(
     only full responses ingest.
 
     Real segments carry redirects, error pages, and non-HTML payloads;
-    by default only ``2xx`` responses (``ok_status_only`` — a record
-    with no HTTP envelope keeps a null status and passes) whose
-    Content-Type is ``text/html``/``application/xhtml`` (``html_only``;
-    a missing header also passes) become pages — image bytes cast to
-    'html' would otherwise pollute the dedup corpus and lang stats."""
+    only ``2xx`` responses (a record with no HTTP envelope keeps a null
+    status and passes) whose Content-Type is
+    ``text/html``/``application/xhtml`` (a missing header also passes)
+    become pages — image bytes cast to 'html' would otherwise pollute
+    the dedup corpus and lang stats."""
 
     def _page_gate(recs: DataFrame) -> DataFrame:
-        if ok_status_only:
-            recs = recs.where(
-                F.col("http_status").isNull()
-                | F.col("http_status").between(200, 299)
-            )
-        if html_only:
-            ct = F.lower(F.coalesce(F.col("content_type"), F.lit("")))
-            recs = recs.where(
-                (ct == "")
-                | ct.startswith("text/html")
-                | ct.startswith("application/xhtml")
-            )
-        return recs
+        ct = F.lower(F.coalesce(F.col("content_type"), F.lit("")))
+        return recs.where(
+            F.col("http_status").isNull()
+            | F.col("http_status").between(200, 299)
+        ).where(
+            (ct == "")
+            | ct.startswith("text/html")
+            | ct.startswith("application/xhtml")
+        )
 
     if prior_pages is not None:
         recs = _page_gate(read_warc_records(blobs, **read_kw))
@@ -466,22 +460,22 @@ def pages_from_warc(
     )
 
 
-def build_wet(records: list[tuple[str, int, str]], warcinfo: bool = True) -> bytes:
-    """WET-shaped ``.warc.gz`` bytes: ``WARC-Type: conversion`` records
-    carrying extracted plain text (UTF-8), one gzip member each — the
-    Common Crawl *.wet.gz layout most text pipelines consume."""
+def build_wet(records: list[tuple[str, int, str]]) -> bytes:
+    """WET-shaped ``.warc.gz`` bytes: a ``warcinfo`` header, then
+    ``WARC-Type: conversion`` records carrying extracted plain text
+    (UTF-8), one gzip member each — the Common Crawl *.wet.gz layout
+    most text pipelines consume."""
     out = io.BytesIO()
-    if warcinfo:
-        info = b"software: dedupe-algo-spark/fixture\r\nformat: WARC/1.0 WET\r\n"
-        rec = (
-            b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-            b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
-            b"Content-Type: application/warc-fields\r\n"
-            + f"Content-Length: {len(info)}\r\n\r\n".encode()
-            + info
-            + b"\r\n\r\n"
-        )
-        out.write(gzip.compress(rec, mtime=0))
+    info = b"software: dedupe-algo-spark/fixture\r\nformat: WARC/1.0 WET\r\n"
+    rec = (
+        b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
+        b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
+        b"Content-Type: application/warc-fields\r\n"
+        + f"Content-Length: {len(info)}\r\n\r\n".encode()
+        + info
+        + b"\r\n\r\n"
+    )
+    out.write(gzip.compress(rec, mtime=0))
     for url, epoch, text in records:
         date = strftime("%Y-%m-%dT%H:%M:%SZ", gmtime(int(epoch)))
         payload = text.encode("utf-8")
@@ -809,11 +803,7 @@ def page_digest(html: Column = None) -> Column:
     return F.concat(F.lit("sha256:"), F.sha2(h, 256))
 
 
-def resolve_revisits(
-    records: DataFrame,
-    prior_pages: DataFrame,
-    broadcast_pointers: bool = True,
-) -> DataFrame:
+def resolve_revisits(records: DataFrame, prior_pages: DataFrame) -> DataFrame:
     """Materialize a crawl that contains revisit records against the
     prior crawl's pages: responses keep their own body; revisits join
     ``prior_pages`` on payload digest and inherit the stored html.
@@ -822,16 +812,12 @@ def resolve_revisits(
     crawls exactly as the archive intended.
 
     Scale shape: the resolving join must NOT shuffle prior bodies by
-    digest (at crawl scale ``prior_pages`` IS the big table). With
-    ``broadcast_pointers=True`` (default) the slim ``(url, ts, digest)``
-    pointer set — bytes-per-row tiny and typically one batch of
-    segments — broadcasts, so the prior table is probed in place,
-    map-side, zero body movement. Set it False only when resolving a
-    pointer set too large for the driver (e.g. a whole crawl against a
-    whole crawl); then pre-bucket ``prior_pages`` by digest so the
-    sort-merge join reuses the storage layout instead of shuffling
-    bodies. Unresolvable revisits (digest absent from ``prior_pages``)
-    are dropped — surface them via lineage counts if needed."""
+    digest (at crawl scale ``prior_pages`` IS the big table). The slim
+    ``(url, ts, digest)`` pointer set — bytes-per-row tiny and typically
+    one batch of segments — broadcasts, so the prior table is probed in
+    place, map-side, zero body movement. Unresolvable revisits (digest
+    absent from ``prior_pages``) are dropped — surface them via lineage
+    counts if needed."""
     # NB: no digest-dedup on the prior side — that would shuffle prior
     # bodies, the exact thing this plan exists to avoid. If several
     # prior pages share a digest their bodies are identical (that is
@@ -845,11 +831,11 @@ def resolve_revisits(
     responses = records.where(F.col("warc_type") == "response").select(
         "url", "warc_ts", "warc_epoch", F.col("body").alias("html")
     )
-    pointers = records.where(F.col("warc_type") == "revisit").select(
-        "url", "warc_ts", "warc_epoch", "payload_digest"
+    pointers = F.broadcast(
+        records.where(F.col("warc_type") == "revisit").select(
+            "url", "warc_ts", "warc_epoch", "payload_digest"
+        )
     )
-    if broadcast_pointers:
-        pointers = F.broadcast(pointers)
     revisits = (
         prior.join(pointers, "payload_digest")
         .select("url", "warc_ts", "warc_epoch", F.col("_html").alias("html"))

@@ -4,8 +4,6 @@ text-never-shuffles property."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from dedupe_algo_spark.operators.candidates import candidate_pairs
@@ -123,70 +121,6 @@ def test_confirm_tokenizer_unicode_parity(spark):
     assert got[("u1", "u2")] == 1.0 and got[("u2", "u5")] == 1.0
 
 
-def test_confirm_pairs_scorer_options(spark):
-    """``scorer=`` selects the pass-3 similarity (north_star: Jaccard |
-    Jaro-Winkler | Levenshtein). Scores must equal the driver-side
-    reference implementations on the same 512-char prefixes."""
-    from dedupe_algo_spark.functions.similarity import (
-        LEV_CAP,
-        _jaro_winkler,
-        _levenshtein,
-    )
-
-    texts = {
-        "u1": "the quick brown fox jumps over the lazy dog",
-        "u2": "the quick brown fox jumps over the lazy cat",
-        "u3": "completely unrelated text with different words",
-        "u4": "x" * 600 + " tail one",  # exceeds the 512-char cap
-        "u5": "x" * 600 + " tail two",
-    }
-    pages = spark.createDataFrame(list(texts.items()), "url string, text string")
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3"), ("u4", "u5")], "url_a string, url_b string"
-    )
-
-    def ref(fn):
-        out = {}
-        for a, b in [("u1", "u2"), ("u1", "u3"), ("u4", "u5")]:
-            out[(a, b)] = fn(texts[a][:LEV_CAP], texts[b][:LEV_CAP])
-        return out
-
-    jw = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="jaro_winkler").collect()
-    }
-    assert jw == ref(_jaro_winkler)
-    lev = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="levenshtein").collect()
-    }
-    assert lev == ref(
-        lambda a, b: 1.0 - _levenshtein(a, b) / max(len(a), len(b))
-    )
-    from dedupe_algo_spark.functions.similarity import _damerau_levenshtein
-
-    dam = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="damerau").collect()
-    }
-    assert dam == ref(
-        lambda a, b: 1.0 - _damerau_levenshtein(a, b) / max(len(a), len(b))
-    )
-
-    def py_ngram_jac(a, b, n=5):
-        ga = {a[i : i + n] for i in range(max(1, len(a) - n + 1))}
-        gb = {b[i : i + n] for i in range(max(1, len(b) - n + 1))}
-        return len(ga & gb) / len(ga | gb)
-
-    ng = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="ngram_jaccard").collect()
-    }
-    assert ng == ref(py_ngram_jac)
-    with pytest.raises(ValueError):
-        confirm_pairs(pairs, pages, 0.0, scorer="nope").collect()
-
-
 def test_confirm_pairs_never_shuffles_table_text(spark, pages_1k):
     """The pages table's text column must not ride any Exchange: the
     candidate-url set broadcasts into the semi-join, and only the carved
@@ -202,13 +136,12 @@ def test_confirm_pairs_never_shuffles_table_text(spark, pages_1k):
     assert len(rows) == 1 and 0.0 <= rows[0]["score"] <= 1.0
 
 
-def test_confirm_pairs_tfidf_scorer(spark):
-    """scorer='tfidf': corpus-IDF-weighted cosine — identical texts
-    score 1.0, boilerplate-only overlap scores BELOW its unweighted
-    token Jaccard (IDF discounts tokens every doc shares), and no
-    Exchange in the plan ever carries the text column."""
-    import math
-
+def test_tfidf_cosine_pairs_discounts_shared_boilerplate(spark):
+    """Corpus-IDF-weighted cosine — identical texts score 1.0,
+    boilerplate-only overlap scores BELOW its unweighted token Jaccard
+    (IDF discounts tokens every doc shares), and no Exchange in the
+    plan ever carries the text column."""
+    from dedupe_algo_spark.operators.corpus_stats import tfidf_cosine_pairs
     from dedupe_algo_spark.plans import exchange_columns
 
     pages = spark.createDataFrame(
@@ -223,8 +156,8 @@ def test_confirm_pairs_tfidf_scorer(spark):
     pairs = spark.createDataFrame(
         [("u1", "u2"), ("u1", "u3")], "url_a string, url_b string"
     )
-    df = confirm_pairs(pairs, pages, 0.0, scorer="tfidf")
-    out = {(r["url_a"], r["url_b"]): r["score"] for r in df.collect()}
+    df = tfidf_cosine_pairs(pages, pairs, id_col="url", id_a="url_a", id_b="url_b")
+    out = {(r["url_a"], r["url_b"]): r["cosine"] for r in df.collect()}
     assert out[("u1", "u2")] == 1.0
     # unweighted token Jaccard of (u1,u3) is 4/8 = 0.5; the 4 shared
     # tokens appear in ALL 4 docs (df=4 → w=ln(5/5)=0) so cosine = 0
@@ -232,10 +165,12 @@ def test_confirm_pairs_tfidf_scorer(spark):
     assert "text" not in exchange_columns(df)
 
 
-def test_confirm_pairs_weighted_jaccard_scorer(spark):
-    """scorer='weighted_jaccard': repetition counts. u1/u2 share the
-    same token SET but different multiplicities — set Jaccard says
-    1.0, the weighted scorer must not."""
+def test_weighted_jaccard_pairs_counts_repetition(spark):
+    """Repetition counts. u2/u3 share the same token SET but different
+    multiplicities — set Jaccard says 1.0, the weighted score must
+    not."""
+    from dedupe_algo_spark.operators.corpus_stats import weighted_jaccard_pairs
+
     pages = spark.createDataFrame(
         [
             ("u1", "spam spam spam ham"),
@@ -248,70 +183,107 @@ def test_confirm_pairs_weighted_jaccard_scorer(spark):
         [("u1", "u2"), ("u2", "u3")], "url_a string, url_b string"
     )
     out = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0, scorer="weighted_jaccard").collect()
+        (r["url_a"], r["url_b"]): r["wjaccard"]
+        for r in weighted_jaccard_pairs(
+            pages, pairs, id_col="url", id_a="url_a", id_b="url_b"
+        ).collect()
     }
     assert out[("u1", "u2")] == 2 / 5
     assert out[("u2", "u3")] == 2 / 3
-    jac = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0).collect()
-    }
-    assert jac[("u2", "u3")] == 1.0  # the set scorer can't see counts
+    jac = _scores(confirm_pairs(pairs, pages, 0.0))
+    assert jac[("u2", "u3")] == 1.0  # the set score can't see counts
 
 
-def test_confirm_pairs_containment_scorer(spark):
-    """scorer='containment': |A∩B|/min(|A|,|B|) — a page embedded
-    verbatim in a longer page scores 1.0 while its Jaccard sinks;
-    scores equal the driver-side reference exactly."""
+def _pair_texts(spark, texts, pair_list):
+    return spark.createDataFrame(
+        [(a, b, texts.get(a), texts.get(b)) for a, b in pair_list],
+        "url_a string, url_b string, ta string, tb string",
+    )
+
+
+def test_token_containment_score_scores_doc_in_doc(spark):
+    """|A∩B|/min(|A|,|B|) — a page embedded verbatim in a longer page
+    scores 1.0 while its Jaccard sinks; scores equal the driver-side
+    reference exactly."""
+    from dedupe_algo_spark.operators.scoring import (
+        token_containment_score,
+        token_hash_array,
+    )
+
     inner = "alpha beta gamma delta epsilon"
     texts = {
         "u1": inner,
         "u2": "header menu " + inner + " footer copyright contact",
         "u3": "totally different page about other things entirely",
     }
-    pages = spark.createDataFrame(list(texts.items()), "url string, text string")
     pair_list = [("u1", "u2"), ("u1", "u3")]
-    pairs = spark.createDataFrame(pair_list, "url_a string, url_b string")
-    got = _scores(confirm_pairs(pairs, pages, 0.0, scorer="containment"))
+    got = _scores(
+        _pair_texts(spark, texts, pair_list).select(
+            "url_a",
+            "url_b",
+            token_containment_score(
+                token_hash_array(F.col("ta")), token_hash_array(F.col("tb"))
+            ).alias("score"),
+        )
+    )
     assert got == {(a, b): _py_containment(texts[a], texts[b]) for a, b in pair_list}
     assert got[("u1", "u2")] == 1.0  # doc-in-doc
     assert got[("u1", "u3")] == 0.0
-    # contrast: plain jaccard punishes the embedded pair
-    jac = {
-        (r["url_a"], r["url_b"]): r["score"]
-        for r in confirm_pairs(pairs, pages, 0.0).collect()
-    }
-    assert jac[("u1", "u2")] == 5 / 10  # inter 5, union 10
+    # contrast: the Jaccard confirm punishes the embedded pair
+    pages = spark.createDataFrame(list(texts.items()), "url string, text string")
+    pairs = spark.createDataFrame(pair_list, "url_a string, url_b string")
+    assert _scores(confirm_pairs(pairs, pages, 0.0))[("u1", "u2")] == 5 / 10
 
 
 def test_null_text_drops_pair_on_both_paths(spark):
-    """NULL text must yield a NULL score (dropped by >= threshold) on
-    every scorer path: the built-in expressions (jaccard, containment,
-    levenshtein, ngram_jaccard), the pandas UDFs (jaro_winkler,
-    damerau) and the corpus scorers (tfidf, weighted_jaccard) — NaN
-    would instead PASS any threshold under Spark's NaN ordering. A
-    half-present pair (u3 is absent from ``pages``) is dropped too,
-    keeping the inner-join contract: on the pair scorers it pivots to a
-    null side in ``pair_value_join``."""
-    pages = spark.createDataFrame(
-        [("u1", "real words here"), ("u2", None)], "url string, text string"
+    """NULL text must never score NaN, which would PASS any threshold
+    under Spark's NaN ordering. ``confirm_pairs`` drops a pair with a
+    NULL side, and a half-present pair (u3 is absent from ``pages``)
+    too, keeping the inner-join contract: it pivots to a null side in
+    ``pair_value_join``. The other pair scores map NULL text to a NULL
+    score: the built-in expressions (containment, levenshtein,
+    ngram_jaccard), the pandas UDFs (jaro_winkler, damerau) and the
+    corpus scores (tfidf, weighted_jaccard)."""
+    from dedupe_algo_spark.functions.similarity import (
+        levenshtein_sim_col,
+        ngram_jaccard_col,
+        pair_damerau_sim_udf,
+        pair_jaro_winkler_udf,
     )
-    pairs = spark.createDataFrame(
-        [("u1", "u2"), ("u1", "u3"), ("u3", "u2")], "url_a string, url_b string"
+    from dedupe_algo_spark.operators.corpus_stats import (
+        tfidf_cosine_pairs,
+        weighted_jaccard_pairs,
     )
-    for scorer in (
-        "jaccard",
-        "containment",
-        "levenshtein",
-        "ngram_jaccard",
-        "jaro_winkler",
-        "damerau",
-        "tfidf",
-        "weighted_jaccard",
+    from dedupe_algo_spark.operators.scoring import (
+        token_containment_score,
+        token_hash_array,
+    )
+
+    texts = {"u1": "real words here", "u2": None}
+    pages = spark.createDataFrame(list(texts.items()), "url string, text string")
+    pair_list = [("u1", "u2"), ("u1", "u3"), ("u3", "u2")]
+    pairs = spark.createDataFrame(pair_list, "url_a string, url_b string")
+    assert confirm_pairs(pairs, pages, 0.0).collect() == []
+    ta, tb = F.col("ta"), F.col("tb")
+    cols = {
+        "containment": token_containment_score(
+            token_hash_array(ta), token_hash_array(tb)
+        ),
+        "levenshtein": levenshtein_sim_col(ta, tb),
+        "ngram_jaccard": ngram_jaccard_col(ta, tb),
+        "jaro_winkler": pair_jaro_winkler_udf(ta, tb),
+        "damerau": pair_damerau_sim_udf(ta, tb),
+    }
+    rows = _pair_texts(spark, texts, pair_list).select(
+        *(c.alias(k) for k, c in cols.items())
+    ).collect()
+    assert [r.asDict() for r in rows] == [dict.fromkeys(cols)] * 3
+    kw = dict(id_col="url", id_a="url_a", id_b="url_b")
+    for name, scored in (
+        ("cosine", tfidf_cosine_pairs(pages, pairs, **kw)),
+        ("wjaccard", weighted_jaccard_pairs(pages, pairs, **kw)),
     ):
-        got = confirm_pairs(pairs, pages, 0.0, scorer=scorer).collect()
-        assert got == [], scorer
+        assert [r[name] for r in scored.collect()] in ([], [None]), name
 
 
 def test_simhash_blocking_recall_on_synth_corpus(spark, pages_1k, labels_1k):

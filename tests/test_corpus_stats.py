@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from dedupe_algo_spark.operators.corpus_stats import (
     document_frequency,
     tfidf_topk,
@@ -163,23 +165,23 @@ def test_tfidf_cosine_pairs_hand_values(spark):
     assert abs(out[(1, 4)] - dot / math.sqrt(na * nb)) < 1e-6
 
 
-def test_tfidf_cosine_hashed_matches_strings(spark):
-    from dedupe_algo_spark.operators.corpus_stats import tfidf_cosine_pairs
+def test_tfidf_weights_hand_values(spark):
+    """w = tf·ln((N+1)/(df+1)) per (doc, token), each token keyed by
+    the xxhash64 of its lowercased string: equal strings share one id
+    across documents."""
+    from pyspark.sql import functions as F
 
-    docs = _df(
-        spark,
-        [(i, f"tok{i % 3} shared word{i} café {'x ' * (i % 4)}") for i in range(12)],
+    from dedupe_algo_spark.operators.corpus_stats import tfidf_weights
+
+    docs = _df(spark, [(1, "a A b"), (2, "b c")])  # N=2; df: a 1, b 2, c 1
+    got = {(r.doc_id, r.token): r.w for r in tfidf_weights(docs).collect()}
+    ids = spark.range(1).select(
+        *(F.xxhash64(F.lit(t)).alias(t) for t in "abc")
+    ).first()
+    lw = math.log(3 / 2)
+    assert got == pytest.approx(
+        {(1, ids.a): 2 * lw, (1, ids.b): 0.0, (2, ids.b): 0.0, (2, ids.c): lw}
     )
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(12) for j in range(i + 1, 12)][:30],
-        "id_a bigint, id_b bigint",
-    )
-    h = tfidf_cosine_pairs(docs, pairs, hashed=True).toPandas()
-    s = tfidf_cosine_pairs(docs, pairs, hashed=False).toPandas()
-    key = ["id_a", "id_b"]
-    m = h.sort_values(key).reset_index(drop=True)
-    n = s.sort_values(key).reset_index(drop=True)
-    assert (m["cosine"] - n["cosine"]).abs().max() <= 1e-6
 
 
 def test_weighted_jaccard_hand_values(spark):

@@ -5,10 +5,13 @@ from __future__ import annotations
 import datetime
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from dedupe_algo_spark.operators.dedup import exact_dup_assignments
+from dedupe_algo_spark.operators.dedup import (
+    assign_exact,
+    exact_dup_assignments,
+    page_meta,
+)
 from dedupe_algo_spark.schemas import PAGES_SCHEMA
 
 
@@ -54,10 +57,15 @@ def test_min_len_filter(spark):
     assert exact_dup_assignments(df, min_len=2).count() == 2
 
 
+def _assigned(df):
+    """Every row with its exact-group size, singletons included."""
+    return assign_exact(page_meta(df, with_signature=False)).toPandas()
+
+
 def test_singletons_excluded_by_default(spark):
     df = _mk(spark, ["unique text one " * 3, "unique text two " * 3])
     assert exact_dup_assignments(df).count() == 0
-    assert exact_dup_assignments(df, keep_singletons=True).count() == 2
+    assert _assigned(df)["cluster_size"].tolist() == [1, 1]
 
 
 def test_same_length_different_text_not_clustered(spark):
@@ -73,7 +81,7 @@ def test_partial_window_boundary(spark):
     a, b = head + "MIDDLE_A" + tail, head + "MIDDLE_B" + tail
     df = _mk(spark, [a, b])
     assert exact_dup_assignments(df).count() == 0  # full hash separates
-    out = exact_dup_assignments(df, keep_singletons=True).toPandas()
+    out = _assigned(df)
     assert out["content_sha256"].nunique() == 2
 
 

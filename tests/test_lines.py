@@ -72,25 +72,6 @@ def test_remove_rewrites_and_preserves_order(spark):
     assert out.loc[3, "n_removed"] == 0
 
 
-def test_hashed_key_matches_string_key_sites(spark):
-    """hashed=True must flag exactly the same (doc, line_no) sites as
-    the string key — only the key representation changes."""
-    docs = _docs(
-        spark,
-        [
-            (1, "aa\nbb\ncc"),
-            (2, "bb\ndd"),
-            (3, "cc\nbb"),
-        ],
-    )
-    a = duplicate_line_stats(docs, hashed=False).toPandas()
-    b = duplicate_line_stats(docs, hashed=True).toPandas()
-    key = lambda df: sorted(  # noqa: E731
-        map(tuple, df[["doc_id", "line_no", "n_docs"]].values)
-    )
-    assert key(a) == key(b)
-
-
 def test_paragraph_unit_cuts_shared_paragraphs(spark):
     """unit='paragraph' (CCNet's actual unit): a footer PARAGRAPH
     shared by >= min_docs docs is cut whole, multi-line body paragraphs

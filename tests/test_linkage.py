@@ -256,7 +256,6 @@ def test_frequency_lr_rare_agreement_outweighs_common(spark):
         agreement_vector,
         fs_frequency_lr,
     )
-    from pyspark.sql import functions as F
 
     # 10 records: value 'rare' appears once-per-side, 'common' 8 times
     rows = [(1, "rare", "rare", 1), (2, "common", "common", 8)]

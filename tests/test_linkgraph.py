@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from dedupe_algo_spark.operators.linkgraph import host_edges, pagerank
 
 
@@ -94,24 +92,20 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert out.count() == 0
 
 
-def test_pagerank_checkpoint_modes_agree(spark):
-    """checkpoint=False (driver-scalar dangling, linear plan growth)
-    and checkpoint=True (folded broadcast aggregate + localCheckpoint)
-    must produce identical ranks — the two dangling-mass mechanisms
-    are alternative plumbings of the same arithmetic."""
-    from dedupe_algo_spark.operators.linkgraph import pagerank
+def test_pagerank_releases_superseded_checkpoints(spark):
+    """Only the checkpoint backing the result stays persisted: each
+    superstep releases its parent, and the node, edge and tag
+    checkpoints go once no later frame reads them. With no superstep
+    the result reads the tag checkpoint, which stays."""
+    from dedupe_algo_spark.tracking import persistent_rdd_ids
 
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
+    rng = random.Random(3)
+    e = spark.createDataFrame(
+        [(f"h{rng.randrange(40)}", f"h{rng.randrange(40)}") for _ in range(200)],
         "src string, dst string",
     )
-    with_cp = {
-        r["node"]: round(r["pagerank"], 12)
-        for r in pagerank(edges, iterations=6, checkpoint=True).collect()
-    }
-    no_cp = {
-        r["node"]: round(r["pagerank"], 12)
-        for r in pagerank(edges, iterations=6, checkpoint=False).collect()
-    }
-    assert with_cp == no_cp
-    assert abs(sum(no_cp.values()) - 1.0) < 1e-9
+    for iterations in (6, 0):
+        before = persistent_rdd_ids(spark)
+        ranks = [r.pagerank for r in pagerank(e, iterations=iterations).collect()]
+        assert abs(sum(ranks) - 1.0) < 1e-9
+        assert len(persistent_rdd_ids(spark) - before) <= 1, iterations

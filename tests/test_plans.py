@@ -8,7 +8,6 @@ stays green.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from dedupe_algo_spark.plans import (
@@ -164,9 +163,9 @@ def test_confirm_slice_crosses_one_exchange(spark):
 
 
 def test_default_confirm_and_meta_scan_run_no_python(spark):
-    # The default confirm scorers (jaccard, containment) and the exact
-    # tier's hash projection are built-in expressions end to end: no
-    # Arrow/Batch EvalPython node may appear in their plans.
+    # The Jaccard confirm and the exact tier's hash projection are
+    # built-in expressions end to end: no Arrow/Batch EvalPython node
+    # may appear in their plans.
     from dedupe_algo_spark.operators.dedup import page_meta
     from dedupe_algo_spark.operators.scoring import confirm_pairs
     from dedupe_algo_spark.plans import formatted_plan
@@ -176,8 +175,7 @@ def test_default_confirm_and_meta_scan_run_no_python(spark):
         "url string, text string",
     )
     pairs = spark.createDataFrame([("u1", "u2")], "url_a string, url_b string")
-    for scorer in ("jaccard", "containment"):
-        plan = formatted_plan(confirm_pairs(pairs, pages, 0.8, scorer=scorer))
-        assert "EvalPython" not in plan, (scorer, plan)
+    plan = formatted_plan(confirm_pairs(pairs, pages, 0.8))
+    assert "EvalPython" not in plan, plan
     plan = formatted_plan(page_meta(pages, with_signature=False))
     assert "EvalPython" not in plan, plan

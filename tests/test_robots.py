@@ -4,8 +4,6 @@ precedence, and the pages-never-shuffle plan."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from dedupe_algo_spark.operators.robots import (
     parse_robots,
     robots_filter,

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from dedupe_algo_spark.operators.spans import duplicate_ngram_spans
 
 
@@ -49,21 +47,3 @@ def test_short_docs_and_empty_text(spark):
     — the sequence() guard; they must not crash or pollute output."""
     docs = _docs(spark, [(1, "a b"), (2, ""), (3, "   "), (4, "a b")])
     assert duplicate_ngram_spans(docs, n=3).count() == 0
-
-
-def test_hashed_variant_flags_same_sites(spark):
-    """hashed=True (the 10^12-scale shuffle key) must flag exactly the
-    same (doc_id, pos) sites as the exact string key."""
-    docs = _docs(
-        spark,
-        [
-            (1, "one two three four five six"),
-            (2, "zero one two three four seven"),
-            (3, "other content entirely here now"),
-        ],
-    )
-    plain = duplicate_ngram_spans(docs, n=4).toPandas()
-    hashed = duplicate_ngram_spans(docs, n=4, hashed=True).toPandas()
-    key = lambda df: sorted(map(tuple, df[["doc_id", "pos", "n_docs"]].values))
-    assert key(plain) == key(hashed)
-    assert len(plain) > 0

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from dedupe_algo_spark.streaming import (
     ingest_pages_stream,
     progress_stream,

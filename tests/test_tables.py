@@ -12,8 +12,6 @@ Catalog config a real deployment needs (public Iceberg docs):
 
 from __future__ import annotations
 
-import pytest
-
 from dedupe_algo_spark.sources import tables
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import datetime
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 

@@ -388,8 +388,8 @@ def test_dedup_warc_stream_first_seen(spark, tmp_path):
 
 
 def test_resolve_revisits_plan_prior_bodies_never_shuffle(spark, tmp_path):
-    """Scale assertion: with broadcast_pointers=True (default), the
-    prior corpus is probed in place — no Exchange carries the prior
+    """Scale assertion: the broadcast pointer set probes the
+    prior corpus in place — no Exchange carries the prior
     html, and the resolving join is a broadcast join. The only body
     movement is the revisit-sized output dedup."""
     from dedupe_algo_spark.plans import exchange_columns, has_broadcast_join
@@ -481,8 +481,8 @@ def test_wet_round_trip_and_load(spark, tmp_path):
 
 
 def test_page_gate_drops_errors_and_non_html(spark):
-    """Real segments carry redirects/errors/binaries: by default only
-    2xx text/html responses become pages; records without an HTTP
+    """Real segments carry redirects/errors/binaries: only 2xx
+    text/html responses become pages; records without an HTTP
     envelope or Content-Type pass (benefit of the doubt)."""
     from dedupe_algo_spark.sources.warc import pages_from_warc
 
@@ -512,14 +512,6 @@ def test_page_gate_drops_errors_and_non_html(spark):
     )
     urls = sorted(r.url for r in pages_from_warc(blobs).collect())
     assert urls == ["http://g/ok", "http://g/xhtml"]
-    # gates are opt-out
-    all_urls = sorted(
-        r.url
-        for r in pages_from_warc(
-            blobs, ok_status_only=False, html_only=False
-        ).collect()
-    )
-    assert len(all_urls) == 5
 
 
 def test_fetch_whole_file_gzip_matches_url(spark):

@@ -3,9 +3,6 @@ tie rule, density, short-doc edge, plan contract."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from dedupe_algo_spark.operators.winnow import winnow_fingerprints
 from dedupe_algo_spark.plans import exchange_columns
 
@@ -19,16 +16,15 @@ def _fps(spark, docs, **kw):
     return out
 
 
-@pytest.mark.parametrize("hashed", [True, False], ids=["xxhash", "poly"])
-def test_shared_substring_guarantee(spark, hashed):
+def test_shared_substring_guarantee(spark):
     """Any shared substring of >= w+k-1 tokens must share a fingerprint
-    (the paper's correctness property), under both hash dials."""
+    (the paper's correctness property)."""
     k, w = 3, 4
     shared = " ".join(f"common{i}" for i in range(k + w - 1))  # exactly w+k-1
     a = "left side words here " + shared + " tail alpha beta gamma"
     b = "totally different prefix tokens " + shared + " other suffix now"
     c = "no overlap with anything else at all whatsoever in this one"
-    out = _fps(spark, [(1, a), (2, b), (3, c)], k=k, w=w, hashed=hashed)
+    out = _fps(spark, [(1, a), (2, b), (3, c)], k=k, w=w)
     shared_fp = {fp for _, fp in out[1]} & {fp for _, fp in out[2]}
     assert shared_fp, "guaranteed fingerprint missing"
     assert not ({fp for _, fp in out[1]} & {fp for _, fp in out[3]})
@@ -39,7 +35,7 @@ def test_tie_rule_selects_rightmost(spark):
     gram (Schleimer et al. robust winnowing), giving positions
     w..n_grams with one shared hash value."""
     n, k, w = 10, 2, 3
-    out = _fps(spark, [(1, " ".join(["x"] * n))], k=k, w=w, hashed=True)
+    out = _fps(spark, [(1, " ".join(["x"] * n))], k=k, w=w)
     n_grams = n - k + 1
     positions = sorted(p for p, _ in out[1])
     assert positions == list(range(w, n_grams + 1))
