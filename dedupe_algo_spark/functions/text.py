@@ -26,11 +26,33 @@ STOPWORDS = {
 }
 
 
+def ws_tokens(text: Column) -> Column:
+    """Whitespace token array, ``split(trim(text), '\\s+')`` — the rule
+    the DuckDB oracles mirror as ``regexp_split_to_array(trim(text),
+    '\\s+')``. Empty text gives ``[""]``; callers that lowercase pass
+    ``F.lower(text)``. Python ``str.split()`` is a different rule
+    (``scoring.TOKEN_SPLIT_RE``)."""
+    return F.split(F.trim(text), r"\s+")
+
+
+def token_ngrams(toks: Column, n: int) -> Column:
+    """Array of space-joined token n-grams, in token order (empty when
+    the document is shorter than ``n`` tokens). ``toks`` MUST be a
+    materialized column attribute, never an inline split expression:
+    the transform lambda re-evaluates its free expressions per element
+    (no CSE across the higher-order-function boundary), which would
+    make gram construction O(tokens²) per document."""
+    # sequence(1, 0) would generate a DESCENDING [1, 0] — guard short docs
+    starts = F.when(
+        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+
+
 def token_count(text: Column) -> Column:
     """Whitespace token count; 0 for empty text."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))
+    return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
+        F.size(ws_tokens(text))
     ).cast("long")
 
 
@@ -51,7 +73,7 @@ def punct_ratio(text: Column) -> Column:
 
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     """Fraction of tokens that are common stopwords of ``lang``."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
+    toks = ws_tokens(F.lower(text))
     sw = STOPWORDS[lang]
     hits = F.size(F.filter(toks, lambda t: t.isin(sw)))
     n = F.size(toks)
@@ -71,7 +93,7 @@ def quality_score(text: Column) -> Column:
 def lang_id_heuristic(text: Column) -> Column:
     """Stopword-vote language ID over {en,de,fr,es}; 'und' (undetermined)
     when no list scores. Pure built-ins: one filter+size per language."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
+    toks = ws_tokens(F.lower(text))
 
     def contains_any(words: list[str]):
         # NB: a two-arg lambda would be read by F.filter as (element,

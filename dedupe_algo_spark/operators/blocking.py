@@ -168,15 +168,17 @@ def multi_rule_pairs(
     shuffles on its own keys, which is the minimum possible work; at
     10^12 rows each join is independently AQE-planned and skew-split.
 
-    Returns (id_a, id_b, rule) with id_a < id_b and ``rule`` = the index
-    of the FIRST rule that matched the pair. Null keys never match
-    (equi-join semantics), and the earlier-rule exclusion mirrors that
-    with ``coalesce(agree, false)`` so a null on an earlier rule's key
-    doesn't suppress a later rule's pair."""
-    cols = list(dict.fromkeys([id_col, *(c for r in rules for c in r)]))
-    slim = df.select(*cols)
-    a = slim.select(*[F.col(c).alias("a_" + c) for c in cols])
-    b = slim.select(*[F.col(c).alias("b_" + c) for c in cols])
+    Returns (id_a, id_b, rule, a_<c>..., b_<c>...) with id_a < id_b,
+    ``rule`` = the index of the FIRST rule that matched the pair, and
+    every column ``c`` of ``df`` carried from both joined rows (so a
+    scorer reads the pair's fields with no join back by id — a join
+    that would fan out on a repeated id). Pass a slim ``df``: Catalyst
+    prunes the carried columns a caller never selects. Null keys never
+    match (equi-join semantics), and the earlier-rule exclusion mirrors
+    that with ``coalesce(agree, false)`` so a null on an earlier rule's
+    key doesn't suppress a later rule's pair."""
+    a = df.select(*[F.col(c).alias("a_" + c) for c in df.columns])
+    b = df.select(*[F.col(c).alias("b_" + c) for c in df.columns])
 
     def agree(rule: list[str]) -> Column:
         cond = F.lit(True)
@@ -194,6 +196,8 @@ def multi_rule_pairs(
                 F.col("a_" + id_col).alias("id_a"),
                 F.col("b_" + id_col).alias("id_b"),
                 F.lit(k).cast("int").alias("rule"),
+                *a.columns,
+                *b.columns,
             )
         )
     out = parts[0]

@@ -20,6 +20,9 @@ narrow maps elsewhere in this package:
   template stutter that unigram statistics cannot see (identical
   token multiset, broken transitions) surface here.
 
+Tokens are ``functions.text.ws_tokens`` over ``lower(text)`` — the
+whitespace rule the DuckDB oracles mirror — in every operator here.
+
 Scale shape: one explode to slim ``(id, token)`` pairs (the text
 column never shuffles), one groupBy(token) aggregate with map-side
 partial combine for the corpus table — vocabulary-sized, i.e. tiny
@@ -43,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TOKEN_RE = r"\s+"
+from ..functions.text import ws_tokens
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -51,9 +54,7 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     documents emit nothing."""
     return docs.select(
         F.col(id_col),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_RE)).alias(
-            "token"
-        ),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("token"),
     ).where(F.col("token") != "")
 
 
@@ -148,10 +149,7 @@ def _bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     text splits to a single empty token and is excluded by the size
     gate, so no empty-token filter can shift adjacency)."""
     return (
-        docs.select(
-            F.col(id_col),
-            F.split(F.trim(F.lower(F.col(text_col))), TOKEN_RE).alias("_a"),
-        )
+        docs.select(F.col(id_col), ws_tokens(F.lower(F.col(text_col))).alias("_a"))
         .where(F.size("_a") >= 2)
         .select(
             id_col,
@@ -368,11 +366,9 @@ def weighted_jaccard_pairs(
         docs.join(members, id_col, "left_semi")
         .select(
             id_col,
-            F.size(
-                F.array_remove(
-                    F.split(F.trim(F.lower(F.col(text_col))), TOKEN_RE), ""
-                )
-            ).cast("long").alias("n_tok"),
+            F.size(F.array_remove(ws_tokens(F.lower(F.col(text_col))), ""))
+            .cast("long")
+            .alias("n_tok"),
         )
     )
     p = pairs.select(id_a, id_b)

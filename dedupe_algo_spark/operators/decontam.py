@@ -21,6 +21,11 @@ the gram (collisions only ever OVER-flag, which for decontamination
 is the safe direction); ``contamination_report`` keeps the gram
 strings unless asked for hashes.
 
+Tokens are ``functions.text.ws_tokens`` over ``lower(text)`` and grams
+come from the shared ``token_ngrams`` builder. Normalization is
+lowercasing only — the GPT-3 protocol's punctuation strip is a
+tokenizer concern; both engines reproduce ``lower`` identically.
+
 Reference parity: out of the reference's scope (it dedupes one disk
 against itself, src-tauri/src/scanner.rs); mandated by the
 training-data-pipeline axis of the task.
@@ -28,30 +33,10 @@ training-data-pipeline axis of the task.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_RE = r"\s+"
-
-
-def _toks(text: Column) -> Column:
-    """Lowercased whitespace token array. Normalization is lowercasing
-    only — the GPT-3 protocol's punctuation strip is a tokenizer
-    concern; both engines reproduce ``lower`` identically."""
-    return F.split(F.trim(F.lower(text)), TOKEN_RE)
-
-
-def _grams(toks: Column, n: int) -> Column:
-    """Array of space-joined token n-grams (empty when the document is
-    shorter than ``n`` tokens). ``toks`` MUST be a materialized column
-    attribute, never an inline split expression: the transform lambda
-    re-evaluates its free expressions per element (no CSE across the
-    higher-order-function boundary), which would make gram construction
-    O(tokens²) per document."""
-    starts = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+from ..functions.text import token_ngrams, ws_tokens
 
 
 def contamination_report(
@@ -77,18 +62,17 @@ def contamination_report(
     key = F.col("gram")
     if hashed:
         key = F.xxhash64("gram").alias("gram")
+    toks = ws_tokens(F.lower(F.col(text_col))).alias("_toks")
     eval_grams = (
-        eval_docs.select(_toks(F.col(text_col)).alias("_toks"))
-        .select(F.explode(_grams(F.col("_toks"), n)).alias("gram"))
+        eval_docs.select(toks)
+        .select(F.explode(token_ngrams(F.col("_toks"), n)).alias("gram"))
         .select(key)
         .distinct()
     )
-    sites = train.select(
-        F.col(id_col), _toks(F.col(text_col)).alias("_toks")
-    ).select(
+    sites = train.select(F.col(id_col), toks).select(
         F.col(id_col),
         F.size(F.col("_toks")).alias("_nt"),
-        F.posexplode(_grams(F.col("_toks"), n)).alias("_p", "gram"),
+        F.posexplode(token_ngrams(F.col("_toks"), n)).alias("_p", "gram"),
     ).select(
         id_col,
         (F.col("_nt") - (n - 1)).cast("long").alias("n_grams"),

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import ws_tokens
 from .scoring import token_jaccard_score
 
 
@@ -60,9 +61,7 @@ def keeper_audit(
     keepers = a.groupBy(cluster_col).agg(F.min(id_col).alias("_keeper"))
     # tokenize AT THE SCAN, before any join: the id-join then moves
     # token arrays, never the text column
-    toks = F.array_distinct(
-        F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
-    )
+    toks = F.array_distinct(F.array_remove(ws_tokens(F.col(text_col)), ""))
     page_t = pages.select(id_col, toks.alias("_pt"))
     member_t = a.join(page_t, id_col).select(
         id_col, cluster_col, F.col("_pt").alias("_mt")

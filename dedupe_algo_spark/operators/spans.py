@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_RE = r"\s+"
+from ..functions.text import token_ngrams, ws_tokens
 
 
 def duplicate_ngram_spans(
@@ -53,34 +53,17 @@ def duplicate_ngram_spans(
     spans (Lee et al.'s substring cut), or joins train-side grams
     against an eval corpus's grams for contamination reports.
 
-    Whole-stage-codegen only — tokenize/slice/concat are built-ins; no
+    JVM expressions only — tokens are ``functions.text.ws_tokens`` and
+    grams ``token_ngrams`` (the builder decontam and winnow share); no
     Python in the plan.
     """
-    # token array MATERIALIZED as a column before the per-element
-    # lambda touches it: an inlined split would be re-evaluated per
-    # transform element (no CSE across the higher-order-function
-    # boundary) — O(tokens²) per document
-    toked = docs.select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), TOKEN_RE).alias("_toks"),
-    )
-    toks = F.col("_toks")
-    # sequence(1, 0) would generate a DESCENDING [1, 0] — guard short docs
-    starts = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    gram = lambda i: F.concat_ws(" ", F.slice(toks, i, n))  # noqa: E731
+    # token array MATERIALIZED as a column before token_ngrams' lambda
+    # reads it (no CSE across the higher-order-function boundary)
+    toked = docs.select(F.col(id_col), ws_tokens(F.col(text_col)).alias("_toks"))
     sites = toked.select(
         F.col(id_col),
-        F.explode(
-            F.transform(
-                starts,
-                lambda i: F.struct(
-                    i.cast("int").alias("pos"), gram(i).alias("gram")
-                ),
-            )
-        ).alias("_g"),
-    ).select(id_col, F.col("_g.pos").alias("pos"), F.col("_g.gram").alias("gram"))
+        F.posexplode(token_ngrams(F.col("_toks"), n)).alias("_p", "gram"),
+    ).select(id_col, (F.col("_p") + 1).alias("pos"), "gram")
     freq = (
         sites.groupBy("gram")
         .agg(F.countDistinct(id_col).alias("n_docs"))
@@ -125,7 +108,7 @@ def remove_duplicate_spans(
         .groupBy(id_col)
         .agg(F.collect_set("cov").alias("_cov"))
     )
-    toks = F.split(F.trim(F.col(text_col)), TOKEN_RE)
+    toks = ws_tokens(F.col(text_col))
     cov = F.coalesce(F.col("_cov"), F.array().cast("array<int>"))
     kept = F.filter(toks, lambda t, i: ~F.array_contains(cov, i + 1))
     return (

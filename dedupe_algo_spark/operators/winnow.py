@@ -12,15 +12,16 @@ fingerprint-equality join finds all long overlaps at a fraction of the
 full inverted index — the right dial at 10^12 documents where indexing
 every gram is the cost driver.
 
-Spark shape: JVM expressions only — tokenize / gram-hash / window min
-are built-ins and higher-order functions (HOFs are expression-
-interpreted in the executor JVM; they fall outside whole-stage codegen
-but never touch Python), and the only shuffle is the final per-site
-distinct, carrying slim (id, pos, fp) rows. Each
-intermediate array is materialized as a projection column before any
-lambda consumes it: an inlined array is re-evaluated per higher-order
-element (no CSE across the HOF boundary — same O(n²) trap
-operators/spans.py documents).
+Spark shape: JVM expressions only — tokens (``functions.text
+.ws_tokens``), grams (``token_ngrams``, the builder spans.py and
+decontam.py share), gram-hash and window min are built-ins and
+higher-order functions (HOFs are expression-interpreted in the
+executor JVM; they fall outside whole-stage codegen but never touch
+Python), and the only shuffle is the final per-site distinct, carrying
+slim (id, pos, fp) rows. Each intermediate array is materialized as a
+projection column before any lambda consumes it: an inlined array is
+re-evaluated per higher-order element (no CSE across the HOF boundary
+— the O(n²) trap ``token_ngrams`` documents).
 
 Gram hash: the first 31-chain polynomial of functions/text (mod
 2^31-1), which DuckDB reproduces exactly — the ``winnow_fingerprints``
@@ -36,8 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import FP_B1, FP_P1
-from .spans import TOKEN_RE
+from ..functions.text import FP_B1, FP_P1, token_ngrams, ws_tokens
+from .candidates import candidate_pairs
+from .scoring import band_gate
 
 
 def _poly_hash(s: Column) -> Column:
@@ -71,20 +73,11 @@ def winnow_fingerprints(
     overlaps ≥ w+k-1 tokens), or `collect_set(fp)` per doc as a
     winnowed document sketch.
     """
-    toked = docs.select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), TOKEN_RE).alias("_toks"),
-    )
-    toks = F.col("_toks")
-    n_grams = F.size(toks) - (k - 1)
-    gram_starts = F.when(
-        n_grams >= 1, F.sequence(F.lit(1), n_grams)
-    ).otherwise(F.array().cast("array<int>"))
-    gram = lambda i: F.concat_ws(" ", F.slice(toks, i, k))  # noqa: E731
+    toked = docs.select(F.col(id_col), ws_tokens(F.col(text_col)).alias("_toks"))
     # gram-hash array materialized BEFORE the window pass (CSE boundary)
     grams = toked.select(
         F.col(id_col),
-        F.transform(gram_starts, lambda i: _poly_hash(gram(i))).alias("_g"),
+        F.transform(token_ngrams(F.col("_toks"), k), _poly_hash).alias("_g"),
     )
     g = F.col("_g")
     n_windows = F.size(g) - (w - 1)
@@ -125,28 +118,18 @@ def winnow_overlap_candidates(
     distinct winnowing fingerprints — every pair with a common substring
     of ≥ w+k-1 tokens is guaranteed present (at ``min_shared=1``).
 
-    Scale shape, same contract as the MinHash candidate generator
-    (operators/candidates.py): the self-join input is the slim
-    (fp, id) posting table, never text; fingerprints whose posting list
-    exceeds ``max_postings`` are dropped before pairing (a fingerprint
-    shared by everything — boilerplate — generates O(n²) junk pairs and
-    identifies nothing; the cap is the winnow twin of the hot-bucket
-    cap, auditable by comparing counts). One exchange keyed on fp, one
-    slim pair rollup.
+    Scale shape: the slim (fp, id) posting table — never text — goes
+    through the MinHash candidate generator,
+    ``candidates.candidate_pairs`` (fp as the bucket key,
+    ``max_postings`` as its hot-bucket cap, pair count), then
+    ``band_gate`` at ``min_shared``. A fingerprint shared by everything
+    (boilerplate) generates O(n²) junk pairs and identifies nothing, so
+    the cap drops it before pairing.
     """
-    fps = winnow_fingerprints(
+    posts = winnow_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col
-    ).select(F.col(id_col).alias("_id"), "fp").distinct()
-    from pyspark.sql import Window
-
-    postings = F.count(F.lit(1)).over(Window.partitionBy("fp"))
-    kept = fps.withColumn("_n", postings).where(F.col("_n") <= max_postings)
-    a = kept.select(F.col("_id").alias("id_a"), "fp")
-    b = kept.select(F.col("_id").alias("id_b"), "fp")
-    return (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+    ).select(F.col(id_col).alias("url"), F.col("fp").alias("bucket_key")).distinct()
+    pairs = candidate_pairs(posts, max_postings, with_counts=True)
+    return band_gate(pairs, min_matches=min_shared).select(
+        F.col("url_a").alias("id_a"), F.col("url_b").alias("id_b"), "n_shared"
     )

@@ -26,6 +26,7 @@ from .functions.text import (
     quality_score,
     token_count,
     word_tokens,
+    ws_tokens,
 )
 from .operators import views
 from .operators.ann import brute_force_topk, cosine_sim
@@ -44,6 +45,19 @@ SNAPSHOT_2K = _os.path.abspath(
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
+
+
+def _twin_corpus(spark: SparkSession, sf_dir: str, n_tokens: int):
+    """The planted-twin corpus: documents with doc_id < 100 ∪ a twin of
+    each at doc_id + 10000 whose text is its first ``n_tokens``
+    whitespace tokens. → (corpus (doc_id, text), pairs (id_a, id_b):
+    each base doc with its own twin)."""
+    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
+    twin_id = (F.col("doc_id") + 10000).alias("doc_id")
+    first = F.slice(ws_tokens(F.col("text")), 1, n_tokens)
+    twins = docs.select(twin_id, F.concat_ws(" ", first).alias("text"))
+    pairs = docs.select(F.col("doc_id").alias("id_a"), twin_id.alias("id_b"))
+    return docs.select("doc_id", "text").unionByName(twins), pairs
 
 
 # ---------------------------------------------------------------------------
@@ -433,7 +447,7 @@ def q_line_parse(spark, sf_dir):
             F.col("doc_id").cast("string"),
         ).alias("line"),
     )
-    toks = F.split(F.trim(F.col("line")), r"\s+")
+    toks = ws_tokens(F.col("line"))
     return lines.select(
         "doc_id",
         F.element_at(toks, 1).alias("name"),
@@ -1895,13 +1909,7 @@ def q_duplicate_spans(spark, sf_dir):
     every flagged (doc, pos, gram, n_docs) row is hash-checked."""
     from .operators.spans import duplicate_ngram_spans
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 7)).alias("text"),
-    )
-    alld = docs.select("doc_id", "text").unionByName(twins)
+    alld, _ = _twin_corpus(spark, sf_dir, 7)
     return duplicate_ngram_spans(alld, n=5, min_docs=2)
 
 
@@ -2308,13 +2316,7 @@ def q_span_removal(spark, sf_dir):
     rewritten documents are value-checked end-to-end."""
     from .operators.spans import remove_duplicate_spans
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 7)).alias("text"),
-    )
-    alld = docs.select("doc_id", "text").unionByName(twins)
+    alld, _ = _twin_corpus(spark, sf_dir, 7)
     return remove_duplicate_spans(alld, n=5, min_docs=2)
 
 
@@ -2740,13 +2742,7 @@ def q_winnow_overlap_pairs(spark, sf_dir):
     inactive and the engines compare like-for-like."""
     from .operators.winnow import winnow_overlap_candidates
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
-    )
-    alld = docs.select("doc_id", "text").unionByName(twins)
+    alld, _ = _twin_corpus(spark, sf_dir, 10)
     return winnow_overlap_candidates(alld, k=3, w=4, min_shared=1)
 
 
@@ -2888,7 +2884,7 @@ def q_decontam_report(spark, sf_dir):
     from .operators.decontam import contamination_report
 
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens(F.col("text"))
     ev = docs.where(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 50000).alias("doc_id"),
         F.concat_ws(" ", F.slice(toks, 3, 9)).alias("text"),
@@ -3600,6 +3596,7 @@ def q_fs_scores(spark, sf_dir):
     factor is one IEEE division of exactly-representable operands and
     the product is left-associated in both engines (linkage.py docstring
     has the full argument)."""
+    from .operators.blocking import multi_rule_pairs
     from .operators.linkage import fs_score_pairs, u_probabilities
 
     fields = ["lang", "source", "n_chars", "p16"]
@@ -3613,16 +3610,10 @@ def q_fs_scores(spark, sf_dir):
         F.expr("n_chars div 16").alias("blk"),
     )
     u = u_probabilities(d, fields)
-    a = d.select(*[F.col(c).alias("a_" + c) for c in d.columns])
-    b = d.select(*[F.col(c).alias("b_" + c) for c in d.columns])
-    pairs = a.join(
-        b,
-        (F.col("a_blk") == F.col("b_blk"))
-        & (F.col("a_doc_id") < F.col("b_doc_id")),
-    )
+    pairs = multi_rule_pairs(d, "doc_id", [["blk"]])
     return fs_score_pairs(pairs, fields, m, u, upper=100.0, lower=1.0).select(
-        F.col("a_doc_id").alias("doc_a"),
-        F.col("b_doc_id").alias("doc_b"),
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
         "pattern",
         "lr",
         "decision",
@@ -3832,32 +3823,15 @@ def q_blocking_quality(spark, sf_dir):
     length-bucket block join vs sorted-neighborhood (window 4 over
     (lang, n_chars)). Counts are exact longs; each metric is one IEEE
     division, so the 2-row result hashes identically in DuckDB."""
-    from .operators.blocking import sorted_neighborhood_pairs
+    from .operators.blocking import multi_rule_pairs, sorted_neighborhood_pairs
     from .operators.linkage import blocking_quality
 
-    d = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
+    d = _docs(spark, sf_dir).select(
+        "doc_id", "lang", "n_chars", F.expr("n_chars div 16").alias("blk")
+    )
     n = d.count()
-    a = d.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("lang").alias("la"),
-        F.col("n_chars").alias("na"),
-    )
-    b = d.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("lang").alias("lb"),
-        F.col("n_chars").alias("nb"),
-    )
-    truth = a.join(
-        b,
-        (F.col("la") == F.col("lb"))
-        & (F.col("na") == F.col("nb"))
-        & (F.col("id_a") < F.col("id_b")),
-    ).select("id_a", "id_b")
-    cand1 = a.join(
-        b,
-        (F.expr("na div 16") == F.expr("nb div 16"))
-        & (F.col("id_a") < F.col("id_b")),
-    ).select("id_a", "id_b")
+    truth = multi_rule_pairs(d, "doc_id", [["lang", "n_chars"]]).select("id_a", "id_b")
+    cand1 = multi_rule_pairs(d, "doc_id", [["blk"]]).select("id_a", "id_b")
     cand2 = sorted_neighborhood_pairs(
         d, ["lang", "n_chars"], id_col="doc_id", window=4
     ).select(F.col("url_a").alias("id_a"), F.col("url_b").alias("id_b"))
@@ -3964,6 +3938,7 @@ def q_fs_frequency_scores(spark, sf_dir):
     groupBy-count table keyed on the value), so agreeing on a rare
     prefix scores far above agreeing on a boilerplate one. lang keeps
     the field-global u."""
+    from .operators.blocking import multi_rule_pairs
     from .operators.linkage import (
         agreement_vector,
         fs_frequency_lr,
@@ -3981,21 +3956,15 @@ def q_fs_frequency_scores(spark, sf_dir):
     n = d.count()
     u = u_probabilities(d, fields)
     counts = d.groupBy("p16").agg(F.count(F.lit(1)).cast("long").alias("nv"))
-    a = d.select(*[F.col(c).alias("a_" + c) for c in d.columns])
-    b = d.select(*[F.col(c).alias("b_" + c) for c in d.columns])
     pairs = (
-        a.join(
-            b,
-            (F.col("a_blk") == F.col("b_blk"))
-            & (F.col("a_doc_id") < F.col("b_doc_id")),
-        )
+        multi_rule_pairs(d, "doc_id", [["blk"]])
         .join(F.broadcast(counts), F.col("a_p16") == counts["p16"])
         .select("*", *agreement_vector(fields))
     )
     lr = fs_frequency_lr(fields, m, u, n, freq_cols={"p16": "nv"})
     return pairs.select(
-        F.col("a_doc_id").alias("doc_a"),
-        F.col("b_doc_id").alias("doc_b"),
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
         "g_lang",
         "g_p16",
         "nv",
@@ -4063,17 +4032,7 @@ def q_tfidf_cosine(spark, sf_dir):
     up to 2^-64 token-hash collisions, the tier-2 identity argument."""
     from .operators.corpus_stats import tfidf_cosine_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(twins)
-    pairs = docs.select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 10000).alias("id_b"),
-    )
+    corpus, pairs = _twin_corpus(spark, sf_dir, 10)
     return tfidf_cosine_pairs(corpus, pairs)
 
 
@@ -4135,17 +4094,7 @@ def q_weighted_jaccard(spark, sf_dir):
     hash-identical with no rounding."""
     from .operators.corpus_stats import weighted_jaccard_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(twins)
-    pairs = docs.select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 10000).alias("id_b"),
-    )
+    corpus, pairs = _twin_corpus(spark, sf_dir, 10)
     return weighted_jaccard_pairs(corpus, pairs)
 
 
@@ -4205,24 +4154,15 @@ def q_wminhash_near_pairs(spark, sf_dir):
     from .operators.candidates import wminhash_candidate_pairs
     from .operators.corpus_stats import weighted_jaccard_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
-    )
+    corpus, _ = _twin_corpus(spark, sf_dir, 10)
     # second family: drop the last 3 tokens — wJ=(n-3)/n ≥0.8 for every
     # doc with ≥15 tokens, so the recall gate covers ~all long docs too
-    trunc = docs.select(
-        (F.col("doc_id") + 20000).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            F.slice(toks, 1, F.greatest(F.size(toks) - 3, F.lit(0))),
-        ).alias("text"),
+    toks = ws_tokens(F.col("text"))
+    keep = F.slice(toks, 1, F.greatest(F.size(toks) - 3, F.lit(0)))
+    trunc = corpus.where(F.col("doc_id") < 100).select(
+        (F.col("doc_id") + 20000).alias("doc_id"), F.concat_ws(" ", keep).alias("text")
     )
-    corpus = docs.select("doc_id", "text").unionByName(twins).unionByName(
-        trunc
-    )
+    corpus = corpus.unionByName(trunc)
     cand = wminhash_candidate_pairs(corpus).select("id_a", "id_b")
     return weighted_jaccard_pairs(corpus, cand).where(
         F.col("wjaccard") >= 0.8
@@ -4358,17 +4298,7 @@ def q_explain_pairs(spark, sf_dir):
     total order, engine-exact."""
     from .operators.corpus_stats import explain_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat_ws(" ", F.slice(toks, 1, 10)).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(twins)
-    pairs = docs.select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + 10000).alias("id_b"),
-    )
+    corpus, pairs = _twin_corpus(spark, sf_dir, 10)
     return explain_pairs(corpus, pairs, k=3)
 
 
@@ -4611,9 +4541,7 @@ def q_containment_pairs(spark, sf_dir):
     arrays."""
     from .operators.scoring import token_containment_score, token_jaccard_score
 
-    toks = F.array_distinct(
-        F.array_remove(F.split(F.trim(F.col("text")), r"\s+"), "")
-    )
+    toks = F.array_distinct(F.array_remove(ws_tokens(F.col("text")), ""))
     t = _docs(spark, sf_dir).select(
         "doc_id", toks.alias("toks"), F.slice(toks, 1, 40).alias("head")
     )

@@ -21,7 +21,9 @@ Run on any cluster as:
 Architecture notes (why this shape survives 10^12 records):
 - blocking never enumerates the cross product: each rule is its own
   self-equi-join and cross-rule dedup is a codegen first-match
-  predicate (operators/blocking.py:multi_rule_pairs).
+  predicate (operators/blocking.py:multi_rule_pairs). The blocked
+  pairs carry both records' fields, so scoring reads them with no
+  join back by id (which would multiply pairs on a repeated id).
 - EM sees only the γ-pattern COUNT table (≤2^k rows, one partial-agg
   groupBy) — the driver loop's cost is independent of pair count
   (operators/linkage.py:em_fit).
@@ -66,14 +68,8 @@ def link(
     cols = list(dict.fromkeys([id_col, *fields, *(c for r in rules for c in r)]))
     slim = records.select(*cols)
 
-    cand = multi_rule_pairs(slim, id_col, rules)
-    a = slim.select(*[F.col(c).alias("a_" + c) for c in cols])
-    b = slim.select(*[F.col(c).alias("b_" + c) for c in cols])
-    pairs = (
-        cand.join(a, cand["id_a"] == a["a_" + id_col])
-        .join(b, cand["id_b"] == b["b_" + id_col])
-        .drop("a_" + id_col, "b_" + id_col)
-    )
+    # the blocked pairs carry both records' fields (a_<f>/b_<f>)
+    pairs = multi_rule_pairs(slim, id_col, rules)
 
     u0 = u_probabilities(slim, fields)
     m_init = {f: m0 for f in fields}

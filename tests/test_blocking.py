@@ -85,16 +85,20 @@ def test_multi_rule_pairs_first_match_disjoint_union(spark):
         (5, "de", 10, "cc"),   # rule0 with 4; rule1 with 1,2,3
     ]
     df = spark.createDataFrame(rows, "id int, lang string, n int, src string")
-    got = {
-        (r["id_a"], r["id_b"]): r["rule"]
-        for r in multi_rule_pairs(df, "id", [["lang", "n"], ["src"]]).collect()
-    }
+    out = multi_rule_pairs(df, "id", [["lang", "n"], ["src"]]).collect()
+    got = {(r["id_a"], r["id_b"]): r["rule"] for r in out}
     want = {
         (1, 2): 0,
         (4, 5): 0,
         (1, 3): 1, (2, 3): 1, (1, 5): 1, (2, 5): 1, (3, 5): 1,
     }
     assert got == want
+    # every input column rides along as a_<c>/b_<c>, taken from the
+    # id_a and id_b rows respectively
+    by_id = {r[0]: r for r in rows}
+    for r in out:
+        for side in ("a", "b"):
+            assert tuple(r[f"{side}_{c}"] for c in df.columns) == by_id[r["id_" + side]]
 
 
 def test_multi_rule_pairs_null_earlier_key_does_not_suppress(spark):

@@ -53,3 +53,21 @@ def test_linkage_job_end_to_end(spark):
     # all three decision classes are reachable on this data
     kinds = {r["decision"] for r in decisions}
     assert "match" in kinds and "nonmatch" in kinds
+
+
+def test_repeated_id_scores_each_blocked_pair_once(spark):
+    """A repeated id (``--pages-mode`` ids are urls, which crawls
+    repeat) must not multiply pairs: link() scores exactly the rows
+    multi_rule_pairs blocks, so EM counts each blocked pair once."""
+    from dedupe_algo_spark.operators.blocking import multi_rule_pairs
+
+    recs = spark.createDataFrame(
+        [("u1", "en", "aa"), ("u1", "en", "ab"), ("u2", "en", "aa"), ("u3", "de", "zz")],
+        "id string, lang string, p string",
+    )
+    assert multi_rule_pairs(recs, "id", [["lang"]]).count() == 2
+    scored, _, params, release = link(spark, recs, "id", ["p"], [["lang"]])
+    got = sorted((r["id_a"], r["id_b"], r["g_p"]) for r in scored.collect())
+    release()
+    assert got == [("u1", "u2", 0), ("u1", "u2", 1)]
+    assert params["n_pairs"] == 2

@@ -52,6 +52,16 @@ SAMPLE = [
     "paragraph_dedup",
     "rep_signals",
     "rep_filter",
+    "span_removal",
+    "decontam_report",
+    "fs_scores",
+    "fs_frequency_scores",
+    "blocking_quality",
+    "blocking_rules_union",
+    "tfidf_cosine",
+    "weighted_jaccard",
+    "explain_pairs",
+    "wminhash_near_pairs",
 ]
 
 
